@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   *  - a wall-clock budget (SPARK_GRAFT_BENCH_BUDGET seconds, default 600,
   *    measured from process start) stops further reps early and prints
   *    the final stdout line BEFORE any external timeout can fire. The
-  *    budget is checked before each query run, so an overrun is bounded
-  *    by one query, not one pass.
+  *    budget is checked before each query run and every run's cap is
+  *    clamped to the budget left, so one hung query cannot overrun it.
   *  - a PER-QUERY watchdog (SPARK_GRAFT_BENCH_CAP seconds, default 20;
   *    adaptively 4× the query's previous recorded time when that is
   *    larger) cancels a run's job group past the cap: rounds 17/18 both
@@ -192,7 +192,7 @@ object Bench {
         // earlier-pass sample keeps it even if a later pass errors
         // (observed: an external SIGTERM mid-pass-2 shut the context
         // down under 22 in-flight queries and the -1s discarded their
-        // valid pass-1 timings); the "errors" list still names it.
+        // valid pass-1 timings); the "soft_errors" list still names it.
         (name, if (failed(name) && times(name).isEmpty) -1.0
                else if (times(name).nonEmpty) times(name).min
                else cappedAt.getOrElse(name, Double.NaN),
@@ -214,13 +214,16 @@ object Bench {
       val spread = measured.map { case (k, _, _, ts) =>
         "\"" + k + "\":" + ts.map(fmt).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
-      // errors name EVERY query that failed on ANY pass — including one
-      // that kept a good earlier-pass timing (its value stays the valid
-      // minimum, but the failure must not be hidden as a clean run)
-      val errors = ordered.collect { case (k, _) if failed(k) => "\"" + k + "\"" }
-        .mkString("[", ",", "]")
+      // timed / errors / skipped partition the query set exactly.
+      // "errors" holds the queries with no sample but a failure; a query
+      // that failed on some pass but kept a good timing is timed, and is
+      // named in "soft_errors" so the failure is not hidden as a clean run
+      def names(ks: Seq[String]): String = ks.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val errors = names(results.collect { case (k, _, true, _) => k })
+      val softErrors = names(results.collect { case (k, _, false, _) if failed(k) => k })
       val timedCount = measured.count { case (_, _, f, _) => !f }
-      val errorCount = ordered.count { case (k, _) => failed(k) }
+      val errorCount = results.count { case (_, _, f, _) => f }
+      val softErrorCount = results.count { case (k, _, f, _) => !f && failed(k) }
       val skippedCount = results.count { case (_, v, f, _) => !f && v.isNaN }
       val total = measured.collect { case (_, v, false, _) => v }.sum
       // "cold": fewer than 2 complete passes means the min-of-N could
@@ -242,9 +245,9 @@ object Bench {
         .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       val stdoutLine =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timed_count":$timedCount,"skipped_count":$skippedCount,"errors_count":$errorCount,"capped_count":$cappedCount,"passes":$passes,"cold":$cold,"partial":$partial,"sf":"$sfDir","queries_note":"slowest 20 of $timedCount timed; full per-query times in $outPath","queries":$slowest}"""
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timed_count":$timedCount,"skipped_count":$skippedCount,"errors_count":$errorCount,"soft_errors_count":$softErrorCount,"capped_count":$cappedCount,"passes":$passes,"cold":$cold,"partial":$partial,"sf":"$sfDir","queries_note":"slowest 20 of $timedCount timed; full per-query times in $outPath","queries":$slowest}"""
       (stdoutLine,
-       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timed_count":$timedCount,"skipped_count":$skippedCount,"errors_count":$errorCount,"capped_count":$cappedCount,"capped":$cappedNames,"queries":$qs,"spread":$spread,"errors":$errors,"skipped":$skipped,"passes":$passes,"cold":$cold,"partial":$partial,"sf":"$sfDir"}""")
+       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timed_count":$timedCount,"skipped_count":$skippedCount,"errors_count":$errorCount,"soft_errors_count":$softErrorCount,"capped_count":$cappedCount,"capped":$cappedNames,"queries":$qs,"spread":$spread,"errors":$errors,"soft_errors":$softErrors,"skipped":$skipped,"passes":$passes,"cold":$cold,"partial":$partial,"sf":"$sfDir"}""")
     }
     def writeFile(passes: Int, partial: Boolean): Unit = {
       val (_, fileLine) = render(passes, partial)
@@ -356,24 +359,25 @@ object Bench {
     }
     for (pass <- 1 to reps if !budgetHit) {
       for ((name, fn) <- ordered if !budgetHit) {
+        // Warm once per query at the smallest SF right before its first
+        // timed rep: Janino whole-stage-codegen compilation is a
+        // one-shot cost (up to 10 s on the widest generated aggregates,
+        // 173 s observed on l118's first cold run) that must not be
+        // billed to the timed run. The generated-class cache is keyed
+        // on source, so the warm run compiles what the timed run reuses.
+        // Warmup is BEST-EFFORT under budget pressure: past 65% of the
+        // budget an unwarmed (JIT-tainted, "cold"-flagged) timing beats
+        // a skipped query — coverage first.
+        if (!warmedUp.contains(name)) {
+          if (elapsedSec < budgetSec * 0.65)
+            runOnce(fn, warmDir, name, math.min(capBase, budgetSec - elapsedSec))
+          warmedUp.add(name)
+        }
         if (elapsedSec >= budgetSec) {
           System.err.println(f"[bench] budget ${budgetSec}%.0f s hit at $elapsedSec%.1f s " +
             s"(pass $pass, before $name) — stopping early with $passesDone complete pass(es)")
           budgetHit = true
         } else {
-          // Warm once per query at the smallest SF right before its first
-          // timed rep: Janino whole-stage-codegen compilation is a
-          // one-shot cost (up to 10 s on the widest generated aggregates,
-          // 173 s observed on l118's first cold run) that must not be
-          // billed to the timed run. The generated-class cache is keyed
-          // on source, so the warm run compiles what the timed run reuses.
-          // Warmup is BEST-EFFORT under budget pressure: past 65% of the
-          // budget an unwarmed (JIT-tainted, "cold"-flagged) timing beats
-          // a skipped query — coverage first.
-          if (!warmedUp.contains(name)) {
-            if (elapsedSec < budgetSec * 0.65) runOnce(fn, warmDir, name, capBase)
-            warmedUp.add(name)
-          }
           // adaptive cap: 4× the query's best time (this run's minimum
           // when one exists, else the previous round's file), floored at
           // capBase — a genuinely slow query is never falsely capped,
@@ -384,13 +388,22 @@ object Bench {
           // every pass (the cap never grew), so they finished the round
           // with lower bounds instead of timings and the artifact
           // recorded 20.0 as if it were a measurement.
+          // Clamped to the budget left, so one hung query cannot run the
+          // bench past its wall budget; a run cut by that clamp is a
+          // budget stop, not a watchdog cap, and records no sample.
           val best = if (times(name).nonEmpty) Some(times(name).min)
                      else prevTimes.get(name).filter(_ > 0)
-          val cap = math.max(capBase,
+          val watchdog = math.max(capBase,
             math.max(best.getOrElse(0.0) * 4.0,
               cappedAt.getOrElse(name, 0.0) * 3.0))
+          val cap = math.min(watchdog, budgetSec - elapsedSec)
           val (ok, capped, dt) = runOnce(fn, sfDir, name, cap)
           if (!ok) failed += name
+          else if (capped && cap < watchdog) {
+            System.err.println(f"[bench] budget ${budgetSec}%.0f s hit during $name " +
+              s"(pass $pass) — stopping early with $passesDone complete pass(es)")
+            budgetHit = true
+          }
           else if (capped) cappedAt(name) = math.max(cap, cappedAt.getOrElse(name, 0.0))
           else times(name) = times(name) :+ dt
           writeFile(pass - 1, partial = true)

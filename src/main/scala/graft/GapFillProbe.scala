@@ -56,7 +56,7 @@ object GapFillProbe {
       .parquet(src)
       .withWatermark("ts", "30 minutes")
     val filled = graft.streaming.GapFillStream(stream, "k", "ts", 3600L,
-      idleTimeoutBuckets = 4L, useTws = false) // FMGWS: provider-agnostic
+      idleTimeoutBuckets = 4L)
     val t0 = System.nanoTime()
     val q = filled.writeStream.format("noop")
       .option("checkpointLocation", s"$root/ckpt")
@@ -130,8 +130,7 @@ object TopKProbe {
         graft.streaming.TopKStream.approx(stream, "ts", "token", 3600L, 10,
           w = 1024, cap = 256, shards = shards)
       else
-        graft.streaming.TopKStream(stream, "ts", "token", 3600L, 10,
-          useTws = false, shards = shards)
+        graft.streaming.TopKStream(stream, "ts", "token", 3600L, 10, shards = shards)
     val t0 = System.nanoTime()
     val q = trending.writeStream.format("noop")
       .option("checkpointLocation", s"$root/ckpt")

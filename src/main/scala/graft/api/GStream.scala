@@ -106,16 +106,6 @@ object GStream {
       case _ => false
     }
 
-  /** Opt-in flag (`spark.graft.stateful.tws=true`) routing the facade's
-    * streaming stateful ops through Spark 4's `transformWithState`
-    * (typed state variables, event-time timers, RocksDB-backed state —
-    * the intended configuration at large state scale) instead of
-    * `flatMapGroupsWithState`. Requires
-    * `spark.sql.streaming.stateStore.providerClass` to be the RocksDB
-    * provider; semantics are identical either way (TwsFacadeSpec). */
-  private[api] def useTws(ds: Dataset[_]): Boolean =
-    ds.sparkSession.conf.get("spark.graft.stateful.tws", "false").toBoolean
-
   /** Fail-fast guard for the `processStateGlobal` compositions: they
     * chain two stateful streaming operators, which Spark's correctness
     * check rejects wholesale at `start()` with a generic message. Throw
@@ -197,10 +187,7 @@ final class KeyedGStream[K, T](
    */
   def processState[S, U](init: K => S)(f: (K, Event[T], S) => (S, Seq[Event[U]]))(
       implicit es: Encoder[S], eu: Encoder[Event[U]]): GStream[U] =
-    if (ds.isStreaming && GStream.useTws(ds))
-      new GStream(graft.streaming.Tws.keyedProcessState(ds, sel, init, f,
-        ordered = GStream.hasWatermark(ds)))
-    else if (ds.isStreaming && GStream.hasWatermark(ds))
+    if (ds.isStreaming && GStream.hasWatermark(ds))
       new GStream(graft.streaming.StreamingSessions.keyedProcessState(ds, sel, init, f))
     else processStatePerBatch(init)(f)
 
@@ -216,10 +203,7 @@ final class KeyedGStream[K, T](
       f: (K, Event[T], S) => (S, Seq[Event[U]]))(
       implicit es: Encoder[S], eu: Encoder[Event[U]]): GStream[U] = {
     val out =
-      if (ds.isStreaming && GStream.useTws(ds))
-        // keep the whole query on ONE state backend under the flag
-        graft.streaming.Tws.keyedProcessState(ds, sel, init, f, ordered = false)
-      else if (ds.isStreaming)
+      if (ds.isStreaming)
         ds.groupByKey(sel).flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
           (k: K, events: Iterator[Event[T]], gs: GroupState[S]) =>
             var s = if (gs.exists) gs.get else init(k)

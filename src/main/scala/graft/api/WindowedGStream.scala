@@ -6,6 +6,8 @@ import java.time.Duration
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions.col
 
+import graft.streaming.StreamingSessions
+
 /** Closed-session bounds: first and last event time. Exposed instead of
   * the reference's synthetic `end = last + 1ns`
   * (/root/reference/src/lib.rs:480) so results are µs-portable
@@ -88,10 +90,7 @@ final class WindowedGStream[K, T](
   def aggregate[U](acc: T => U)(combine: (U, U) => U)(
       implicit eu: Encoder[Event[U]]): GStream[U] = {
     if (ds.isStreaming)
-      return new GStream(
-        if (GStream.useTws(ds))
-          graft.streaming.Tws.sessionAggregate(ds, sel, gapMicros, acc, combine)
-        else graft.streaming.StreamingSessions.aggregate(ds, sel, gapMicros, acc, combine))
+      return new GStream(StreamingSessions.aggregate(ds, sel, gapMicros, acc, combine))
     val g = gapMicros
     val out = ds.groupByKey(sel)
       .flatMapSortedGroups(col("eventTime").asc, col("processingTime").asc) {
@@ -112,10 +111,7 @@ final class WindowedGStream[K, T](
   def process[U](f: (K, SessionBounds, Seq[Event[T]]) => IterableOnce[Event[U]])(
       implicit eu: Encoder[Event[U]]): GStream[U] = {
     if (ds.isStreaming)
-      return new GStream(
-        if (GStream.useTws(ds))
-          graft.streaming.Tws.sessionProcess(ds, sel, gapMicros, f)
-        else graft.streaming.StreamingSessions.process(ds, sel, gapMicros, f))
+      return new GStream(StreamingSessions.process(ds, sel, gapMicros, f))
     val g = gapMicros
     val out = ds.groupByKey(sel)
       .flatMapSortedGroups(col("eventTime").asc, col("processingTime").asc) {
@@ -135,10 +131,7 @@ final class WindowedGStream[K, T](
       f: (K, SessionBounds, Seq[Event[T]], S) => (S, Seq[Event[U]]))(
       implicit eu: Encoder[Event[U]]): GStream[U] = {
     if (ds.isStreaming)
-      return new GStream(
-        if (GStream.useTws(ds))
-          graft.streaming.Tws.sessionProcessState(ds, sel, gapMicros, init, f)
-        else graft.streaming.StreamingSessions.processState(ds, sel, gapMicros, init, f))
+      return new GStream(StreamingSessions.processState(ds, sel, gapMicros, init, f))
     val g = gapMicros
     val out = ds.groupByKey(sel)
       .flatMapSortedGroups(col("eventTime").asc, col("processingTime").asc) {

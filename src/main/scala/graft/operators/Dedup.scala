@@ -460,6 +460,10 @@ object Dedup {
     * `priority` ranks members (descending; ties broken by ascending
     * `idCol` for determinism); documents in no cluster pass through.
     *
+    * `idCol` must be unique across `docs`: losers are removed by an
+    * anti-join on the id, so a winner sharing its id with a loser is
+    * dropped along with it.
+    *
     * Plan: [[duplicateClusters]]' pair/label machinery unchanged, plus
     * one id-keyed join and one rank window PARTITIONED BY CLUSTER — the
     * window input is only the clustered rows (dup-cluster membership,
@@ -622,10 +626,9 @@ object Dedup {
    * front — the same fate Spark's watermarked aggregations give
    * null-event-time rows; route unstamped rows through
    * [[nearDupKeptStream]] or stamp them upstream if they must survive.
-   * State
-   * backend follows `spark.graft.stateful.tws` like the facade's
-   * stateful ops; both backends are spec-proven equivalent
-   * (StreamingDedupSpec). `seenBands` is still a static snapshot here —
+   * Both stages run on `flatMapGroupsWithState`, like the facade's
+   * stateful ops; StreamingDedupSpec pins stream-vs-batch parity.
+   * `seenBands` is still a static snapshot here —
    * when the corpus side must stay current automatically, use
    * [[nearDupAdmitAndAppend]], whose bands table doubles as permanent
    * (not horizon-bounded) claim state. Chaining stateful operators requires
@@ -661,8 +664,7 @@ object Dedup {
     val withFull = bandedAgainstSeen(timed, textCol, seenBands, k, bands, shingleN)
       .dropDuplicatesWithinWatermark("__sigfull")
       .withColumn("__ord", unix_micros(col(tsCol).cast("timestamp")))
-    val useTws = spark.conf.get("spark.graft.stateful.tws", "false").toBoolean
-    graft.streaming.NearDupState(withFull, docs.columns.toSeq, tsCol, bands, horizonMs, useTws)
+    graft.streaming.NearDupState(withFull, docs.columns.toSeq, tsCol, bands, horizonMs)
   }
 
   /**

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /**
@@ -28,12 +28,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * Scale shape: state per key = the running (nextBucket, cum, zeroRun)
  * counters plus pending counts for buckets the watermark has not
  * passed — bounded by the watermark delay ÷ bucketSec, NOT by history.
- * One event-time timer per key, re-armed at each bucket boundary;
- * timer bookkeeping follows the NearDupState lesson (store the
- * registered expiry, delete that exact value before re-arming).
- * Both state backends ship, sharing the pure [[absorb]]/[[release]]
- * core: `transformWithState` (timers) and `flatMapGroupsWithState`
- * (event-time timeout).
+ * One `flatMapGroupsWithState` event-time timeout per key, re-armed at
+ * each bucket boundary around the pure [[absorb]]/[[release]] core.
  */
 object GapFillStream {
 
@@ -83,49 +79,6 @@ object GapFillStream {
     StructField("key", StringType), StructField("bucket", LongType),
     StructField("n_events", LongType), StructField("cum_events", LongType)))
 
-  /** TWS backend: event-time timers fire at each bucket boundary. The
-    * stored state carries the REGISTERED timer (the NearDupState
-    * delete-by-stored-value rule). */
-  private final class GapTws(bucketMs: Long, idleMax: Long)
-      extends StatefulProcessor[String, Row, Row] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[(GapState, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState("gap", Encoders.kryo[(GapState, Long)],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    private def arm(g: GapState, tv: TimerValues, prevTimer: Option[Long]): Unit = {
-      val exp = math.max((g.next + 1) * bucketMs, tv.getCurrentWatermarkInMs() + 1)
-      if (!prevTimer.contains(exp)) {
-        prevTimer.foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(exp)
-      }
-      st.update((g, exp))
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Row],
-        timerValues: TimerValues): Iterator[Row] = {
-      val prev = if (st.exists()) Some(st.get()) else None
-      absorb(prev.map(_._1), rows.map(_.getLong(1)))
-        .foreach(g => arm(g, timerValues, prev.map(_._2)))
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Row] = {
-      if (!st.exists()) return Iterator.empty
-      val (g, registered) = st.get()
-      if (expiredTimerInfo.getExpiryTimeInMs() != registered) return Iterator.empty
-      val (rows, next) = release(g, timerValues.getCurrentWatermarkInMs(),
-        bucketMs, idleMax)
-      next match {
-        case Some(g2) => arm(g2, timerValues, None) // fired timer is spent
-        case None => st.clear()
-      }
-      rows.iterator.map { case (b, n, c) => Row(key, b, n, c) }
-    }
-  }
-
   /**
    * Wire the stream: `events` must declare a watermark on `tsCol`.
    * Output: (key, bucket, n_events, cum_events) append stream.
@@ -134,48 +87,42 @@ object GapFillStream {
    * until the query stops — opt-in).
    */
   def apply(events: DataFrame, keyCol: String, tsCol: String, bucketSec: Long,
-            idleTimeoutBuckets: Long = 8L, useTws: Boolean = true): DataFrame = {
+            idleTimeoutBuckets: Long = 8L): DataFrame = {
     import org.apache.spark.sql.functions._
     val bucketMs = bucketSec * 1000L
     val idle = idleTimeoutBuckets
     // tsCol stays a top-level attribute: the watermark tag must survive
-    // into the stateful stage's input schema (NearDupState:158)
+    // into the stateful stage's input schema (see NearDupState.apply)
     val rows = events.select(col(keyCol).cast("string").as("key"),
       expr(s"unix_timestamp($tsCol) div $bucketSec").as("bucket"), col(tsCol))
     val outEnc = Encoders.row(outSchema)
     implicit val strEnc = Encoders.STRING
-    if (useTws)
-      rows.groupByKey((r: Row) => r.getString(0))
-        .transformWithState(new GapTws(bucketMs, idle),
-          TimeMode.EventTime(), OutputMode.Append())(outEnc)
-    else {
-      val stEnc = Encoders.kryo[GapState]
-      rows.groupByKey((r: Row) => r.getString(0))
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-          (key: String, it: Iterator[Row], gs: GroupState[GapState]) =>
-            if (gs.hasTimedOut) {
-              val (out, next) = release(gs.get, gs.getCurrentWatermarkMs(),
-                bucketMs, idle)
-              next match {
-                case Some(g) =>
-                  gs.update(g)
-                  gs.setTimeoutTimestamp(math.max((g.next + 1) * bucketMs,
-                    gs.getCurrentWatermarkMs() + 1))
-                case None => gs.remove()
-              }
-              out.iterator.map { case (b, n, c) => Row(key, b, n, c) }
-            } else {
-              val prev = if (gs.exists) Some(gs.get) else None
-              absorb(prev, it.map(_.getLong(1))).foreach { g =>
+    val stEnc = Encoders.kryo[GapState]
+    rows.groupByKey((r: Row) => r.getString(0))
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (key: String, it: Iterator[Row], gs: GroupState[GapState]) =>
+          if (gs.hasTimedOut) {
+            val (out, next) = release(gs.get, gs.getCurrentWatermarkMs(),
+              bucketMs, idle)
+            next match {
+              case Some(g) =>
                 gs.update(g)
-                // re-arm on EVERY invocation (NearDupState:187 — Spark
-                // clears a group's timeout whenever its function fires)
                 gs.setTimeoutTimestamp(math.max((g.next + 1) * bucketMs,
                   gs.getCurrentWatermarkMs() + 1))
-              }
-              Iterator.empty[Row]
+              case None => gs.remove()
             }
-        }(stEnc, outEnc)
-    }
+            out.iterator.map { case (b, n, c) => Row(key, b, n, c) }
+          } else {
+            val prev = if (gs.exists) Some(gs.get) else None
+            absorb(prev, it.map(_.getLong(1))).foreach { g =>
+              gs.update(g)
+              // re-arm on EVERY invocation (Spark clears a group's
+              // timeout whenever its function fires)
+              gs.setTimeoutTimestamp(math.max((g.next + 1) * bucketMs,
+                gs.getCurrentWatermarkMs() + 1))
+            }
+            Iterator.empty[Row]
+          }
+      }(stEnc, outEnc)
   }
 }

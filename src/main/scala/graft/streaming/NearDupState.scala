@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /**
@@ -64,9 +64,8 @@ object NearDupState {
     StructField("winner", BooleanType, nullable = false),
     StructField("payload", payload, nullable = false)))
 
-  /** Claim decision shared by both backends: given the stored owner (or
-    * null) and this batch's rows sorted by (ord, sig), compute winner
-    * flags and the new owner. Ownership expires `horizonMs` after the
+  /** Claim decision: given the stored owner (or null) and this batch's
+    * rows sorted by (ord, sig), compute winner flags and the new owner. Ownership expires `horizonMs` after the
     * OWNER's event time (micros), so a doc arriving past that is a new
     * owner, not a loser — exact horizon semantics regardless of when
     * the eviction timer actually fires. */
@@ -83,55 +82,6 @@ object NearDupState {
     (out, own)
   }
 
-  /** First-arrival-wins per band key (transformWithState backend).
-    * Input rows: (bkey, sigfull, ord, payload); emits
-    * (sigfull, ord, winner, payload). Event-time timer evicts the
-    * ownership record once the watermark passes its horizon. State is
-    * (owner sig, owner ord µs, REGISTERED timer ms): the registered
-    * expiry may have been clamped to watermark+1 at registration time,
-    * so a later deleteTimer must delete the STORED value — recomputing
-    * it against the then-current watermark would miss the clamped timer
-    * and leak it (harmless semantically thanks to the expiry guard, but
-    * an orphan per re-claimed band adds up at ingest rates). */
-  private final class ClaimTws(payload: StructType, horizonMs: Long)
-      extends StatefulProcessor[String, Row, Row] {
-    @transient private var owner: ValueState[(String, Long, Long)] = _
-    private val outSchema = claimOutSchema(payload)
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      owner = getHandle.getValueState[(String, Long, Long)]("owner",
-        Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    private def expiryMs(ordMicros: Long, tv: TimerValues): Long =
-      math.max(ordMicros / 1000L + horizonMs, tv.getCurrentWatermarkInMs() + 1)
-
-    override def handleInputRows(key: String, rows: Iterator[Row],
-        timerValues: TimerValues): Iterator[Row] = {
-      val stored = if (owner.exists()) owner.get() else null
-      val before = if (stored == null) null else (stored._1, stored._2)
-      val (out, after) = claim(rows.toSeq, before, horizonMs, outSchema)
-      if (!(after eq before)) {
-        if (stored != null) getHandle.deleteTimer(stored._3)
-        val exp = expiryMs(after._2, timerValues)
-        owner.update((after._1, after._2, exp))
-        getHandle.registerTimer(exp)
-      }
-      out.iterator
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Row] = {
-      // only the timer registered for the CURRENT owner may evict — an
-      // exact match on the stored registration, so a stale timer from a
-      // superseded owner (already deleted above, but belt-and-braces)
-      // can never clear a fresher claim
-      if (owner.exists() && expiredTimerInfo.getExpiryTimeInMs() == owner.get()._3)
-        owner.clear()
-      Iterator.empty
-    }
-  }
-
   /**
    * Wire the stages onto a pre-banded, already exact-deduped frame.
    * `banded` must carry `__sigfull` plus `__band0..__band{bands-1}`
@@ -140,7 +90,7 @@ object NearDupState {
    * watermark (the claim stage's timers are event-time driven).
    */
   def apply(banded: DataFrame, payloadCols: Seq[String], tsCol: String,
-            bands: Int, horizonMs: Long, useTws: Boolean): DataFrame = {
+            bands: Int, horizonMs: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     val payloadSchema = StructType(
       banded.schema.fields.filter(f => payloadCols.contains(f.name)))
@@ -168,44 +118,32 @@ object NearDupState {
     val outEnc = Encoders.row(payloadSchema)
     implicit val strEnc = Encoders.STRING
     val ownEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    val claimed =
-      if (useTws)
-        rows.groupByKey((r: Row) => r.getString(0))
-          .transformWithState(new ClaimTws(payloadSchema, horizon),
-            TimeMode.EventTime(), OutputMode.Append())(claimEnc)
-      else
-        rows.groupByKey((r: Row) => r.getString(0))
-          .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-            (key: String, it: Iterator[Row], gs: GroupState[(String, Long)]) =>
-              if (gs.hasTimedOut) { gs.remove(); Iterator.empty }
-              else {
-                val before = if (gs.exists) gs.get else null
-                val (out, after) = claim(it.toSeq, before, horizon, claimSchema)
-                if (!(after eq before)) gs.update(after)
-                // re-arm on EVERY invocation, not just on a claim: Spark
-                // clears a group's timeout whenever the function fires for
-                // it, so a loser row arriving for this band would silently
-                // cancel the owner's eviction and leak the state
-                if (gs.exists)
-                  gs.setTimeoutTimestamp(math.max(gs.get._2 / 1000L + horizon,
-                    gs.getCurrentWatermarkMs() + 1))
-                out.iterator
-              }
-          }(ownEnc, claimEnc)
+    // CLAIM: first-arrival-wins per band key; the event-time timeout
+    // evicts the ownership record once the watermark passes its horizon
+    val claimed = rows.groupByKey((r: Row) => r.getString(0))
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (key: String, it: Iterator[Row], gs: GroupState[(String, Long)]) =>
+          if (gs.hasTimedOut) { gs.remove(); Iterator.empty }
+          else {
+            val before = if (gs.exists) gs.get else null
+            val (out, after) = claim(it.toSeq, before, horizon, claimSchema)
+            if (!(after eq before)) gs.update(after)
+            // re-arm on EVERY invocation, not just on a claim: Spark
+            // clears a group's timeout whenever the function fires for
+            // it, so a loser row arriving for this band would silently
+            // cancel the owner's eviction and leak the state
+            if (gs.exists)
+              gs.setTimeoutTimestamp(math.max(gs.get._2 / 1000L + horizon,
+                gs.getCurrentWatermarkMs() + 1))
+            out.iterator
+          }
+      }(ownEnc, claimEnc)
     // RESOLVE holds no state — the stateful-operator form is only the
     // legal way to group a streaming doc's band rows back together
-    if (useTws)
-      claimed.groupByKey((r: Row) => r.getString(0))
-        .transformWithState(new StatefulProcessor[String, Row, Row] {
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = ()
-          override def handleInputRows(key: String, rows: Iterator[Row],
-              timerValues: TimerValues): Iterator[Row] = resolve(rows)
-        }, TimeMode.None(), OutputMode.Append())(outEnc)
-    else
-      claimed.groupByKey((r: Row) => r.getString(0))
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-          (key: String, it: Iterator[Row], gs: GroupState[Boolean]) => resolve(it)
-        }(Encoders.scalaBoolean, outEnc)
+    claimed.groupByKey((r: Row) => r.getString(0))
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (key: String, it: Iterator[Row], gs: GroupState[Boolean]) => resolve(it)
+      }(Encoders.scalaBoolean, outEnc)
   }
 
   /** Emit the payload once iff every band row won its claim. */

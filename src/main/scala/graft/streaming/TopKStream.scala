@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /**
@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * value-count map per OPEN window; state is bounded by (values per
  * window) × (open windows per key horizon), evicted at close, NOT by
  * stream length. The [[GapFillStream]] conventions apply: pure
- * [[merge]]/[[closeWindow]] core shared by both backends, stored-timer
- * bookkeeping, event-time timers.
+ * [[merge]]/[[closeWindow]] core, `flatMapGroupsWithState` with an
+ * event-time timeout re-armed on every invocation.
  *
  * THROUGHPUT: state is keyed by `(window_start, shard)` where
  * `shard = pmod(hash(token), shards)` — with hourly windows there are
@@ -41,7 +41,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * Late rows: group-with-state operators do NOT pre-filter rows behind
  * the watermark, so a straggler for an already-closed-and-emitted
  * window would silently recreate state and later emit a second,
- * partial top-k for the same window. Both backends guard: a row whose
+ * partial top-k for the same window. The operator guards: a row whose
  * window has no live state AND whose window end is at or below the
  * current watermark is dropped (the standard beyond-lateness-drop
  * semantics; mirrors GapFillStream's retired-key contract). A late row
@@ -156,46 +156,6 @@ object TopKStream {
       .withColumn("rank", col("rank").cast("long"))
   }
 
-  /** TWS backend: one (map, registeredTimer) value per (window, shard). */
-  private final class TopKTws(windowMs: Long, k: Int)
-      extends StatefulProcessor[(Long, Int), Row, Row] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[(Map[String, Long], Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState("topk", Encoders.kryo[(Map[String, Long], Long)],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: (Long, Int), rows: Iterator[Row],
-        timerValues: TimerValues): Iterator[Row] = {
-      // late-row guard: no live state + window already closed by the
-      // watermark → a straggler for an emitted window; drop, don't revive
-      if (!st.exists() &&
-          key._1 / 1000L + windowMs <= timerValues.getCurrentWatermarkInMs())
-        return Iterator.empty
-      val (prev, timer) =
-        if (st.exists()) st.get()
-        else (Map.empty[String, Long], -1L)
-      val merged = merge(prev, rows.map(_.getString(2)))
-      if (timer < 0) {
-        // close at window end, clamped past the current watermark
-        val exp = math.max(key._1 / 1000L + windowMs,
-          timerValues.getCurrentWatermarkInMs() + 1)
-        getHandle.registerTimer(exp)
-        st.update((merged, exp))
-      } else st.update((merged, timer))
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: (Long, Int), timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Row] = {
-      if (!st.exists() || expiredTimerInfo.getExpiryTimeInMs() != st.get()._2)
-        return Iterator.empty
-      val counts = st.get()._1
-      st.clear()
-      closeWindow(counts, k).iterator.map { case (t, c, r) => Row(key._1, t, c, r) }
-    }
-  }
-
   /** (window_start µs, shard, token, event-time) input projection. */
   private def project(events: DataFrame, tsCol: String, tokenCol: String,
                       windowSec: Long, shards: Int): DataFrame = {
@@ -217,10 +177,7 @@ object TopKStream {
    * of token cardinality — the extreme-cardinality regime where the
    * exact map outgrows the store. Sharding additionally SHARPENS the
    * sketch: each shard sees only its tokens, so the εN error term
-   * scales with the shard's mass, not the window's. FMGWS
-   * event-time-timeout backend (the exact path proves backend parity
-   * for this operator shape; the sketch state is backend-agnostic kryo
-   * bytes either way).
+   * scales with the shard's mass, not the window's.
    */
   def approx(events: DataFrame, tsCol: String, tokenCol: String,
              windowSec: Long, k: Int, w: Int = 1024, cap: Int = 256,
@@ -260,39 +217,33 @@ object TopKStream {
    * [[resolveCandidates]] for the final k.
    */
   def apply(events: DataFrame, tsCol: String, tokenCol: String,
-            windowSec: Long, k: Int, useTws: Boolean = true,
-            shards: Int = 1): DataFrame = {
+            windowSec: Long, k: Int, shards: Int = 1): DataFrame = {
     val windowMs = windowSec * 1000L
     val kk = k
     val rows = project(events, tsCol, tokenCol, windowSec, shards)
     val outEnc = Encoders.row(outSchema)
     implicit val ke = keyEnc
-    if (useTws)
-      rows.groupByKey(keyOf _)
-        .transformWithState(new TopKTws(windowMs, kk),
-          TimeMode.EventTime(), OutputMode.Append())(outEnc)
-    else {
-      val stEnc = Encoders.kryo[Map[String, Long]]
-      rows.groupByKey(keyOf _)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-          (key: (Long, Int), it: Iterator[Row], gs: GroupState[Map[String, Long]]) =>
-            if (gs.hasTimedOut) {
-              val counts = gs.get
-              gs.remove()
-              closeWindow(counts, kk).iterator.map { case (t, c, r) => Row(key._1, t, c, r) }
-            } else if (!gs.exists &&
-                key._1 / 1000L + windowMs <= gs.getCurrentWatermarkMs()) {
-              Iterator.empty[Row] // late-row guard: closed window, no revival
-            } else {
-              val merged = merge(if (gs.exists) gs.get else Map.empty,
-                it.map(_.getString(2)))
-              gs.update(merged)
-              // re-arm on EVERY invocation (NearDupState:187)
-              gs.setTimeoutTimestamp(math.max(key._1 / 1000L + windowMs,
-                gs.getCurrentWatermarkMs() + 1))
-              Iterator.empty[Row]
-            }
-        }(stEnc, outEnc)
-    }
+    val stEnc = Encoders.kryo[Map[String, Long]]
+    rows.groupByKey(keyOf _)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (key: (Long, Int), it: Iterator[Row], gs: GroupState[Map[String, Long]]) =>
+          if (gs.hasTimedOut) {
+            val counts = gs.get
+            gs.remove()
+            closeWindow(counts, kk).iterator.map { case (t, c, r) => Row(key._1, t, c, r) }
+          } else if (!gs.exists &&
+              key._1 / 1000L + windowMs <= gs.getCurrentWatermarkMs()) {
+            Iterator.empty[Row] // late-row guard: closed window, no revival
+          } else {
+            val merged = merge(if (gs.exists) gs.get else Map.empty,
+              it.map(_.getString(2)))
+            gs.update(merged)
+            // re-arm on EVERY invocation (Spark clears a group's timeout
+            // whenever its function fires)
+            gs.setTimeoutTimestamp(math.max(key._1 / 1000L + windowMs,
+              gs.getCurrentWatermarkMs() + 1))
+            Iterator.empty[Row]
+          }
+      }(stEnc, outEnc)
   }
 }

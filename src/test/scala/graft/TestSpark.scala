@@ -14,4 +14,28 @@ object TestSpark {
     .config("spark.sql.warehouse.dir",
       new java.io.File("target/test-warehouse").getAbsolutePath)
     .getOrCreate()
+
+  /** Run `body` with the given runtime conf set on the shared session,
+    * restoring each key's previous value (or unsetting it) afterwards. */
+  def withConf[A](settings: (String, String)*)(body: => A): A = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Run `body` with streaming state on the RocksDB state-store provider
+    * (the provider SCALE.md recommends for large keyspaces). */
+  def withRocksDb[A](body: => A): A =
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
+  /** Run `body` with the stateful-chain correctness check disabled, as the
+    * multi-stateful compositions (`processStateGlobal`,
+    * `nearDupKeptStreamStateful`) require. */
+  def withChainCheckOff[A](body: => A): A =
+    withConf("spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false")(body)
 }

@@ -22,26 +22,13 @@ class GapFillStreamSpec extends AnyFunSuite {
   private def t(hour: Long, min: Long = 0): Timestamp =
     new Timestamp((hour * 3600 + min * 60) * 1000L)
 
-  /** TWS requires the RocksDB provider (multiple column families);
-    * scoped set/restore, the TwsSpec convention. */
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  private def run(useTws: Boolean, idle: Long): Unit = {
+  test("FMGWS backend: batch-identical prefix + trailing zeros + retirement") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Timestamp)]
     val out = GapFillStream(
       input.toDF().toDF("k", "ts").withWatermark("ts", "0 seconds"),
-      "k", "ts", 3600L, idleTimeoutBuckets = idle, useTws = useTws)
-    val name = s"gapfill_${useTws}_$idle"
+      "k", "ts", 3600L, idleTimeoutBuckets = 2L)
+    val name = "gapfill_idle2"
     val query = out.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {
@@ -62,66 +49,60 @@ class GapFillStreamSpec extends AnyFunSuite {
         .as[(String, Long, Long, Long)].collect().toSet
       // batch prefix (buckets 10..13) is contained row-identically
       assert(batch.subsetOf(got), s"missing ${batch.diff(got)}")
-      // the zero rows past a's last event — the streaming-only surface
-      if (idle > 2) {
-        assert(got.contains(("a", 14L, 0L, 3L)), s"got $got")
-        assert(got.contains(("a", 15L, 0L, 3L)), s"got $got")
-      } else {
-        // idle=2: buckets 11, 12 are zeros but a 13-event resets the
-        // run; 14, 15 retire the key exactly at the cap
-        assert(got.contains(("a", 14L, 0L, 3L)) && got.contains(("a", 15L, 0L, 3L)))
-        // move the watermark far ahead: a retired key must emit nothing
-        input.addData(("b", t(30, 0)))
-        query.processAllAvailable()
-        val after = spark.table(name).as[(String, Long, Long, Long)].collect()
-          .filter(r => r._1 == "a" && r._2 > 15L)
-        assert(after.isEmpty, s"retired key emitted $after")
-      }
+      // the zero rows past a's last event — the streaming-only surface.
+      // Buckets 11, 12 are zeros but a 13-event resets the run; 14, 15
+      // retire the key exactly at the idle cap of 2
+      assert(got.contains(("a", 14L, 0L, 3L)) && got.contains(("a", 15L, 0L, 3L)))
+      // move the watermark far ahead: a retired key must emit nothing
+      input.addData(("b", t(30, 0)))
+      query.processAllAvailable()
+      val after = spark.table(name).as[(String, Long, Long, Long)].collect()
+        .filter(r => r._1 == "a" && r._2 > 15L)
+      assert(after.isEmpty, s"retired key emitted $after")
     } finally query.stop()
   }
 
-  test("TWS backend: batch-identical prefix + trailing zeros + retirement") {
-    withRocksDb { run(useTws = true, idle = 2L) }
-  }
-
-  test("FMGWS backend: batch-identical prefix + trailing zeros + retirement") {
-    run(useTws = false, idle = 2L)
-  }
-
-  test("gap-fill state survives a restart from the checkpoint (TWS + RocksDB)") {
-    withRocksDb {
-      val root = java.nio.file.Files.createTempDirectory("graft_gapfill_ckpt")
-        .toFile.getAbsolutePath
-      val src = s"$root/src"; val ckpt = s"$root/ckpt"; val out = s"$root/out"
-      def writeBatch(rows: Seq[(String, Timestamp)]): Unit =
-        rows.toDF("k", "ts").write.mode("append").parquet(src)
-      def runOnce(): Unit = {
-        val stream = spark.readStream
-          .schema("k STRING, ts TIMESTAMP").parquet(src)
-          .withWatermark("ts", "0 seconds")
-        val q = GapFillStream(stream, "k", "ts", 3600L,
-            idleTimeoutBuckets = 0L, useTws = true)
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      writeBatch(Seq(("a", t(10, 5)), ("a", t(12, 30)))) // wm ends at 12:30
-      runOnce()
-      // run 2, same checkpoint: the cumulative must CONTINUE (bucket 12's
-      // count includes run 1's 12:30 event — its state survived), and the
-      // gap bucket 11 emits zero exactly once across the two runs
-      writeBatch(Seq(("a", t(12, 40)), ("a", t(15, 0))))
-      runOnce()
-      val got = spark.read.parquet(out)
-        .as[(String, Long, Long, Long)].collect().toSet
-      assert(got.contains(("a", 10L, 1L, 1L)), s"got $got")
-      assert(got.contains(("a", 11L, 0L, 1L)), s"got $got")
-      assert(got.contains(("a", 12L, 2L, 3L)), s"got $got") // spans both runs
-      assert(got.contains(("a", 13L, 0L, 3L)) && got.contains(("a", 14L, 0L, 3L)))
-      assert(got.count(_._2 == 11L) == 1, s"bucket 11 emitted twice: $got")
+  /** Two AvailableNow runs sharing one checkpoint: the second must
+    * continue the first run's per-key series, not restart it. */
+  private def restartScenario(tag: String): Unit = {
+    val root = java.nio.file.Files.createTempDirectory(s"graft_gapfill_ckpt_$tag")
+      .toFile.getAbsolutePath
+    val src = s"$root/src"; val ckpt = s"$root/ckpt"; val out = s"$root/out"
+    def writeBatch(rows: Seq[(String, Timestamp)]): Unit =
+      rows.toDF("k", "ts").write.mode("append").parquet(src)
+    def runOnce(): Unit = {
+      val stream = spark.readStream
+        .schema("k STRING, ts TIMESTAMP").parquet(src)
+        .withWatermark("ts", "0 seconds")
+      val q = GapFillStream(stream, "k", "ts", 3600L, idleTimeoutBuckets = 0L)
+        .writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
     }
+    writeBatch(Seq(("a", t(10, 5)), ("a", t(12, 30)))) // wm ends at 12:30
+    runOnce()
+    // run 2, same checkpoint: the cumulative must CONTINUE (bucket 12's
+    // count includes run 1's 12:30 event — its state survived), and the
+    // gap bucket 11 emits zero exactly once across the two runs
+    writeBatch(Seq(("a", t(12, 40)), ("a", t(15, 0))))
+    runOnce()
+    val got = spark.read.parquet(out)
+      .as[(String, Long, Long, Long)].collect().toSet
+    assert(got.contains(("a", 10L, 1L, 1L)), s"got $got")
+    assert(got.contains(("a", 11L, 0L, 1L)), s"got $got")
+    assert(got.contains(("a", 12L, 2L, 3L)), s"got $got") // spans both runs
+    assert(got.contains(("a", 13L, 0L, 3L)) && got.contains(("a", 14L, 0L, 3L)))
+    assert(got.count(_._2 == 11L) == 1, s"bucket 11 emitted twice: $got")
+  }
+
+  test("gap-fill state survives a restart from the checkpoint (flatMapGroupsWithState)") {
+    restartScenario("default")
+  }
+
+  test("gap-fill state survives a restart from the checkpoint (flatMapGroupsWithState + RocksDB)") {
+    TestSpark.withRocksDb { restartScenario("rocksdb") }
   }
 
   test("a retired key revived by new data starts a fresh series") {

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.streaming.Trigger
 import graft.TestSpark
+import graft.TestSpark.{withChainCheckOff, withRocksDb}
 import graft.api.{Env, Event}
 
 /**
@@ -13,8 +14,7 @@ import graft.api.{Env, Event}
  * with the same checkpoint must resume its keyed state, not restart it —
  * the operability property a long-lived 100 TB pipeline leans on (an
  * executor loss or planned restart must never reset running state).
- * Proven for both state backends: flatMapGroupsWithState and
- * transformWithState + RocksDB (`spark.graft.stateful.tws`).
+ * Proven on the default state-store provider and on RocksDB.
  */
 class StateRecoverySpec extends AnyFunSuite {
 
@@ -102,10 +102,7 @@ class StateRecoverySpec extends AnyFunSuite {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    val prevCheck = spark.conf.getOption(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    try {
+    withChainCheckOff {
       writeBatch(Seq((Timestamp.valueOf("2024-01-01 10:00:00"), 1L, x),
         (Timestamp.valueOf("2024-01-01 10:02:00"), 10L, fresh)))
       runOnce()
@@ -117,13 +114,6 @@ class StateRecoverySpec extends AnyFunSuite {
       runOnce()
       val all = spark.read.parquet(out).select("doc_id").as[Long].collect().toSet
       assert(all == Set(1L, 10L, 12L), s"after restart kept: $all")
-    } finally {
-      prevCheck match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
-      }
     }
   }
 
@@ -135,33 +125,11 @@ class StateRecoverySpec extends AnyFunSuite {
     nearDupRecoveryScenario("fmgws")
   }
 
-  test("near-dup claim state survives a restart from the checkpoint (transformWithState + RocksDB)") {
-    val prevProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.graft.stateful.tws", "true")
-    try nearDupRecoveryScenario("tws")
-    finally {
-      spark.conf.unset("spark.graft.stateful.tws")
-      prevProv match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+  test("near-dup claim state survives a restart from the checkpoint (flatMapGroupsWithState + RocksDB)") {
+    withRocksDb { nearDupRecoveryScenario("rocksdb") }
   }
 
-  test("keyed state survives a restart from the checkpoint (transformWithState + RocksDB)") {
-    val prevProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.graft.stateful.tws", "true")
-    try recoveryScenario("tws")
-    finally {
-      spark.conf.unset("spark.graft.stateful.tws")
-      prevProv match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+  test("keyed state survives a restart from the checkpoint (flatMapGroupsWithState + RocksDB)") {
+    withRocksDb { recoveryScenario("rocksdb") }
   }
 }

@@ -98,12 +98,12 @@ class StreamingDedupSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  /** In-horizon scenario shared by both state backends: two near-dups of
-    * each other in the SAME batch (only the event-time-first survives), a
-    * third near-dup in a LATER batch (band state persists), an exact
-    * repeat (subsumed dedup), genuinely new docs (kept), and a near-dup
-    * arriving past the event-time horizon (kept — ownership expired). */
-  private def inHorizonScenario(useTws: Boolean): Unit = {
+  /** In-horizon scenario: two near-dups of each other in the SAME batch
+    * (only the event-time-first survives), a third near-dup in a LATER
+    * batch (band state persists), an exact repeat (subsumed dedup),
+    * genuinely new docs (kept), and a near-dup arriving past the
+    * event-time horizon (kept — ownership expired). */
+  test("nearDupKeptStreamStateful resolves same-batch near-dups first-arrival-wins (fmgws)") {
     implicit val sqlCtx = spark.sqlContext
     val x = "winnowing fingerprints select the minimum hash inside each sliding window position"
     val x2 = "winnowing fingerprints select the minimum hash inside each sliding window frame"
@@ -128,19 +128,10 @@ class StreamingDedupSpec extends AnyFunSuite {
 
     val seen = Dedup.lshBands(Dedup.minhashSignatures(corpus, "text", "doc_id"), "doc_id")
       .select("band_idx", "band_hash").localCheckpoint()
-    val prevCheck = spark.conf.getOption(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    if (useTws) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set("spark.graft.stateful.tws", "true")
-    }
     val input = MemoryStream[(Timestamp, Long, String)]
-    val qn = if (useTws) "s_inh_tws" else "s_inh_fmgws"
+    val qn = "s_inh"
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      // inside the try: a start()-time failure must still restore the conf
+    try TestSpark.withChainCheckOff {
       val stream = input.toDS().toDF("ts", "doc_id", "text").withWatermark("ts", "1 hour")
       val out = Dedup.nearDupKeptStreamStateful(stream, "text", "ts", seen)
       q = out.writeStream.format("memory").queryName(qn).outputMode("append").start()
@@ -166,24 +157,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       q.processAllAvailable()
       val kept = spark.table(qn).select("doc_id").as[Long].collect().toSet
       assert(kept == Set(1L, 4L, 10L, 12L, 20L), s"kept $kept")
-    } finally {
-      if (q != null) q.stop()
-      if (useTws) spark.conf.unset("spark.graft.stateful.tws")
-      prevCheck match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
-      }
-    }
-  }
-
-  test("nearDupKeptStreamStateful resolves same-batch near-dups first-arrival-wins (fmgws)") {
-    inHorizonScenario(useTws = false)
-  }
-
-  test("nearDupKeptStreamStateful resolves same-batch near-dups first-arrival-wins (tws)") {
-    inHorizonScenario(useTws = true)
+    } finally if (q != null) q.stop()
   }
 
   test("nearDupKeptStreamStateful fails fast when the chain check is still enabled") {
@@ -250,7 +224,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     * exactly the documents the oracle-certified batch operator keeps —
     * the cross-check that ties the streaming claim/resolve semantics to
     * l46's engine-independent ground truth. */
-  private def streamVsBatchParity(useTws: Boolean): Unit = {
+  test("single-batch stateful stream keeps exactly what bandClaimKept keeps (fmgws)") {
     implicit val sqlCtx = spark.sqlContext
     val base = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text").limit(80)
@@ -266,17 +240,9 @@ class StreamingDedupSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
 
     val emptyBands = Seq.empty[(Int, String)].toDF("band_idx", "band_hash")
-    val prevCheck = spark.conf.getOption(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    if (useTws) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set("spark.graft.stateful.tws", "true")
-    }
-    val qn = if (useTws) "s_parity_tws" else "s_parity_fmgws"
+    val qn = "s_parity"
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
+    try TestSpark.withChainCheckOff {
       val input = MemoryStream[(Timestamp, Long, String)]
       val stream = input.toDS().toDF("ts", "doc_id", "text").withWatermark("ts", "1 hour")
       val out = Dedup.nearDupKeptStreamStateful(stream, "text", "ts", emptyBands)
@@ -290,24 +256,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       assert(streamKept == batchKept,
         s"stream-only ${streamKept -- batchKept}, batch-only ${batchKept -- streamKept}")
       assert(batchKept.size < docs.length, "fixture planted no drops — parity vacuous")
-    } finally {
-      if (q != null) q.stop()
-      if (useTws) spark.conf.unset("spark.graft.stateful.tws")
-      prevCheck match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
-      }
-    }
-  }
-
-  test("single-batch stateful stream keeps exactly what bandClaimKept keeps (fmgws)") {
-    streamVsBatchParity(useTws = false)
-  }
-
-  test("single-batch stateful stream keeps exactly what bandClaimKept keeps (tws)") {
-    streamVsBatchParity(useTws = true)
+    } finally if (q != null) q.stop()
   }
 
   test("nearDupAdmitAndAppend replay after a sink failure re-delivers, never loses") {

@@ -14,39 +14,11 @@ import graft.api.{Env, Event}
  * sessions the batch path computes — the reference's own trigger tests
  * re-expressed (watermark passing last+gap fires the session,
  * /root/reference/src/lib.rs:1320-1344,:1388-1401).
- *
- * The whole suite runs under BOTH state backends (see the concrete
- * subclasses at the bottom): `tws = false` is the default
- * `flatMapGroupsWithState` engine; `tws = true` reroutes every facade
- * stateful op through Spark 4 `transformWithState` on RocksDB — the
- * parity contract must hold identically.
  */
-abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
+class StreamingParitySpec extends AnyFunSuite {
 
-  protected lazy val spark = TestSpark.spark
+  private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  /** Memory-sink names must be unique across the two backend suites
-    * (both run in one JVM). */
-  protected def qn(base: String): String = if (tws) base + "_tws" else base
-
-  override protected def withFixture(test: NoArgTest): org.scalatest.Outcome = {
-    if (!tws) super.withFixture(test)
-    else {
-      val prevProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set("spark.graft.stateful.tws", "true")
-      try super.withFixture(test)
-      finally {
-        spark.conf.unset("spark.graft.stateful.tws")
-        prevProv match {
-          case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-          case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
-    }
-  }
 
   private def ev(value: Long, time: String): Event[Long] =
     Event.at(value, Timestamp.valueOf(time))
@@ -61,13 +33,13 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
       .aggregate(identity[Long])(_ + _)
 
     val query = sessions.ds
-      .writeStream.format("memory").queryName(qn("s_agg")).outputMode("append").start()
+      .writeStream.format("memory").queryName("s_agg").outputMode("append").start()
     try {
       // batch 1: one session {12:00,12:05} — must NOT fire yet (watermark
       // is still behind last+gap, as in the reference trigger test).
       input.addData(ev(1, "2009-10-11 12:00:00"), ev(2, "2009-10-11 12:05:00"))
       query.processAllAvailable()
-      assert(spark.table(qn("s_agg")).count() == 0)
+      assert(spark.table("s_agg").count() == 0)
 
       // batch 2: a far-future event advances the watermark past 12:05+10m.
       input.addData(ev(100, "2009-10-11 14:00:00"))
@@ -77,7 +49,7 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
       input.addData(ev(101, "2009-10-11 15:00:00"))
       query.processAllAvailable()
 
-      val fired = spark.table(qn("s_agg"))
+      val fired = spark.table("s_agg")
         .as[Event[Long]].collect().toSeq
       assert(fired.map(_.value).contains(3L), s"got $fired")
       val s = fired.find(_.value == 3L).get
@@ -95,7 +67,7 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
       .aggregate(identity[Long])(_ + _)
 
     val query = sessions.ds
-      .writeStream.format("memory").queryName(qn("s_merge")).outputMode("append").start()
+      .writeStream.format("memory").queryName("s_merge").outputMode("append").start()
     try {
       // two sessions 16 minutes apart...
       input.addData(ev(1, "2009-10-11 12:00:00"), ev(2, "2009-10-11 12:16:00"))
@@ -109,7 +81,7 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
       input.addData(ev(101, "2009-10-11 15:00:00"))
       query.processAllAvailable()
 
-      val fired = spark.table(qn("s_merge")).as[Event[Long]].collect().toSeq
+      val fired = spark.table("s_merge").as[Event[Long]].collect().toSeq
       // the three events merged into ONE session summing 1+2+4
       assert(fired.map(_.value).contains(7L), s"got $fired")
     } finally query.stop()
@@ -125,13 +97,13 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
       }
 
     val query = counts.ds
-      .writeStream.format("memory").queryName(qn("s_count")).outputMode("append").start()
+      .writeStream.format("memory").queryName("s_count").outputMode("append").start()
     try {
       input.addData(ev(0, "2009-10-11 12:00:00"), ev(1, "2009-10-11 12:01:00"))
       query.processAllAvailable()
       input.addData(ev(2, "2009-10-11 12:02:00"), ev(3, "2009-10-11 12:03:00"))
       query.processAllAvailable()
-      val out = spark.table(qn("s_count")).as[Event[(Long, Long)]]
+      val out = spark.table("s_count").as[Event[(Long, Long)]]
         .collect().toSeq.map(_.value).sorted
       // per key the count rises across batches: key0 → 1,2; key1 → 1,2
       assert(out == Seq((0L, 1L), (0L, 2L), (1L, 1L), (1L, 2L)))
@@ -152,17 +124,17 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
         (n + 1, Seq(e.withValue((e.value, n + 1))))
       }
     val query = seqd.ds
-      .writeStream.format("memory").queryName(qn("s_ordered")).outputMode("append").start()
+      .writeStream.format("memory").queryName("s_ordered").outputMode("append").start()
     try {
       input.addData(ev(1, "2009-10-11 12:10:00"), ev(3, "2009-10-11 12:30:00"))
       query.processAllAvailable()
       input.addData(ev(2, "2009-10-11 12:20:00")) // out of order, within the 30 min delay
       query.processAllAvailable()
       // watermark is still 12:00 — nothing is foldable yet
-      assert(spark.table(qn("s_ordered")).count() == 0)
+      assert(spark.table("s_ordered").count() == 0)
       input.addData(ev(4, "2009-10-11 14:00:00")) // watermark → 13:30
       query.processAllAvailable()
-      val got = spark.table(qn("s_ordered")).as[Event[(Long, Long)]]
+      val got = spark.table("s_ordered").as[Event[(Long, Long)]]
         .collect().toSeq.map(_.value)
       // fold sequence follows event time (1,2,3), not arrival (1,3,2)
       assert(got.sorted == Seq((1L, 1L), (2L, 2L), (3L, 3L)), s"got $got")
@@ -200,13 +172,13 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
     val checkKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
     // the outer session is EXPLICITLY strict; the composition must still
     // run inside the scoped clone and the outer flag must stay untouched
+    val markerKey = "spark.graft.percentile.accuracy"
     spark.conf.set(checkKey, "true")
-    try {
+    try TestSpark.withConf(markerKey -> "12345") {
       val result = Env.withGlobalStateSession(spark) { scoped =>
         assert(scoped.conf.get(checkKey) == "false")
-        // the runtime conf (incl. this suite's state-backend flags) must
-        // have crossed into the clone
-        assert(scoped.conf.get("spark.graft.stateful.tws", "false") == tws.toString)
+        // the outer session's runtime conf must have crossed into the clone
+        assert(scoped.conf.get(markerKey) == "12345")
         implicit val sqlCtx = scoped.sqlContext
         val input = MemoryStream[Event[Long]]
         val out = Env(scoped).fromDataset(input.toDS())
@@ -216,13 +188,13 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
             (k, e, kn) => (kn + 1, Seq(e.withValue((k, kn)))))(
             (e, gn) => (gn + 1, Seq(e.withValue((e.value._1, e.value._2, gn)))))
         val query = out.ds.writeStream.format("memory")
-          .queryName(qn("s_scoped")).outputMode("append").start()
+          .queryName("s_scoped").outputMode("append").start()
         try {
           input.addData(ev(10, "2009-10-11 12:00:00"), ev(20, "2009-10-11 12:30:00"))
           query.processAllAvailable()
           input.addData(ev(99, "2009-10-11 14:00:00"))
           query.processAllAvailable() // wm 14:00 → releases 12:00 and 12:30
-          scoped.table(qn("s_scoped")).as[Event[(Long, Long, Long)]]
+          scoped.table("s_scoped").as[Event[(Long, Long, Long)]]
             .collect().toSeq.map(_.value).toSet
         } finally query.stop()
       }
@@ -258,7 +230,7 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
         (k, e, kn) => (kn + 1, Seq(e.withValue((k, kn)))))(
         (e, gn) => (gn + 1, Seq(e.withValue((e.value._1, e.value._2, gn)))))
     val query = out.ds
-      .writeStream.format("memory").queryName(qn("s_kpsg")).outputMode("append").start()
+      .writeStream.format("memory").queryName("s_kpsg").outputMode("append").start()
     try {
       input.addData(ev(10, "2009-10-11 12:00:00"), ev(20, "2009-10-11 12:30:00"))
       query.processAllAvailable() // wm 12:30 → releases 12:00 only
@@ -267,7 +239,7 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
       input.addData(ev(99, "2009-10-11 14:00:00"))
       query.processAllAvailable() // wm 14:00 → releases 12:40
 
-      val got = spark.table(qn("s_kpsg")).as[Event[(Long, Long, Long)]]
+      val got = spark.table("s_kpsg").as[Event[(Long, Long, Long)]]
         .collect().toSeq.map(_.value).toSet
       // (key, per-key counter, global counter)
       assert(got == Set((10L, 0L, 0L), (20L, 0L, 1L), (10L, 1L, 2L), (20L, 1L, 3L)),
@@ -294,7 +266,7 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
         (n + 1, Seq(evs.head.withValue((k, n))))
       }
     val query = out.ds
-      .writeStream.format("memory").queryName(qn("s_wps")).outputMode("append").start()
+      .writeStream.format("memory").queryName("s_wps").outputMode("append").start()
     try {
       // 12:39 (not the reference's 12:40): our pinned boundary rule is
       // strict — an event exactly at last+gap starts a NEW session — so
@@ -313,7 +285,7 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
       query.processAllAvailable() // wm 15:30 → key2 (2,0), key9 s1 (9,0)
 
       // everything except key 9's still-open 15:30 session has fired
-      val got = spark.table(qn("s_wps")).as[Event[(Long, Long)]].collect().toSeq
+      val got = spark.table("s_wps").as[Event[(Long, Long)]].collect().toSeq
         .map(e => (e.eventTime.get, e.value)).toSet
       assert(got == Set(
         (Timestamp.valueOf("2009-10-11 12:10:00"), (0L, 0L)),
@@ -346,7 +318,7 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
         (k, _, evs, kn) => (kn + 1, Seq(evs.head.withValue((k, kn)))))(
         (e, gn) => (gn + 1, Seq(e.withValue((e.value._1, gn)))))
     val query = out.ds
-      .writeStream.format("memory").queryName(qn("s_wpsg")).outputMode("append").start()
+      .writeStream.format("memory").queryName("s_wpsg").outputMode("append").start()
     try {
       input.addData(ev(0, "2009-10-11 12:00:00"), ev(0, "2009-10-11 12:08:00"),
         ev(0, "2009-10-11 12:16:00"), ev(0, "2009-10-11 12:24:00"),
@@ -360,7 +332,7 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
       input.addData(ev(9, "2009-10-11 15:00:00"))
       query.processAllAvailable() // wm 15:00 → key 7's second session (14:00)
 
-      val got = spark.table(qn("s_wpsg")).as[Event[(Long, Long)]].collect().toSeq
+      val got = spark.table("s_wpsg").as[Event[(Long, Long)]].collect().toSeq
         .map(_.value).toSet
       // close order: key1 @12:41 → 0, key0 @12:50 → 1, key7 @12:55 → 2,
       // key7's second session @14:10 → 3 (key9's 15:00 stays open)
@@ -381,7 +353,7 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
       .process((_, b, evs) => Seq(evs.head.withValue(evs.map(_.value))))
 
     val query = sessions.ds
-      .writeStream.format("memory").queryName(qn("s_proc")).outputMode("append").start()
+      .writeStream.format("memory").queryName("s_proc").outputMode("append").start()
     try {
       input.addData(ev(3, "2009-10-11 12:04:00"), ev(1, "2009-10-11 12:00:00"),
         ev(2, "2009-10-11 12:02:00"))
@@ -390,14 +362,8 @@ abstract class StreamingParityBehaviors(tws: Boolean) extends AnyFunSuite {
       query.processAllAvailable()
       input.addData(ev(101, "2009-10-11 15:00:00"))
       query.processAllAvailable()
-      val fired = spark.table(qn("s_proc")).as[Event[Seq[Long]]].collect().toSeq
+      val fired = spark.table("s_proc").as[Event[Seq[Long]]].collect().toSeq
       assert(fired.map(_.value).contains(Seq(1L, 2L, 3L)), s"got $fired")
     } finally query.stop()
   }
 }
-
-/** Default backend: `flatMapGroupsWithState`. */
-class StreamingParitySpec extends StreamingParityBehaviors(tws = false)
-
-/** Same contract on Spark 4 `transformWithState` + RocksDB state. */
-class StreamingParityTwsSpec extends StreamingParityBehaviors(tws = true)

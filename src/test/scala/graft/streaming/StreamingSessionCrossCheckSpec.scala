@@ -17,31 +17,10 @@ import graft.api.{Env, Event}
  * must produce the identical closed-session aggregates once a far-future
  * event closes everything.
  */
-abstract class StreamingSessionCrossCheckBehaviors(tws: Boolean) extends AnyFunSuite {
+class StreamingSessionCrossCheckSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  /** Memory-sink names must be unique across the two backend suites. */
-  protected def qn(base: String): String = if (tws) base + "_tws" else base
-
-  override protected def withFixture(test: NoArgTest): org.scalatest.Outcome = {
-    if (!tws) super.withFixture(test)
-    else {
-      val prevProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set("spark.graft.stateful.tws", "true")
-      try super.withFixture(test)
-      finally {
-        spark.conf.unset("spark.graft.stateful.tws")
-        prevProv match {
-          case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-          case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
-    }
-  }
 
   test("streaming sessions equal batch sessions on random multi-batch input") {
     implicit val sqlCtx = spark.sqlContext
@@ -78,7 +57,7 @@ abstract class StreamingSessionCrossCheckBehaviors(tws: Boolean) extends AnyFunS
       .window(gap)
       .aggregate(_._2)(_ + _)
     val query = streamed.ds.writeStream
-      .format("memory").queryName(qn("sess_xcheck")).outputMode("append").start()
+      .format("memory").queryName("sess_xcheck").outputMode("append").start()
     try {
       val shuffled = rnd.shuffle(events)
       shuffled.grouped(100).foreach { batchEvents =>
@@ -91,7 +70,7 @@ abstract class StreamingSessionCrossCheckBehaviors(tws: Boolean) extends AnyFunS
       input.addData(closer.withValue((98L, 0L)))
       query.processAllAvailable()
 
-      val fired = spark.table(qn("sess_xcheck")).as[Event[Long]]
+      val fired = spark.table("sess_xcheck").as[Event[Long]]
         .collect().map(e => (e.eventTime.get, e.value)).sorted.toSeq
 
       // every batch session except the closers' own (still open) must fire
@@ -140,7 +119,7 @@ abstract class StreamingSessionCrossCheckBehaviors(tws: Boolean) extends AnyFunS
         (n + 1, Seq(evs.head.withValue((k, n, evs.size.toLong))))
       }
     val query = streamed.ds.writeStream
-      .format("memory").queryName(qn("wps_xcheck")).outputMode("append").start()
+      .format("memory").queryName("wps_xcheck").outputMode("append").start()
     try {
       rnd.shuffle(events).grouped(100).foreach { batchEvents =>
         input.addData(batchEvents: _*)
@@ -151,7 +130,7 @@ abstract class StreamingSessionCrossCheckBehaviors(tws: Boolean) extends AnyFunS
       input.addData(closer.withValue((98L, 0L)))
       query.processAllAvailable()
 
-      val fired = spark.table(qn("wps_xcheck")).as[Event[(Long, Long, Long)]]
+      val fired = spark.table("wps_xcheck").as[Event[(Long, Long, Long)]]
         .collect().map(e => (e.eventTime.get, e.value)).sorted.toSeq
       val expectedClosed = batch.filterNot(s =>
         s._1.getTime >= base + 90L * 86400000L)
@@ -194,7 +173,7 @@ abstract class StreamingSessionCrossCheckBehaviors(tws: Boolean) extends AnyFunS
       .withWatermark("30 days")
       .keyBy(_.value._1))
     val query = streamed.ds.writeStream
-      .format("memory").queryName(qn("okps_xcheck")).outputMode("append").start()
+      .format("memory").queryName("okps_xcheck").outputMode("append").start()
     try {
       rnd.shuffle(events).grouped(100).foreach { batchEvents =>
         input.addData(batchEvents: _*)
@@ -203,7 +182,7 @@ abstract class StreamingSessionCrossCheckBehaviors(tws: Boolean) extends AnyFunS
       input.addData(closer)
       query.processAllAvailable()
 
-      val fired = spark.table(qn("okps_xcheck")).as[Event[(Long, Long)]]
+      val fired = spark.table("okps_xcheck").as[Event[(Long, Long)]]
         .collect().map(e => (e.eventTime.get, e.value)).sorted.toSeq
       // the closer itself stays buffered (the watermark never passes it)
       val expectedReady = batch.filterNot(s =>
@@ -213,9 +192,3 @@ abstract class StreamingSessionCrossCheckBehaviors(tws: Boolean) extends AnyFunS
     } finally query.stop()
   }
 }
-
-/** Default backend: `flatMapGroupsWithState`. */
-class StreamingSessionCrossCheckSpec extends StreamingSessionCrossCheckBehaviors(tws = false)
-
-/** Same random cross-check on `transformWithState` + RocksDB state. */
-class StreamingSessionCrossCheckTwsSpec extends StreamingSessionCrossCheckBehaviors(tws = true)

@@ -16,17 +16,6 @@ class TopKStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def t(hour: Long, min: Long): Timestamp =
     new Timestamp((hour * 3600 + min * 60) * 1000L)
 
@@ -43,7 +32,7 @@ class TopKStreamSpec extends AnyFunSuite {
       .as[(Long, String, Long, Long)].collect().toSet
   }
 
-  private def run(useTws: Boolean): Unit = {
+  test("FMGWS backend matches the batch tumbling + top-k composition") {
     implicit val sqlCtx = spark.sqlContext
     // hour 10: a×3 b×2 c×1 split ACROSS two micro-batches (state must
     // merge); hour 11: b×2 d×1
@@ -56,8 +45,8 @@ class TopKStreamSpec extends AnyFunSuite {
     val input = MemoryStream[(Timestamp, String)]
     val out = TopKStream(
       input.toDF().toDF("ts", "token").withWatermark("ts", "0 seconds"),
-      "ts", "token", 3600L, 2, useTws = useTws)
-    val name = s"topk_$useTws"
+      "ts", "token", 3600L, 2)
+    val name = "topk_exact"
     val query = out.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {
@@ -72,14 +61,6 @@ class TopKStreamSpec extends AnyFunSuite {
       // hour 10's top-2 is (a,3),(b,2) — c must NOT appear
       assert(!got.exists(r => r._1 == 10L * 3600000000L && r._2 == "c"))
     } finally query.stop()
-  }
-
-  test("TWS backend matches the batch tumbling + top-k composition") {
-    withRocksDb { run(useTws = true) }
-  }
-
-  test("FMGWS backend matches the batch tumbling + top-k composition") {
-    run(useTws = false)
   }
 
   test("approx (CMS + candidate cap) recovers the exact top-k on skewed streams") {
@@ -115,7 +96,7 @@ class TopKStreamSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  private def runSharded(useTws: Boolean): Unit = {
+  test("sharded state (4 shards) + resolveCandidates == batch top-k, FMGWS") {
     implicit val sqlCtx = spark.sqlContext
     // 12 distinct tokens so 4 shards all carry load; counts 12,11,…,1
     val toks = (0 until 12).flatMap(i => Seq.fill(12 - i)(f"tk$i%02d"))
@@ -124,8 +105,8 @@ class TopKStreamSpec extends AnyFunSuite {
     val input = MemoryStream[(Timestamp, String)]
     val cands = TopKStream(
       input.toDF().toDF("ts", "token").withWatermark("ts", "1 hour"),
-      "ts", "token", 3600L, 3, useTws = useTws, shards = 4)
-    val name = s"topk_shard_$useTws"
+      "ts", "token", 3600L, 3, shards = 4)
+    val name = "topk_shard"
     val query = cands.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {
@@ -142,20 +123,12 @@ class TopKStreamSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  test("sharded state (4 shards) + resolveCandidates == batch top-k, TWS") {
-    withRocksDb { runSharded(useTws = true) }
-  }
-
-  test("sharded state (4 shards) + resolveCandidates == batch top-k, FMGWS") {
-    runSharded(useTws = false)
-  }
-
   test("late row for a closed window is dropped, not revived (FMGWS)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, String)]
     val out = TopKStream(
       input.toDF().toDF("ts", "token").withWatermark("ts", "0 seconds"),
-      "ts", "token", 3600L, 2, useTws = false)
+      "ts", "token", 3600L, 2)
     val query = out.writeStream.format("memory").queryName("topk_late")
       .outputMode("append").start()
     try {
