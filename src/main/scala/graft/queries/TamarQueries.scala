@@ -473,9 +473,9 @@ object TamarQueries {
     // stream-stream join story. The declared batch plan uses RangeJoin's
     // time-bucketed form (candidates bounded by events-per-horizon, not
     // events-per-user²); the STREAMING twin joins the same two inputs as
-    // watermarked streams through StreamJoins.follows (symmetric hash
-    // join, state evicted past the horizon) and is proven row-identical
-    // to this plan in StreamStreamJoinSpec.
+    // watermarked streams through StreamJoins.follows (one keyed
+    // interval-join operator, state evicted past the horizon) and is
+    // proven row-identical to this plan in StreamStreamJoinSpec.
     "t20_stream_join" -> QueryDef(
       (s, d) => {
         val e = ev(s, d)

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
  *
  * State bound: distinct pairs per open window + the aggregation's open
  * windows — rate-bounded, never stream-bounded (the stream-join
- * horizon argument; probed in StreamJoinProbe's harness family). At
+ * horizon argument, SCALE.md "Stream-stream join state bound"). At
  * extreme cardinality the documented swap is `approx_count_distinct`
  * (sketch state, no dedup stage) or the mergeable
  * [[graft.operators.CorpusStats]] HLL shard sketches.

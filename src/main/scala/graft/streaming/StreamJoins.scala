@@ -1,19 +1,28 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{DayTimeIntervalType, StructField, StructType}
 
 /**
  * Stream-stream joins — a capability entirely absent from the reference
  * (its DSL is a single chain; two streams cannot be combined at all,
  * /root/reference/src/lib.rs has no join surface — SURVEY.md §2.2).
  *
- * Spark's StreamingSymmetricHashJoin gives the scalable shape for free
- * once the query has (a) an equi-key — both sides hash-partition on it,
- * so state is distributed, never per-executor-global — and (b) a time
- * bound plus watermarks on both sides, so rows provably past matching
- * range are evicted: state is horizon-bounded, not stream-bounded. That
- * is the ONLY join shape that survives an unbounded 100 TB/day stream.
+ * The interval joins (`follows*`) on two streams run as ONE keyed
+ * operator, as Flink runs an interval join: both sides are unioned,
+ * shuffled once on the equi-key, and a `flatMapGroupsWithState` keeps
+ * per key a left and a right buffer in one state store — distributed by
+ * key and horizon-bounded (rows that can no longer match are evicted as
+ * the watermark passes), the shape that survives an unbounded stream.
+ * Spark's stream-stream join keeps four stores per partition instead,
+ * and their checkpoint commits dominated each micro-batch (SCALE.md).
  */
 object StreamJoins {
 
@@ -24,29 +33,24 @@ object StreamJoins {
    * (keyCol, a_id, a_ts, b_id, b_ts), proven row-identical to it in
    * StreamStreamJoinSpec.
    *
-   * Streaming use: both inputs must carry `withWatermark` on `tsCol`
-   * BEFORE this call (the watermark tag survives the internal renames —
-   * it is column metadata, carried through alias). Join state then holds
-   * only rows younger than horizon + watermark delay per side.
+   * Streaming use (both inputs streaming): both must carry
+   * `withWatermark` on `tsCol` BEFORE this call, and `horizon` must be a
+   * day-time interval. A row at or behind the watermark is dropped as
+   * late (counted in `numRowsDroppedByWatermark`). A left row stays
+   * buffered until the watermark passes a_ts + horizon, a right row
+   * until it reaches b_ts: after that nothing it could match can still
+   * arrive. A touched key's buffers are rewritten whole each batch.
    *
-   * Batch use: the same predicate works, but prefer RangeJoin.follows —
-   * its time-bucketed equi-join bounds candidate pairs by
-   * events-per-horizon, where this raw predicate form materializes
-   * per-key cross products before the time filter. In streaming that
-   * hazard does not exist: the symmetric hash join probes per-row as
-   * micro-batches arrive, against state already pruned to the horizon.
+   * Batch use (either input a batch frame): a declarative join on the
+   * same predicate, but prefer RangeJoin.follows — its time-bucketed
+   * equi-join bounds candidate pairs by events-per-horizon, where this
+   * raw predicate form materializes per-key cross products before the
+   * time filter. The streaming operator has no such hazard: each row
+   * meets only the other side's buffer, already pruned to the horizon.
    */
   def follows(left: DataFrame, right: DataFrame, keyCol: String,
-              tsCol: String, idCol: String, horizon: String): DataFrame = {
-    val a = left.select(col(keyCol), col(tsCol).as("a_ts"), col(idCol).as("a_id"))
-    val b = right.select(col(keyCol).as("__bk"), col(tsCol).as("b_ts"),
-      col(idCol).as("b_id"))
-    a.join(b,
-        col(keyCol) === col("__bk") &&
-          col("b_ts") > col("a_ts") &&
-          col("b_ts") <= col("a_ts") + expr(s"INTERVAL $horizon"))
-      .select(col(keyCol), col("a_id"), col("a_ts"), col("b_id"), col("b_ts"))
-  }
+              tsCol: String, idCol: String, horizon: String): DataFrame =
+    join(left, right, keyCol, tsCol, idCol, horizon, "inner")
 
   /**
    * Left-outer [[follows]]: every left row appears — paired with each
@@ -54,29 +58,21 @@ object StreamJoins {
    * b_id/b_ts if nothing matched. The "which views never converted"
    * question, which the inner join silently drops.
    *
-   * Streaming: Spark emits the null-padded row only once the LEFT
-   * watermark passes a_ts + horizon (before that a match could still
-   * arrive) — so unmatched results trail the event by horizon + delay,
-   * and a final empty micro-batch may be needed to flush the tail
-   * (StreamStreamJoinSpec pushes a sentinel event for exactly this).
-   * Same state bound as the inner form.
+   * Streaming: an unmatched left row is emitted null-padded when it is
+   * evicted, once the watermark passes a_ts + horizon (before that a
+   * match could still arrive) — so unmatched results trail the event by
+   * horizon + delay, and a final micro-batch may be needed to flush the
+   * tail (StreamStreamJoinSpec pushes a sentinel event for exactly
+   * this). A row with a null key or null `tsCol` can match nothing and
+   * is emitted null-padded at once. Same state bound as the inner form.
    *
    * Batch: same predicate, same per-key-cross-product caveat as
    * [[follows]] — at scale compose RangeJoin.follows with an anti-join
    * union instead (the t21 declared plan does; proven identical there).
    */
   def followsLeftOuter(left: DataFrame, right: DataFrame, keyCol: String,
-                       tsCol: String, idCol: String, horizon: String): DataFrame = {
-    val a = left.select(col(keyCol), col(tsCol).as("a_ts"), col(idCol).as("a_id"))
-    val b = right.select(col(keyCol).as("__bk"), col(tsCol).as("b_ts"),
-      col(idCol).as("b_id"))
-    a.join(b,
-        col(keyCol) === col("__bk") &&
-          col("b_ts") > col("a_ts") &&
-          col("b_ts") <= col("a_ts") + expr(s"INTERVAL $horizon"),
-        "left_outer")
-      .select(col(keyCol), col("a_id"), col("a_ts"), col("b_id"), col("b_ts"))
-  }
+                       tsCol: String, idCol: String, horizon: String): DataFrame =
+    join(left, right, keyCol, tsCol, idCol, horizon, "left_outer")
 
   /**
    * Full-outer [[follows]], completing the t20/t21 family: matched
@@ -84,16 +80,21 @@ object StreamJoins {
    * each unmatched right row null-padded on the left — attribution
    * COMPLETENESS ("every view and every click accounted for exactly
    * once or as a pair"). `keyCol` coalesces across sides, so it is
-   * non-null on every output row.
+   * non-null on every output row whose input key was non-null.
    *
-   * Streaming: null rows for a side emit once that side's watermark
-   * clears the possibility of a match (left at a_ts + horizon, right at
-   * b_ts — a click strictly after all in-horizon views can match
-   * nothing older once its own time passes the left watermark); same
-   * horizon-bounded state as the inner form, same sentinel-flush caveat
-   * as [[followsLeftOuter]]. Batch: prefer the t24 declared
-   * composition (bucketed inner + two anti-join unions).
+   * Streaming: an unmatched row is emitted null-padded when it is
+   * evicted — a left row once the watermark passes a_ts + horizon, a
+   * right row once it reaches b_ts (a click can match only views before
+   * it, and any such view arriving now is behind the watermark); rows
+   * with a null key or null `tsCol` at once. Same horizon-bounded state
+   * as the inner form, same sentinel-flush caveat as
+   * [[followsLeftOuter]]. Batch: prefer the t24 declared composition
+   * (bucketed inner + two anti-join unions).
    */
+  def followsFullOuter(left: DataFrame, right: DataFrame, keyCol: String,
+                       tsCol: String, idCol: String, horizon: String): DataFrame =
+    join(left, right, keyCol, tsCol, idCol, horizon, "full_outer")
+
   /**
    * SCD-2 temporal enrichment: each event joins the dimension VERSION
    * valid at its event time (`key` equal and `from ≤ ts < to`) — the
@@ -117,17 +118,98 @@ object StreamJoins {
         events(tsCol) >= dim(fromCol) && events(tsCol) < dim(toCol),
       how)
 
-  def followsFullOuter(left: DataFrame, right: DataFrame, keyCol: String,
-                       tsCol: String, idCol: String, horizon: String): DataFrame = {
-    val a = left.select(col(keyCol), col(tsCol).as("a_ts"), col(idCol).as("a_id"))
-    val b = right.select(col(keyCol).as("__bk"), col(tsCol).as("b_ts"),
-      col(idCol).as("b_id"))
-    a.join(b,
-        col(keyCol) === col("__bk") &&
-          col("b_ts") > col("a_ts") &&
-          col("b_ts") <= col("a_ts") + expr(s"INTERVAL $horizon"),
-        "full_outer")
-      .select(coalesce(col(keyCol), col("__bk")).as(keyCol),
-        col("a_id"), col("a_ts"), col("b_id"), col("b_ts"))
+  private def join(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
+                   idCol: String, horizon: String, how: String): DataFrame =
+    if (left.isStreaming && right.isStreaming)
+      intervalJoin(left, right, keyCol, tsCol, idCol, horizonMicros(horizon), how)
+    else {
+      val a = left.select(col(keyCol), col(tsCol).as("a_ts"), col(idCol).as("a_id"))
+      val b = right.select(col(keyCol).as("__bk"), col(tsCol).as("b_ts"),
+        col(idCol).as("b_id"))
+      a.join(b,
+          col(keyCol) === col("__bk") &&
+            col("b_ts") > col("a_ts") &&
+            col("b_ts") <= col("a_ts") + expr(s"INTERVAL $horizon"),
+          how)
+        .select((if (how == "full_outer") coalesce(col(keyCol), col("__bk")) else col(keyCol))
+          .as(keyCol), col("a_id"), col("a_ts"), col("b_id"), col("b_ts"))
+    }
+
+  private def horizonMicros(horizon: String): Long =
+    CatalystSqlParser.parseExpression(s"INTERVAL $horizon") match {
+      case Literal(us: Long, _: DayTimeIntervalType) => us
+      case _ => throw new IllegalArgumentException(s"horizon must be a day-time interval: $horizon")
+    }
+
+  /** A buffered row: event time in µs, timestamp and id as given, paired yet. */
+  private[streaming] final class Pending(val us: Long, val ts: Any, val id: Any, var matched: Boolean)
+
+  /** Per-key join state: the rows of each side that can still match. */
+  private[streaming] final case class Buffers(left: Array[Pending], right: Array[Pending])
+
+  /** The streaming form: one shuffle on the key, one state store. */
+  private def intervalJoin(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
+                           idCol: String, h: Long, how: String): DataFrame = {
+    val (outerLeft, outerRight) = (how != "inner", how == "full_outer")
+    val key = left.schema(keyCol)
+    val (aTs, bTs) = (left.schema(tsCol), right.schema(tsCol))
+    val (aId, bId) = (left.schema(idCol), right.schema(idCol))
+    // each side fills its own id column and a typed null in the other's,
+    // so both id types survive the union; `ts` keeps the watermark tag
+    val rows = left.select(col(keyCol).as("k"), col(tsCol).as("ts"), col(idCol).as("a_id"),
+        lit(null).cast(bId.dataType).as("b_id"), lit(true).as("is_left"))
+      .unionByName(right.select(col(keyCol).cast(key.dataType).as("k"), col(tsCol).as("ts"),
+        lit(null).cast(aId.dataType).as("a_id"), col(idCol).as("b_id"), lit(false).as("is_left")))
+    val outSchema = StructType(Seq(
+      StructField(keyCol, key.dataType, key.nullable || outerRight),
+      StructField("a_id", aId.dataType, aId.nullable || outerRight),
+      StructField("a_ts", aTs.dataType, aTs.nullable || outerRight),
+      StructField("b_id", bId.dataType, bId.nullable || outerLeft),
+      StructField("b_ts", bTs.dataType, bTs.nullable || outerLeft)))
+    rows.groupBy(col("k"))
+      .as[Row, Row](Encoders.row(StructType(Seq(rows.schema("k")))), Encoders.row(rows.schema))
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: Row, it: Iterator[Row], gs: GroupState[Buffers]) =>
+          val kv = k.get(0)
+          val out = ArrayBuffer.empty[Row]
+          def lonely(isLeft: Boolean, p: Pending): Unit =
+            if (isLeft && outerLeft) out += Row(kv, p.id, p.ts, null, null)
+            else if (!isLeft && outerRight) out += Row(kv, null, null, p.id, p.ts)
+          val prev = if (gs.exists) gs.get else Buffers(Array.empty, Array.empty)
+          val (newL, newR) = (ArrayBuffer.empty[Pending], ArrayBuffer.empty[Pending])
+          it.foreach { r =>
+            val isLeft = r.getBoolean(4)
+            val ts = r.get(1)
+            val p = new Pending(if (ts == null) 0L else DateTimeUtils.anyToMicros(ts), ts,
+              r.get(if (isLeft) 2 else 3), false)
+            // a null key or time matches nothing: out at once, never buffered
+            if (kv == null || ts == null) lonely(isLeft, p)
+            else (if (isLeft) newL else newR) += p
+          }
+          def pair(a: Pending, b: Pending): Unit =
+            if (a.us < b.us && b.us <= a.us + h) {
+              a.matched = true
+              b.matched = true
+              out += Row(kv, a.id, a.ts, b.id, b.ts)
+            }
+          // new right × (stored + new) left, then new left × stored right
+          for (b <- newR; a <- prev.left.iterator ++ newL) pair(a, b)
+          for (a <- newL; b <- prev.right) pair(a, b)
+          val wm = gs.getCurrentWatermarkMs()
+          val (keepL, dropL) = (prev.left ++ newL).partition(_.us + h >= wm * 1000L)
+          val (keepR, dropR) = (prev.right ++ newR).partition(_.us > wm * 1000L)
+          dropL.foreach(p => if (!p.matched) lonely(isLeft = true, p))
+          dropR.foreach(p => if (!p.matched) lonely(isLeft = false, p))
+          if (keepL.isEmpty && keepR.isEmpty) gs.remove()
+          else {
+            gs.update(Buffers(keepL, keepR))
+            // fires once the watermark passes the earliest eviction time
+            // (re-armed on every call: Spark clears it whenever it fires)
+            gs.setTimeoutTimestamp(math.max(wm,
+              (keepL.iterator.map(p => Math.floorDiv(p.us + h, 1000L)) ++
+                keepR.iterator.map(p => Math.floorDiv(p.us - 1L, 1000L))).min))
+          }
+          out.iterator
+      }(Encoders.kryo[Buffers], Encoders.row(outSchema))
   }
 }

@@ -2,10 +2,18 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.collection.mutable
+import scala.util.Random
+
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, Encoder, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, Join}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.TestSpark
+import graft.TestSpark.withRocksDb
 
 /**
  * Stream-stream inner join with watermark-bounded state — a capability
@@ -90,10 +98,18 @@ class StreamStreamJoinSpec extends AnyFunSuite {
       val got = spark.table("ssj_parity").as[(Long, Long)].collect().toSet
       assert(got == expected,
         s"streaming missing ${expected -- got}, extra ${got -- expected}")
-      // watermark-bounded state: after the final watermark advance the
-      // join holds far fewer rows than the 240 fed in
-      val stateRows = query.lastProgress.stateOperators(0).numRowsTotal
-      assert(stateRows < 240, s"join state not evicted: $stateRows rows")
+      // watermark-bounded state: state rows count keys; once a far-future
+      // sentinel (key 9) moves the watermark past every fed row's
+      // horizon, each of the 5 users' state is removed and only the
+      // sentinel's key is left
+      views.addData((9L, ts(10000L), 999999L))
+      clicks.addData((9L, ts(10000L), 888888L))
+      query.processAllAvailable()
+      views.addData((9L, ts(10001L), 999998L))
+      query.processAllAvailable()
+      val state = query.lastProgress.stateOperators(0)
+      assert(state.numRowsTotal == 1, s"join state not evicted: ${state.numRowsTotal} keys")
+      assert(query.recentProgress.map(_.stateOperators(0).numRowsRemoved).sum >= 5)
     } finally query.stop()
   }
 
@@ -227,5 +243,292 @@ class StreamStreamJoinSpec extends AnyFunSuite {
       assert(got == expected,
         s"missing ${expected -- got}, extra ${got -- expected}")
     } finally query.stop()
+  }
+
+  // ---- the interval-join operator: edge cases, late rows, restarts ----
+
+  private type Form = (DataFrame, DataFrame, String, String, String, String) => DataFrame
+  private val forms: Seq[(String, Form)] = Seq(
+    "inner" -> (StreamJoins.follows _),
+    "left_outer" -> (StreamJoins.followsLeftOuter _),
+    "full_outer" -> (StreamJoins.followsFullOuter _))
+
+  private val horizon = "2 minutes"
+  private val t0 = 1709280000000L
+  private def at(sec: Long) = new Timestamp(t0 + sec * 1000L)
+
+  /** A join output as sorted row strings, without sentinel rows (ids
+    * from 900000): bag semantics, duplicates count. */
+  private def bag(rows: Seq[Row]): Seq[String] =
+    rows.filterNot(r => Seq(1, 3).exists(i => !r.isNullAt(i) && r.getLong(i) >= 900000L))
+      .map(_.toString).sorted
+
+  /** Both sides fed through one memory stream, so that each `feed` lands
+    * in one micro-batch; split on the side flag, each side with its own
+    * watermark. */
+  private final class TwoSided[K](delay: String)(implicit
+      enc: Encoder[(K, Timestamp, Long, Boolean)], ctx: org.apache.spark.sql.SQLContext) {
+    private val ms = MemoryStream[(K, Timestamp, Long, Boolean)]
+    private val all = ms.toDF().toDF("user", "ts", "id", "is_left")
+    def side(isLeft: Boolean): DataFrame =
+      all.filter(col("is_left") === isLeft).drop("is_left").withWatermark("ts", delay)
+    def feed(l: Seq[(K, Timestamp, Long)], r: Seq[(K, Timestamp, Long)]): Unit =
+      ms.addData(l.map { case (k, t, i) => (k, t, i, true) } ++ r.map { case (k, t, i) => (k, t, i, false) })
+  }
+
+  /**
+   * Seeded two-sided input of `batches` micro-batches: batch i is
+   * centred on minute i, with rows up to 3.5 minutes before it or 2
+   * after (the watermark, 5 minutes behind the latest left row, stays
+   * below 4 minutes before it, so no row is late but some arrive just
+   * above it), on a 30 s grid so that times coincide. Each batch also
+   * pairs a left row with a right row at the same time (no match) and
+   * one exactly a horizon later (a match). Some rows repeat, within a
+   * batch and across batches, and some have a null key or a null time.
+   * Ids: left 1000+, right 5000+.
+   */
+  private def gen[K](seed: Long, batches: Int, key: Int => K, nullKey: K)
+      : Seq[(Seq[(K, Timestamp, Long)], Seq[(K, Timestamp, Long)])] = {
+    val rnd = new Random(seed)
+    var prevL, prevR = Seq.empty[(K, Timestamp, Long)]
+    var nextL = 1000L
+    var nextR = 5000L
+    (0 until batches).map { i =>
+      def side(n: Int, next: () => Long, prev: Seq[(K, Timestamp, Long)]) = {
+        val fresh = (0 until n).map { _ =>
+          val k = if (rnd.nextInt(12) == 0) nullKey else key(rnd.nextInt(3))
+          val ts = if (rnd.nextInt(16) == 0) null else at(60L * i + 30L * (rnd.nextInt(12) - 7))
+          (k, ts, next())
+        }
+        val pool = fresh ++ prev.filter(r => r._2 == null || !r._2.before(at(60L * i - 210L)))
+        fresh ++ (0 until 2).map(_ => pool(rnd.nextInt(pool.size)))
+      }
+      val l = side(6, () => { nextL += 1; nextL }, prevL)
+      val anchor = l.find(r => r._1 != nullKey && r._2 != null).get
+      val r = side(6, () => { nextR += 1; nextR }, prevR) ++ Seq(
+        (anchor._1, anchor._2, { nextR += 1; nextR }),
+        (anchor._1, new Timestamp(anchor._2.getTime + 120000L), { nextR += 1; nextR }))
+      prevL = l
+      prevR = r
+      (l, r)
+    }
+  }
+
+  /** Feeds `batches` to every join form as two watermarked streams and
+    * checks each output, as a bag, against the same form on the whole
+    * input as batch frames; the streamed schema must equal the batch one. */
+  private def crossCheck[K](tag: String, batches: Seq[(Seq[(K, Timestamp, Long)],
+      Seq[(K, Timestamp, Long)])], sentinel: K)(
+      implicit enc: Encoder[(K, Timestamp, Long, Boolean)]): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = spark.createDataset(batches.flatMap { case (l, r) =>
+      l.map { case (k, t, i) => (k, t, i, true) } ++ r.map { case (k, t, i) => (k, t, i, false) }
+    }).toDF("user", "ts", "id", "is_left")
+    def batchSide(isLeft: Boolean) = input.filter(col("is_left") === isLeft).drop("is_left")
+    forms.foreach { case (how, join) =>
+      val expected = join(batchSide(true), batchSide(false), "user", "ts", "id", horizon)
+      val want = bag(expected.collect().toSeq)
+      val in = new TwoSided[K]("5 minutes")
+      val joined = join(in.side(true), in.side(false), "user", "ts", "id", horizon)
+      assert(joined.schema == expected.schema, s"$how schema")
+      val q = joined.writeStream.format("memory").queryName(s"ssj_x_${tag}_$how")
+        .outputMode("append").start()
+      try {
+        batches.foreach { case (l, r) =>
+          in.feed(l, r)
+          q.processAllAvailable()
+        }
+        // far-future sentinels move the watermark past every horizon
+        Seq(86400L, 86401L).zipWithIndex.foreach { case (sec, j) =>
+          in.feed(Seq((sentinel, at(sec), 900000L + j)), Seq((sentinel, at(sec), 950000L + j)))
+          q.processAllAvailable()
+        }
+        val got = bag(spark.table(s"ssj_x_${tag}_$how").collect().toSeq)
+        assert(got == want, s"$how: streaming ${got.diff(want)} extra, ${want.diff(got)} missing")
+        assert(q.recentProgress.forall(_.stateOperators.forall(_.numRowsDroppedByWatermark == 0)))
+      } finally q.stop()
+    }
+  }
+
+  test("interval join: seeded multi-batch input, all three forms equal batch (Long key)") {
+    Seq(11L, 12L).foreach { seed =>
+      val batches = gen[Option[Long]](seed, 8, k => Some(k.toLong), None)
+      val rows = (batches.flatMap(_._1), batches.flatMap(_._2))
+      // the fixture reaches every edge case it names
+      assert(rows._1.exists(_._1.isEmpty) && rows._2.exists(_._2 == null))
+      assert(rows._1.diff(rows._1.distinct).nonEmpty && rows._2.diff(rows._2.distinct).nonEmpty)
+      assert(rows._1.exists(a => a._2 != null &&
+        rows._2.exists(b => b._1 == a._1 && b._2 != null && b._2.getTime == a._2.getTime + 120000L)))
+      crossCheck(s"long$seed", batches, Some(99L))
+    }
+  }
+
+  test("interval join: seeded multi-batch input, all three forms equal batch (String key)") {
+    crossCheck("str", gen[String](13L, 8, k => s"u$k", null), "zz")
+  }
+
+  test("interval join: a late row on either side is dropped and counted") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = new TwoSided[Long]("0 seconds")
+    val joined = StreamJoins.followsFullOuter(in.side(true), in.side(false),
+      "user", "ts", "id", "10 minutes")
+    val b = Seq((1L, at(0), 1L)).toDF("user", "ts", "id")
+    assert(joined.schema == StreamJoins.followsFullOuter(b, b, "user", "ts", "id", "10 minutes").schema)
+    val q = joined.writeStream.format("memory").queryName("ssj_late")
+      .outputMode("append").start()
+    try {
+      in.feed(Seq((1L, at(0), 1L), (2L, at(300), 5L)), Seq((1L, at(300), 2L), (2L, at(300), 6L)))
+      q.processAllAvailable()
+      // both watermarks are now at 300 s: a view at 60 s and a click at
+      // 120 s (each would pair with a key-1 row) are behind them
+      in.feed(Seq((1L, at(60), 3L)), Seq((1L, at(120), 4L)))
+      q.processAllAvailable()
+      Seq(86400L, 86401L).foreach { sec =>
+        in.feed(Seq((9L, at(sec), 900000L)), Seq((9L, at(sec), 950000L)))
+        q.processAllAvailable()
+      }
+      val got = spark.table("ssj_late").collect().toSeq
+      assert(bag(got) == Seq(Row(1L, 1L, at(0), 2L, at(300)), Row(2L, 5L, at(300), null, null),
+        Row(2L, null, null, 6L, at(300))).map(_.toString).sorted, got)
+      val dropped = q.recentProgress.map(_.stateOperators.map(_.numRowsDroppedByWatermark).sum).sum
+      assert(dropped == 2, s"dropped $dropped")
+      // the watermark tag survives the union into the stateful operator
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val stateIn = plan.collect { case p if p.nodeName == "FlatMapGroupsWithState" => p.children.head }
+      assert(stateIn.size == 1 &&
+        stateIn.head.output.exists(_.metadata.contains(EventTimeWatermark.delayKey)))
+    } finally q.stop()
+  }
+
+  test("interval join: rows just inside the eviction bounds still pair with later arrivals") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = new TwoSided[Long]("0 seconds")
+    val joined = StreamJoins.follows(in.side(true), in.side(false), "user", "ts", "id", "10 minutes")
+    val q = joined.writeStream.format("memory").queryName("ssj_bounds")
+      .outputMode("append").start()
+    // batch 1 takes both watermarks to 300 s. Batch 2 touches keys 1 and
+    // 3 at that watermark, where click 7 (330 s) and view 9 (-280 s,
+    // horizon end 320 s) are just inside their bounds and must stay.
+    // Batch 3 then pairs view 8 (310 s) with click 7 and click 10 (315 s)
+    // with view 9.
+    val b1 = (Seq((1L, at(0), 1L), (5L, at(300), 5L), (3L, at(-280), 9L)),
+      Seq((1L, at(100), 2L), (5L, at(300), 6L), (1L, at(330), 7L)))
+    val b2 = (Seq((3L, at(305), 11L)), Seq((1L, at(305), 12L)))
+    val b3 = (Seq((1L, at(310), 8L)), Seq((3L, at(315), 10L)))
+    val feed = Seq(b1, b2, b3)
+    try {
+      feed.foreach { case (v, c) =>
+        in.feed(v, c)
+        q.processAllAvailable()
+      }
+      val (bv, bc) = (feed.flatMap(_._1), feed.flatMap(_._2))
+      val expected = StreamJoins.follows(bv.toDF("user", "ts", "id"), bc.toDF("user", "ts", "id"),
+        "user", "ts", "id", "10 minutes").collect().toSeq
+      assert(Seq((8L, 7L), (9L, 10L)).forall { case (a, b) =>
+        expected.exists(r => r.getLong(1) == a && r.getLong(3) == b) })
+      assert(bag(spark.table("ssj_bounds").collect().toSeq) == bag(expected))
+      assert(q.recentProgress.forall(_.stateOperators.forall(_.numRowsDroppedByWatermark == 0)))
+    } finally q.stop()
+  }
+
+  test("interval join plan: one stateful operator and one shuffle; batch keeps the join") {
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[(Long, Timestamp, Long, String)]
+    val s = ms.toDF().toDF("user", "ts", "id", "kind").withWatermark("ts", "10 minutes")
+    val q = StreamJoins.follows(s.filter(col("kind") === "view"), s.filter(col("kind") === "click"),
+        "user", "ts", "id", "10 minutes")
+      .writeStream.format("memory").queryName("ssj_plan").outputMode("append").start()
+    try {
+      ms.addData((1L, at(0), 1L, "view"), (1L, at(60), 2L, "click"))
+      q.processAllAvailable()
+      val plan: SparkPlan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val names = plan.collect { case p => p.nodeName }
+      assert(!names.exists(_.contains("SymmetricHashJoin")), names)
+      assert(names.count(_ == "FlatMapGroupsWithState") == 1, names)
+      assert(names.count(_ == "Exchange") == 1, names)
+      assert(spark.table("ssj_plan").count() == 1)
+    } finally q.stop()
+    val b = Seq((1L, at(0), 1L)).toDF("user", "ts", "id")
+    val batch = StreamJoins.follows(b, b, "user", "ts", "id", "10 minutes")
+    assert(batch.queryExecution.optimizedPlan.collect { case j: Join => j }.size == 1)
+  }
+
+  /** Rows for the restart cases: one file per batch, views and clicks
+    * in one file stream told apart by `kind`. */
+  private def restartFiles(): Seq[Seq[(Long, Timestamp, Long, String)]] =
+    gen[Long](21L, 6, _.toLong, -1L).map { case (l, r) =>
+      def ok(x: (Long, Timestamp, Long)) = x._1 >= 0 && x._2 != null
+      l.filter(ok).map { case (k, t, i) => (k, t, i, "view") } ++
+        r.filter(ok).map { case (k, t, i) => (k, t, i, "click") }
+    } :+ Seq((99L, at(86400), 900000L, "view"), (99L, at(86400), 950000L, "click"))
+
+  /** Runs `how` over the files in `src` to completion with checkpoint
+    * `ckpt`, one file per micro-batch; returns the rows it emitted. */
+  private def runFiles(join: Form, src: String, ckpt: String): Seq[Row] = {
+    val schema = "user BIGINT, ts TIMESTAMP, id BIGINT, kind STRING"
+    val s = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+    def side(kind: String) = s.filter(col("kind") === kind).withWatermark("ts", "5 minutes")
+    val out = mutable.ArrayBuffer.empty[Row]
+    val collect: (DataFrame, Long) => Unit = (df, _) => out.synchronized(out ++= df.collect())
+    val q: StreamingQuery = join(side("view"), side("click"), "user", "ts", "id", horizon)
+      .writeStream.outputMode("append").option("checkpointLocation", ckpt)
+      .foreachBatch(collect)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(q.recentProgress.forall(_.stateOperators.forall(_.numRowsDroppedByWatermark == 0)))
+    out.toSeq
+  }
+
+  private def restartCase(how: String, rocksDb: Boolean): Unit = {
+    val join = forms.toMap.apply(how)
+    val root = java.nio.file.Files.createTempDirectory(s"graft_ssj_restart_$how").toFile.getAbsolutePath
+    val files = restartFiles()
+    // one parquet file per batch, modification times in feed order (the
+    // file source replays in that order)
+    var n = 0
+    def land(dir: String, fs: Seq[Seq[(Long, Timestamp, Long, String)]]): Unit = fs.foreach { f =>
+      val tmp = s"$root/tmp$n"
+      f.toDF("user", "ts", "id", "kind").coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(dir, f"f$n%03d.parquet")
+      dst.getParentFile.mkdirs()
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      dst.setLastModified(t0 + n * 10000L)
+      n += 1
+    }
+    land(s"$root/whole", files)
+    val whole = bag(runFiles(join, s"$root/whole", s"$root/ckpt_whole"))
+    // the split: half the files, stop, the rest, restart on the checkpoint
+    val (first, rest) = files.splitAt(files.size / 2)
+    land(s"$root/split", first)
+    def run() = runFiles(join, s"$root/split", s"$root/ckpt_split")
+    val (a, b) = if (rocksDb) withRocksDb {
+      val a = run(); land(s"$root/split", rest); (a, run())
+    } else {
+      val a = run(); land(s"$root/split", rest); (a, run())
+    }
+    assert(bag(a ++ b) == whole, s"$how: ${bag(a ++ b).diff(whole)} extra, ${whole.diff(bag(a ++ b))} missing")
+    // the restart fell mid-horizon: a pair spans it
+    val firstIds = first.flatten.map(_._3).toSet
+    assert(b.exists(r => !r.isNullAt(3) && firstIds(r.getLong(1)) && !firstIds(r.getLong(3))))
+    val ckptFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/ckpt_split/state"))
+      .toArray.map(_.toString)
+    assert(ckptFiles.exists(_.endsWith(".zip")) == rocksDb, "state-store provider")
+  }
+
+  test("interval join state survives a restart mid-horizon (inner, default provider)") {
+    restartCase("inner", rocksDb = false)
+  }
+
+  test("interval join state survives a restart mid-horizon (inner, RocksDB)") {
+    restartCase("inner", rocksDb = true)
+  }
+
+  test("interval join state survives a restart mid-horizon (left outer, default provider)") {
+    restartCase("left_outer", rocksDb = false)
+  }
+
+  test("interval join state survives a restart mid-horizon (left outer, RocksDB)") {
+    restartCase("left_outer", rocksDb = true)
   }
 }
