@@ -2,6 +2,11 @@
 # Run a graft main class directly against the compiled classes + Spark's
 # bundled jars — same JVM options as build.sbt's forked `run`, no sbt lock.
 # Usage: scripts/run_class.sh <mainClass> [args...]
+# The classes and the Spark jar directory (build.sbt's unmanagedBase)
+# come from the checkout this script lives in, so a copy of another
+# commit runs that commit's code.
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")"
 CLS="$1"; shift
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
@@ -20,5 +25,5 @@ exec java \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$JARS/*" \
   "$CLS" "$@"

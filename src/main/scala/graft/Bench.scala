@@ -31,14 +31,7 @@ object Bench {
     def elapsedSec: Double = (System.nanoTime() - wallStart) / 1e9
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "600").toDouble
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Warm each query once at the smallest SF before timing it at the
     // target SF: Janino whole-stage-codegen compilation is a one-shot
     // cost (measured up to 10 s on the widest generated aggregates) that

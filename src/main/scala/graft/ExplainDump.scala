@@ -1,30 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for the named declared queries (or all
   * of them) to one file per query — the plan-evidence artifacts the
   * optimization rounds commit under plans/r<N>/.
   *
   * Run: `scripts/run_class.sh graft.ExplainDump <outDir> [suffix] [q1,q2,...]`
-  * (default suffix "plan", default queries = all). Files are named
-  * `<query>_<suffix>.txt`.
+  * (outDir required; default suffix "plan", default queries = all).
+  * Files are named `<query>_<suffix>.txt`.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("/root/repo/plans/r19")
+    require(args.nonEmpty, "usage: ExplainDump <outDir> [suffix] [q1,q2,...]")
+    val outDir = args(0)
     val suffix = if (args.length > 1) args(1) else "plan"
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     try graft.queries.RelationalQueries.ensureBucketedTables(spark, sfDir)
     catch { case e: Throwable => System.err.println(s"[explain] prep: ${e.getMessage}") }

@@ -30,4 +30,19 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     all.collect { case (name, qd) if qd.oracle.isDefined => name -> qd.oracle.get }
+
+  /** The session every graft main runs on: `local[cores]` with one
+    * shuffle partition per core, UTC session time zone, no UI, WARN
+    * logging. A conf only one caller needs is set on the returned
+    * session with `spark.conf.set`. */
+  def localSession(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

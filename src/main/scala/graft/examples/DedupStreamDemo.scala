@@ -2,8 +2,6 @@ package graft.examples
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Usage example: the composed streaming near-dup pipeline
  * (`Dedup.nearDupPipeline`) — file-stream ingest → in-horizon claim
@@ -15,16 +13,10 @@ import org.apache.spark.sql.SparkSession
  */
 object DedupStreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the pipeline chains stateful operators — see
-      // Dedup.nearDupKeptStreamStateful's Scaladoc for why this is safe
-      .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(4)
+    // the pipeline chains stateful operators — see
+    // Dedup.nearDupKeptStreamStateful's Scaladoc for why this is safe
+    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_dedup_demo")

@@ -2,7 +2,6 @@ package graft.examples
 
 import java.time.Duration
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.api.{Env, Event}
 import graft.sources.Tables
@@ -20,13 +19,7 @@ object FacadeDemo {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(8)
     import spark.implicits._
 
     // shape the events table into Event[Click]

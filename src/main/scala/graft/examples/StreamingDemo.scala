@@ -3,7 +3,6 @@ package graft.examples
 import java.sql.Timestamp
 import java.time.Duration
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.api.{Env, Event}
 
@@ -16,13 +15,7 @@ import graft.api.{Env, Event}
  */
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(4)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

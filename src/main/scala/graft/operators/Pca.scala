@@ -34,7 +34,7 @@ object Pca {
     * ([[Sampling.hashSample]] on `idCol` — md5-reproducible across
     * runs/engines): the wide-dim front door. The explode costs
     * dim·(dim+1)/2 structs PER ROW (dim 256 → 32,896), so at corpus
-    * scale the fit runs on a rate-capped sample; PcaProbe measures the
+    * scale the fit runs on a rate-capped sample; SCALE.md records the
     * row-linear scaling and the sample's cost floor. */
   def covarianceStatsSampled(df: DataFrame, vecCol: String, idCol: String,
                              rate: Double): DataFrame =

@@ -76,8 +76,8 @@ object DistinctStream {
     * still applies. Trade: the count is approximate (relative standard
     * deviation `rsd`) and the emission carries that name so callers
     * can't mistake it for exact. DistinctStreamSpec bounds the error
-    * against the exact twin; DistinctProbe's `approx` mode shows the
-    * flat state curve. */
+    * against the exact twin; StateBoundSpec pins its state at one row
+    * per open window. */
   def approxStream(events: DataFrame, tsCol: String, idCol: String,
                    windowSec: Long, rsd: Double = 0.01): DataFrame =
     events.select(

@@ -24,6 +24,10 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  test("entry: the flagship query returns rows on sf0.001") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
   test("r1: dimension join broadcasts; no cartesian anywhere") {
     val p = planOf("r1_join_agg")
     assert(p.contains("BroadcastHashJoin"), p.take(2000))
