@@ -168,12 +168,16 @@ final class KeyedGStream[K, T](
    * key ((eventTime, processingTime) order — the declared deterministic
    * order, SURVEY.md §2.3.5/§7.5.3) with O(state) memory.
    * Streaming WITH a watermark (`withWatermark` upstream): events buffer
-   * in the checkpointed store until the watermark passes their event
-   * time, then fold in full (eventTime, processingTime) order — the same
-   * order as batch for any cross-batch arrival pattern
-   * (graft.streaming.StreamingSessions.keyedProcessState), at the cost of
-   * watermark-delay latency. As with Spark's own append-mode windowed
-   * aggregates, events the watermark has NOT yet passed stay buffered:
+   * in the checkpointed store until the watermark strictly passes their
+   * event time, then fold in full (eventTime, processingTime) order — the
+   * same order as batch for any cross-batch arrival pattern, at the cost
+   * of watermark-delay latency. This is the session state machine
+   * (graft.streaming.StreamingSessions) with a gap of 1 µs: events of one
+   * µs form one session, which closes once the watermark is past it (an
+   * event exactly AT the watermark could still gain an equal-time
+   * sibling, since Spark drops only rows strictly older than it). As
+   * with Spark's own append-mode windowed aggregates, events the
+   * watermark has NOT yet passed stay buffered:
    * a bounded run (Trigger.AvailableNow / processAllAvailable) emits only
    * events with eventTime strictly below the final watermark (max event
    * time − delay); the tail at-or-after it remains in state for the next
@@ -188,7 +192,14 @@ final class KeyedGStream[K, T](
   def processState[S, U](init: K => S)(f: (K, Event[T], S) => (S, Seq[Event[U]]))(
       implicit es: Encoder[S], eu: Encoder[Event[U]]): GStream[U] =
     if (ds.isStreaming && GStream.hasWatermark(ds))
-      new GStream(graft.streaming.StreamingSessions.keyedProcessState(ds, sel, init, f))
+      // a session of gap 1 µs closes once the watermark passes its time
+      new GStream(graft.streaming.StreamingSessions(ds, sel, 1L, (e: Event[T]) => e :: Nil,
+        SessionScan.append[Event[T]], (k: K) => Some(init(k)),
+        (k: K, s: SessionScan.Open[List[Event[T]]], u: Option[S]) => {
+          var st = u.get
+          val out = SessionScan.contents(s).flatMap { e => val (s2, o) = f(k, e, st); st = s2; o }
+          (Some(st), out)
+        }))
     else processStatePerBatch(init)(f)
 
   /** [[processState]] restricted to the per-batch streaming branch (and

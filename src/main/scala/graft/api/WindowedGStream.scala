@@ -6,6 +6,7 @@ import java.time.Duration
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions.col
 
+import graft.api.SessionScan.Open
 import graft.streaming.StreamingSessions
 
 /** Closed-session bounds: first and last event time. Exposed instead of
@@ -15,57 +16,83 @@ import graft.streaming.StreamingSessions
   * `lastEventTime + gap`. */
 final case class SessionBounds(start: Timestamp, lastEventTime: Timestamp)
 
-/** Executor-side session assignment: lazily split a time-sorted event
-  * iterator into closed sessions (gaps-and-islands). Standalone object so
-  * task closures capture no Dataset-holding instance. */
-private[api] object SessionScan {
+/** The session rule, written once for every typed facade session
+  * operator: batch over a key's time-sorted events, streaming over a
+  * key's stored and fresh sessions (graft.streaming.StreamingSessions).
+  * Standalone object so task closures capture no Dataset-holding
+  * instance. */
+private[graft] object SessionScan {
 
-  private[api] def micros(ts: Timestamp): Long =
+  /** A session: first and last event time and max processing time, all
+    * µs, and its payload. */
+  final case class Open[P](start: Long, last: Long, maxProc: Long, payload: P)
+
+  def micros(ts: Timestamp): Long =
     ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
 
-  private[api] def tsOf(us: Long): Timestamp = {
+  def tsOf(us: Long): Timestamp = {
     val ms = Math.floorDiv(us, 1000L)
     val t = new Timestamp(ms)
+    // fractional second = the ms remainder plus the µs remainder
     t.setNanos((Math.floorMod(ms, 1000L) * 1000000L + Math.floorMod(us, 1000L) * 1000L).toInt)
     t
   }
 
-  /** Requires eventTime on every event (reference contract — it
-    * `unwrap()`s, /root/reference/src/lib.rs:459). An event extends the
-    * open session while `ts < last + gap`; at `ts >= last + gap` a new
-    * session starts (SURVEY.md §2.3.1-2 — same rule as `session_window`). */
-  def sessions[T](events: Iterator[Event[T]], gapMicros: Long): Iterator[(SessionBounds, Vector[Event[T]])] =
-    new Iterator[(SessionBounds, Vector[Event[T]])] {
-      private val it = events.buffered
-      def hasNext: Boolean = it.hasNext
-      def next(): (SessionBounds, Vector[Event[T]]) = {
-        val first = it.next()
-        var last = first.eventTimeOrThrow
-        val buf = Vector.newBuilder[Event[T]]
-        buf += first
-        var open = true
-        while (open && it.hasNext) {
-          val t = it.head.eventTimeOrThrow
-          if (micros(t) < micros(last) + gapMicros) { buf += it.next(); last = t }
-          else open = false
+  /** The one-event session. Requires eventTime (reference contract — it
+    * `unwrap()`s, /root/reference/src/lib.rs:459). */
+  def open[T, P](e: Event[T], payload: P): Open[P] = {
+    val t = micros(e.eventTimeOrThrow)
+    Open(t, t, micros(e.processingTime), payload)
+  }
+
+  /** Lazily merge sessions sorted by start: the next session extends the
+    * current one while `start < last + gap`, else a new one starts
+    * (SURVEY.md §2.3.1-2 — the same rule as `session_window`; the
+    * reference's add_event bridge-merge, src/lib.rs:520-527, made n-way).
+    * Payloads fold left with `combine`. */
+  def merge[P](it: Iterator[Open[P]], gapMicros: Long, combine: (P, P) => P): Iterator[Open[P]] =
+    new Iterator[Open[P]] {
+      private val in = it.buffered
+      def hasNext: Boolean = in.hasNext
+      def next(): Open[P] = {
+        var s = in.next()
+        while (in.hasNext && in.head.start < s.last + gapMicros) {
+          val n = in.next()
+          s = Open(s.start, math.max(s.last, n.last), math.max(s.maxProc, n.maxProc),
+            combine(s.payload, n.payload))
         }
-        (SessionBounds(first.eventTimeOrThrow, last), buf.result())
+        s
       }
     }
+
+  /** `combine` for a payload of events kept newest first, so a merge
+    * copies only the right-hand session. */
+  def append[E](l: List[E], r: List[E]): List[E] = r ::: l
+
+  /** The events of an [[append]]ed session in (eventTime, processingTime)
+    * order — the batch path's secondary sort. */
+  def contents[T](s: Open[List[Event[T]]]): List[Event[T]] =
+    s.payload.reverse.sortBy(e => (micros(e.eventTimeOrThrow), micros(e.processingTime)))
+
+  def bounds(s: Open[_]): SessionBounds = SessionBounds(tsOf(s.start), tsOf(s.last))
 }
 
 /**
  * Event-time session windows over a keyed stream — the reference's
  * windowing machinery (/root/reference/src/lib.rs:395-905) re-expressed.
  *
- * Batch execution: shuffle by key once, secondary-sort by event time,
- * then a linear gaps-and-islands scan per key — `aggregate` holds O(1)
- * state per open session (the reference eagerly re-reduces each window to
- * one buffered event too, src/lib.rs:673-693), `process` buffers only the
- * current open session. The relational path
- * (`graft.operators.Sessionize`, native `session_window`) is preferred
- * when the aggregate is expressible in columns — Catalyst adds partial
- * aggregation before the shuffle, which this typed fold cannot.
+ * Every operator is one `emit` over `SessionScan.merge`. Batch: shuffle
+ * by key once, secondary-sort by (eventTime, processingTime), then one
+ * lazy merge per key — `aggregate` holds one value per open session (the
+ * reference eagerly re-reduces each window to one buffered event too,
+ * src/lib.rs:673-693), `process` buffers only the current open session.
+ * Streaming: the same merge and `emit` run in one per-key state machine
+ * with watermark close-out (graft.streaming.StreamingSessions); the
+ * stream must then carry a watermark (`GStream.withWatermark`). The
+ * relational path (`graft.operators.Sessionize`, native
+ * `session_window`) is preferred when the aggregate is expressible in
+ * columns — Catalyst adds partial aggregation before the shuffle, which
+ * this typed fold cannot.
  */
 final class WindowedGStream[K, T](
     private val ds: Dataset[Event[T]],
@@ -73,76 +100,61 @@ final class WindowedGStream[K, T](
     private val gap: Duration)(
     implicit kEnc: Encoder[K], etEnc: Encoder[Event[T]]) {
 
-  private def gapMicros: Long = gap.toNanos / 1000L
+  /** Merge each key's sessions, then `emit` each closed one in start
+    * order, threading the per-key user state from `init` (None for the
+    * stateless forms). */
+  private def runSessions[P, S, U](payload: Event[T] => P, combine: (P, P) => P,
+      init: K => Option[S])(emit: (K, Open[P], Option[S]) => (Option[S], IterableOnce[Event[U]]))(
+      implicit eu: Encoder[Event[U]]): GStream[U] = {
+    val g = gap.toNanos / 1000L
+    if (ds.isStreaming)
+      return new GStream(StreamingSessions(ds, sel, g, payload, combine, init, emit))
+    new GStream(ds.groupByKey(sel)
+      .flatMapSortedGroups(col("eventTime").asc, col("processingTime").asc) {
+        (k: K, events: Iterator[Event[T]]) =>
+          var user = init(k)
+          SessionScan.merge(events.map(e => SessionScan.open(e, payload(e))), g, combine)
+            .flatMap { s => val (u, o) = emit(k, s, user); user = u; o }
+      })
+  }
 
   /**
    * Incremental windowed aggregation (reference `aggregate` +
    * `event_reducer`, /root/reference/src/lib.rs:836-880,:639-654): one
    * event per closed session; value = combine-fold of `acc` over the
    * session, processingTime = max over the session, eventTime = last
-   * event's time (the reference's element-wise max rule).
-   *
-   * On a streaming dataset this runs incrementally with per-key state and
-   * watermark close-out (graft.streaming.StreamingSessions); `combine`
-   * must then be associative and commutative, and the stream must carry a
-   * watermark (`GStream.withWatermark`).
+   * event's time (the reference's element-wise max rule). On a streaming
+   * dataset `combine` must be associative and commutative.
    */
   def aggregate[U](acc: T => U)(combine: (U, U) => U)(
-      implicit eu: Encoder[Event[U]]): GStream[U] = {
-    if (ds.isStreaming)
-      return new GStream(StreamingSessions.aggregate(ds, sel, gapMicros, acc, combine))
-    val g = gapMicros
-    val out = ds.groupByKey(sel)
-      .flatMapSortedGroups(col("eventTime").asc, col("processingTime").asc) {
-        (_: K, events: Iterator[Event[T]]) =>
-          SessionScan.sessions(events, g).map { case (bounds, evs) =>
-            val value = evs.iterator.map(e => acc(e.value)).reduce(combine)
-            val maxProc = evs.iterator.map(_.processingTime).maxBy(_.getTime)
-            Event(maxProc, Some(bounds.lastEventTime), value)
-          }
-      }
-    new GStream(out)
-  }
+      implicit eu: Encoder[Event[U]]): GStream[U] =
+    runSessions[U, Unit, U](e => acc(e.value), combine, _ => None) { (_, s, u) =>
+      (u, Iterator(Event(SessionScan.tsOf(s.maxProc), Some(SessionScan.tsOf(s.last)), s.payload)))
+    }
 
   /** Full-window process (reference windowed `process`,
     * /root/reference/src/lib.rs:755-769): user fn sees the closed
-    * session's bounds and its complete, time-ordered contents
-    * (SURVEY.md §2.3.4). */
+    * session's bounds and its complete contents in (eventTime,
+    * processingTime) order (SURVEY.md §2.3.4). */
   def process[U](f: (K, SessionBounds, Seq[Event[T]]) => IterableOnce[Event[U]])(
-      implicit eu: Encoder[Event[U]]): GStream[U] = {
-    if (ds.isStreaming)
-      return new GStream(StreamingSessions.process(ds, sel, gapMicros, f))
-    val g = gapMicros
-    val out = ds.groupByKey(sel)
-      .flatMapSortedGroups(col("eventTime").asc, col("processingTime").asc) {
-        (k: K, events: Iterator[Event[T]]) =>
-          SessionScan.sessions(events, g).flatMap { case (bounds, evs) => f(k, bounds, evs) }
-      }
-    new GStream(out)
-  }
+      implicit eu: Encoder[Event[U]]): GStream[U] =
+    runSessions[List[Event[T]], Unit, U](_ :: Nil, SessionScan.append, _ => None) { (k, s, u) =>
+      (u, f(k, SessionScan.bounds(s), SessionScan.contents(s)))
+    }
 
   /** `process` + per-key state threaded across that key's closed sessions
-    * in time order (reference windowed `process_state`,
+    * in start order (reference windowed `process_state`,
     * /root/reference/src/lib.rs:771-834). On a streaming dataset the state
-    * lives in the checkpointed store and sessions close at the watermark
-    * (graft.streaming.StreamingSessions.processState); sessions of one key
-    * close in start order, so the fold order matches batch. */
+    * lives in the checkpointed store for the whole stream and sessions
+    * close at the watermark, in start order, so the fold order matches
+    * batch. */
   def processState[S, U](init: K => S)(
       f: (K, SessionBounds, Seq[Event[T]], S) => (S, Seq[Event[U]]))(
-      implicit eu: Encoder[Event[U]]): GStream[U] = {
-    if (ds.isStreaming)
-      return new GStream(StreamingSessions.processState(ds, sel, gapMicros, init, f))
-    val g = gapMicros
-    val out = ds.groupByKey(sel)
-      .flatMapSortedGroups(col("eventTime").asc, col("processingTime").asc) {
-        (k: K, events: Iterator[Event[T]]) =>
-          var s = init(k)
-          SessionScan.sessions(events, g).flatMap { case (bounds, evs) =>
-            val (s2, o) = f(k, bounds, evs, s); s = s2; o
-          }
-      }
-    new GStream(out)
-  }
+      implicit eu: Encoder[Event[U]]): GStream[U] =
+    runSessions[List[Event[T]], S, U](_ :: Nil, SessionScan.append, k => Some(init(k))) { (k, s, u) =>
+      val (u2, o) = f(k, SessionScan.bounds(s), SessionScan.contents(s), u.get)
+      (Some(u2), o)
+    }
 
   /**
    * Windowed `process_state` with BOTH the global AND per-key state the

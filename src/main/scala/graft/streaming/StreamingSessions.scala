@@ -1,226 +1,72 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.api.{Event, SessionBounds}
+import graft.api.{Event, SessionScan}
+import graft.api.SessionScan.Open
 
 /**
- * Streaming event-time session windows for the typed facade — the
- * incremental counterpart of the reference's window store + trigger loop
+ * Streaming event-time sessions for the typed facade — the incremental
+ * counterpart of the reference's window store + trigger loop
  * (EventTimeWindowMemoryStore, /root/reference/src/lib.rs:439-612),
- * re-expressed as `flatMapGroupsWithState` with an event-time timeout.
+ * re-expressed as one `flatMapGroupsWithState` with an event-time
+ * timeout. Every streaming facade session operator runs on it: windowed
+ * `aggregate`, `process` and `processState`, and the watermark-ordered
+ * keyed fold (`KeyedGStream.processState`), which is a session of gap
+ * 1 µs.
  *
  * Where the reference keeps ALL keys' windows in one task's HashMap and
  * re-triggers every key on every event (src/lib.rs:788-828), this state
  * lives per key in Spark's checkpointed state store, hash-partitioned by
  * key, and is touched only when that key receives data or its timeout
  * fires — the 100 TB shape. A session closes when the engine watermark
- * passes `lastEventTime + gap`, the same close-out rule as the
- * reference's `trigger` (SURVEY.md §2.3.2) and Spark's own
- * `session_window`.
+ * reaches `last + gap`, the same close-out rule as the reference's
+ * `trigger` (SURVEY.md §2.3.2) and Spark's own `session_window`; since
+ * the engine admits no row older than the watermark, nothing can still
+ * arrive that would merge into a closed session.
  *
  * State is Kryo-encoded (opaque binary in the store — the store never
  * needs columnar access to it). `combine` must be associative and
  * commutative (the reference requires a monoid-ish `Add` the same way,
- * src/lib.rs:836-839): merged sessions fold in interval order, which may
- * differ from strict event order.
+ * src/lib.rs:836-839): stored and fresh sessions fold in start order,
+ * which may differ from strict event order.
  */
 object StreamingSessions {
 
-  /** One open session holding an aggregated value. */
-  final case class OpenAgg[U](startMicros: Long, lastMicros: Long,
-      maxProcMillis: Long, value: U)
+  /** Per-key state: the user's state (None for the stateless forms) plus
+    * the open sessions, sorted by start. */
+  final case class KeyState[S, P](user: Option[S], open: List[Open[P]])
 
-  /** One open session buffering its events (full-window process form). */
-  final case class OpenBuf[T](startMicros: Long, lastMicros: Long,
-      events: List[Event[T]])
-
-  private[streaming] def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-
-  private[streaming] def tsOf(us: Long): Timestamp = {
-    val ms = Math.floorDiv(us, 1000L)
-    val t = new Timestamp(ms)
-    // fractional second = the ms remainder plus the µs remainder
-    t.setNanos((Math.floorMod(ms, 1000L) * 1000000L + Math.floorMod(us, 1000L) * 1000L).toInt)
-    t
-  }
-
-  /** Merge-sweep over sessions sorted by start: intervals [start, last+gap)
-    * that touch are one session (the reference's add_event bridge-merge,
-    * src/lib.rs:520-527, generalized to n-way). */
-  private[streaming] def mergeAgg[U](sessions: List[OpenAgg[U]], gapMicros: Long,
-      combine: (U, U) => U): List[OpenAgg[U]] =
-    sessions.sortBy(_.startMicros).foldLeft(List.empty[OpenAgg[U]]) { (acc, s) =>
-      acc match {
-        case h :: t if s.startMicros < h.lastMicros + gapMicros =>
-          OpenAgg(h.startMicros, math.max(h.lastMicros, s.lastMicros),
-            math.max(h.maxProcMillis, s.maxProcMillis), combine(h.value, s.value)) :: t
-        case _ => s :: acc
-      }
-    }.reverse
-
-  private[streaming] def mergeBuf[T](sessions: List[OpenBuf[T]], gapMicros: Long): List[OpenBuf[T]] =
-    sessions.sortBy(_.startMicros).foldLeft(List.empty[OpenBuf[T]]) { (acc, s) =>
-      acc match {
-        case h :: t if s.startMicros < h.lastMicros + gapMicros =>
-          OpenBuf(h.startMicros, math.max(h.lastMicros, s.lastMicros),
-            h.events ::: s.events) :: t
-        case _ => s :: acc
-      }
-    }.reverse
-
-  /** Streaming counterpart of WindowedGStream.aggregate. The input stream
-    * must carry a watermark on `eventTime` (GStream.withWatermark). */
-  def aggregate[K, T, U](ds: Dataset[Event[T]], sel: Event[T] => K, gapMicros: Long,
-      acc: T => U, combine: (U, U) => U)(
+  /** Merge the key's stored and fresh sessions (`SessionScan.merge`),
+    * then close every session with `last + gap <= watermark` in start
+    * order: `emit` sees each one and threads the user state from `init`.
+    * The key's state is removed once it holds neither an open session nor
+    * user state. The input stream must carry a watermark on `eventTime`
+    * (GStream.withWatermark). */
+  def apply[K, T, P, S, U](ds: Dataset[Event[T]], sel: Event[T] => K, gapMicros: Long,
+      payload: Event[T] => P, combine: (P, P) => P, init: K => Option[S],
+      emit: (K, Open[P], Option[S]) => (Option[S], IterableOnce[Event[U]]))(
       implicit kEnc: Encoder[K], eu: Encoder[Event[U]]): Dataset[Event[U]] = {
-    implicit val stateEnc: Encoder[List[OpenAgg[U]]] = Encoders.kryo[List[OpenAgg[U]]]
+    implicit val stateEnc: Encoder[KeyState[S, P]] = Encoders.kryo[KeyState[S, P]]
     ds.groupByKey(sel).flatMapGroupsWithState(
       OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (_: K, events: Iterator[Event[T]], gs: GroupState[List[OpenAgg[U]]]) =>
-        val fresh = events.map { e =>
-          val t = micros(e.eventTimeOrThrow)
-          OpenAgg(t, t, e.processingTime.getTime, acc(e.value))
-        }.toList
-        val merged = mergeAgg((if (gs.exists) gs.get else Nil) ::: fresh, gapMicros, combine)
-        val wmMicros = gs.getCurrentWatermarkMs() * 1000L
-        val (closed, open) = merged.partition(_.lastMicros + gapMicros <= wmMicros)
-        if (open.isEmpty) gs.remove()
+      (k: K, events: Iterator[Event[T]], gs: GroupState[KeyState[S, P]]) =>
+        val prev = if (gs.exists) gs.get else KeyState[S, P](init(k), Nil)
+        val fresh = events.map(e => SessionScan.open(e, payload(e))).toList
+        val wmMs = gs.getCurrentWatermarkMs()
+        val (closed, open) = SessionScan
+          .merge((prev.open ::: fresh).sortBy(_.start).iterator, gapMicros, combine).toList
+          .partition(_.last + gapMicros <= wmMs * 1000L)
+        var user = prev.user
+        val out = closed.flatMap { s => val (u, o) = emit(k, s, user); user = u; o }
+        if (open.isEmpty && user.isEmpty) gs.remove()
         else {
-          gs.update(open)
-          gs.setTimeoutTimestamp(math.max(
-            open.map(s => s.lastMicros + gapMicros).min / 1000L,
-            gs.getCurrentWatermarkMs() + 1L))
+          gs.update(KeyState(user, open))
+          // fires at the first watermark (ms) with minClose <= watermark
+          if (open.nonEmpty) gs.setTimeoutTimestamp(math.max(
+            Math.floorDiv(open.map(_.last).min + gapMicros - 1L, 1000L), wmMs + 1L))
         }
-        closed.sortBy(_.startMicros).iterator.map(s =>
-          Event(new Timestamp(s.maxProcMillis), Some(tsOf(s.lastMicros)), s.value))
-    }
-  }
-
-  /** Per-key state for [[processState]]: the user's cross-session state
-    * (None until first touched) plus the open session buffers. */
-  final case class KeyedWindowState[S, T](user: Option[S], open: List[OpenBuf[T]])
-
-  /** Streaming counterpart of WindowedGStream.processState (reference
-    * windowed `process_state`, /root/reference/src/lib.rs:771-834): `f`
-    * sees each CLOSED session's full time-ordered contents plus per-key
-    * state threaded across that key's sessions.
-    *
-    * Sessions of one key close in start order (disjoint intervals ≥ gap
-    * apart close exactly when the watermark passes `last + gap`), so the
-    * state fold order is deterministic across any batch arrival pattern.
-    * Unlike [[process]], the user state outlives every session: state is
-    * kept (not removed) when no session is open, matching the reference's
-    * per-key HashMap that lives for the whole stream. */
-  def processState[K, T, S, U](ds: Dataset[Event[T]], sel: Event[T] => K, gapMicros: Long,
-      init: K => S, f: (K, SessionBounds, Seq[Event[T]], S) => (S, Seq[Event[U]]))(
-      implicit kEnc: Encoder[K], eu: Encoder[Event[U]]): Dataset[Event[U]] = {
-    implicit val stateEnc: Encoder[KeyedWindowState[S, T]] = Encoders.kryo[KeyedWindowState[S, T]]
-    ds.groupByKey(sel).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (k: K, events: Iterator[Event[T]], gs: GroupState[KeyedWindowState[S, T]]) =>
-        val prev = if (gs.exists) gs.get else KeyedWindowState[S, T](None, Nil)
-        val fresh = events.map { e =>
-          val t = micros(e.eventTimeOrThrow)
-          OpenBuf(t, t, e :: Nil)
-        }.toList
-        val merged = mergeBuf(prev.open ::: fresh, gapMicros)
-        val wmMicros = gs.getCurrentWatermarkMs() * 1000L
-        val (closed, open) = merged.partition(_.lastMicros + gapMicros <= wmMicros)
-        var s = prev.user.getOrElse(init(k))
-        val out = closed.sortBy(_.startMicros).flatMap { c =>
-          val evs = c.events.sortBy(e => micros(e.eventTimeOrThrow))
-          val (s2, o) = f(k, SessionBounds(tsOf(c.startMicros), tsOf(c.lastMicros)), evs, s)
-          s = s2
-          o
-        }
-        gs.update(KeyedWindowState(Some(s), open))
-        if (open.nonEmpty)
-          gs.setTimeoutTimestamp(math.max(
-            open.map(o => o.lastMicros + gapMicros).min / 1000L,
-            gs.getCurrentWatermarkMs() + 1L))
         out.iterator
-    }
-  }
-
-  /** Per-key state for [[keyedProcessState]]: the user's fold state (None
-    * until first folded into) plus the not-yet-foldable event buffer. */
-  final case class OrderedKeyState[S, T](user: Option[S], buffered: List[Event[T]])
-
-  /**
-   * Watermark-ordered streaming counterpart of `KeyedGStream.processState`
-   * — the keyed twin of [[processState]]'s session close-out. Events
-   * buffer in the state store until the watermark strictly passes their
-   * event time; only then do they fold, in (eventTime, processingTime)
-   * order. Because the engine admits no further rows at-or-before the
-   * watermark once it has passed, nothing can still arrive that sorts
-   * before a folded event — so the fold order equals the batch path's
-   * full sort (`flatMapSortedGroups`) and the reference's in-order
-   * channel (/root/reference/src/lib.rs:183-193) for ANY micro-batch
-   * arrival pattern, where a within-batch sort alone folds a
-   * later-batch-but-earlier-time event late.
-   *
-   * Requires a watermark on `eventTime` (GStream.withWatermark) and an
-   * event time on every event; output latency is the watermark delay.
-   * State is O(events inside the watermark horizon) per key.
-   */
-  def keyedProcessState[K, T, S, U](ds: Dataset[Event[T]], sel: Event[T] => K,
-      init: K => S, f: (K, Event[T], S) => (S, Seq[Event[U]]))(
-      implicit kEnc: Encoder[K], eu: Encoder[Event[U]]): Dataset[Event[U]] = {
-    implicit val stateEnc: Encoder[OrderedKeyState[S, T]] = Encoders.kryo[OrderedKeyState[S, T]]
-    ds.groupByKey(sel).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (k: K, events: Iterator[Event[T]], gs: GroupState[OrderedKeyState[S, T]]) =>
-        val prev = if (gs.exists) gs.get else OrderedKeyState[S, T](None, Nil)
-        val all = prev.buffered ::: events.toList
-        val wmMicros = gs.getCurrentWatermarkMs() * 1000L
-        // strict <: an event exactly AT the watermark could still gain an
-        // equal-time sibling in a later batch (Spark drops only rows
-        // strictly older than the watermark), so it stays buffered
-        val (ready, pending) = all.partition(e => micros(e.eventTimeOrThrow) < wmMicros)
-        var s = prev.user.getOrElse(init(k))
-        val out = ready
-          .sortBy(e => (micros(e.eventTimeOrThrow), e.processingTime.getTime))
-          .flatMap { e => val (s2, o) = f(k, e, s); s = s2; o }
-        gs.update(OrderedKeyState(Some(s), pending))
-        if (pending.nonEmpty)
-          gs.setTimeoutTimestamp(math.max(
-            pending.map(e => micros(e.eventTimeOrThrow)).min / 1000L,
-            gs.getCurrentWatermarkMs() + 1L))
-        out.iterator
-    }
-  }
-
-  /** Streaming counterpart of WindowedGStream.process: emits via `f` per
-    * closed session with the full, time-ordered window contents. */
-  def process[K, T, U](ds: Dataset[Event[T]], sel: Event[T] => K, gapMicros: Long,
-      f: (K, SessionBounds, Seq[Event[T]]) => IterableOnce[Event[U]])(
-      implicit kEnc: Encoder[K], eu: Encoder[Event[U]]): Dataset[Event[U]] = {
-    implicit val stateEnc: Encoder[List[OpenBuf[T]]] = Encoders.kryo[List[OpenBuf[T]]]
-    ds.groupByKey(sel).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (k: K, events: Iterator[Event[T]], gs: GroupState[List[OpenBuf[T]]]) =>
-        val fresh = events.map { e =>
-          val t = micros(e.eventTimeOrThrow)
-          OpenBuf(t, t, e :: Nil)
-        }.toList
-        val merged = mergeBuf((if (gs.exists) gs.get else Nil) ::: fresh, gapMicros)
-        val wmMicros = gs.getCurrentWatermarkMs() * 1000L
-        val (closed, open) = merged.partition(_.lastMicros + gapMicros <= wmMicros)
-        if (open.isEmpty) gs.remove()
-        else {
-          gs.update(open)
-          gs.setTimeoutTimestamp(math.max(
-            open.map(s => s.lastMicros + gapMicros).min / 1000L,
-            gs.getCurrentWatermarkMs() + 1L))
-        }
-        closed.sortBy(_.startMicros).iterator.flatMap { s =>
-          val evs = s.events.sortBy(e => micros(e.eventTimeOrThrow))
-          f(k, SessionBounds(tsOf(s.startMicros), tsOf(s.lastMicros)), evs)
-        }
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.time.Instant
+import java.time.{Duration, Instant}
 
 import scala.util.Random
 
@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryProgress
 import graft.TestSpark
+import graft.api.{Env, Event}
 import graft.operators.Dedup
 
 /**
@@ -186,5 +187,38 @@ class StateBoundSpec extends AnyFunSuite {
     assert(claim == want)
     assert(claim.last < firstClaim.length, s"claim state ${claim.last} of ${firstClaim.length}")
     assert(claim(5) <= claim(4) && claim(4) <= claim(3), s"claim state grew: $claim")
+  }
+
+  test("facade sessions hold the keys with an open session, processState every key it touched") {
+    // batch b spans minutes [30b, 30b + 30); keys 0-7 send three events
+    // in every batch, keys 8-11 only in batch 0, so their sessions close
+    // once the watermark passes their last event + gap. The stateless
+    // forms then drop the key; both processState forms keep its state.
+    val gapMs = 10 * 60000L
+    val batches = (0 until 5).map { b =>
+      for (k <- 0 until (if (b == 0) 12 else 8); j <- 0 until 3)
+        yield Event.at(k.toLong, new Timestamp(t0 + (b * 30L + (7 * k + 11 * j) % 30) * 60000L))
+    }
+    def keyed(in: DataFrame) = Env(spark).fromDataset(in.as[Event[Long]])
+      .withWatermark("5 minutes").keyBy(_.value)
+    def window(in: DataFrame) = keyed(in).window(Duration.ofMillis(gapMs))
+    val forms = Seq[(String, Boolean, DataFrame => DataFrame)](
+      ("aggregate", false, in => window(in).aggregate(identity[Long])(_ + _).ds.toDF()),
+      ("process", false, in => window(in).process((_, _, evs) => evs.take(1)).ds.toDF()),
+      ("windowed processState", true, in => window(in).processState((_: Long) => 0L)(
+        (_, _, evs, n) => (n + 1, evs.take(1))).ds.toDF()),
+      ("keyed processState", true, in => keyed(in).processState((_: Long) => 0L)(
+        (_, e, n) => (n + 1, Seq(e))).ds.toDF()))
+    forms.foreach { case (name, keepsState, build) =>
+      val progress = replay(batches, "processingTime", "eventTime", "value")(build)
+      val got = progress.map(stateRows(_, "flatMapGroupsWithState"))
+      val want = progress.zipWithIndex.map { case (p, b) =>
+        val lastMs = batches.take(b + 1).flatten.groupBy(_.value).values
+          .map(_.map(_.eventTime.get.getTime).max)
+        (if (keepsState) lastMs.size else lastMs.count(_ + gapMs > watermarkMs(p))).toLong
+      }
+      assert(got == want, name)
+      assert(if (keepsState) got.forall(_ == 12) else got.last == 8 && got.head == 12, name)
+    }
   }
 }

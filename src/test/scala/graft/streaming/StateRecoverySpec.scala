@@ -7,7 +7,7 @@ import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.streaming.Trigger
 import graft.TestSpark
 import graft.TestSpark.{withChainCheckOff, withRocksDb}
-import graft.api.{Env, Event}
+import graft.api.{Env, Event, GStream}
 
 /**
  * Checkpoint recovery: a streaming facade query stopped and restarted
@@ -131,5 +131,113 @@ class StateRecoverySpec extends AnyFunSuite {
 
   test("keyed state survives a restart from the checkpoint (flatMapGroupsWithState + RocksDB)") {
     withRocksDb { recoveryScenario("rocksdb") }
+  }
+
+  /** A restart in the middle of a window: run 1 leaves sessions (or
+    * not-yet-foldable events) open in the state store; run 2, on the
+    * same checkpoint, adds `run2` and a closer at 12:00 whose watermark
+    * releases everything before it. Returns the output after run 1, the
+    * output after run 2 and the batch result over all events, the
+    * closer's own output left out. */
+  private def restartMidWindow[V](tag: String, run1: Seq[Event[Long]], run2: Seq[Event[Long]])(
+      build: GStream[Long] => GStream[V])(
+      implicit enc: Encoder[Event[V]]): (Set[(Timestamp, V)], Set[(Timestamp, V)], Set[(Timestamp, V)]) = {
+    val root = java.nio.file.Files.createTempDirectory(s"graft_midwindow_$tag")
+      .toFile.getAbsolutePath
+    val src = s"$root/src"; val ckpt = s"$root/ckpt"; val out = s"$root/out"
+    val closer = Timestamp.valueOf("2024-01-01 12:00:00")
+    def pipeline(ds: org.apache.spark.sql.Dataset[Event[Long]]) =
+      build(Env(spark).fromDataset(ds).withWatermark("20 minutes"))
+    def rows(evs: Seq[Event[V]]) =
+      evs.filter(_.eventTime.get.before(closer)).map(e => (e.eventTime.get, e.value)).toSet
+    def runOnce(events: Seq[Event[Long]]) = {
+      spark.createDataset(events).write.mode("append").parquet(src)
+      val schema = implicitly[Encoder[Event[Long]]].schema
+      val q = pipeline(spark.readStream.schema(schema).parquet(src).as[Event[Long]])
+        .ds.writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      rows(spark.read.schema(enc.schema).parquet(out).as[Event[V]].collect().toSeq)
+    }
+    val all = run1 ++ run2 :+ Event.at(99L, closer)
+    (runOnce(run1), runOnce(run2 :+ Event.at(99L, closer)),
+      rows(pipeline(spark.createDataset(all)).collectEvents()))
+  }
+
+  private val gap = java.time.Duration.ofMinutes(10)
+
+  /** Key 1's two sessions, 16 minutes apart, stay open through run 1
+    * (watermark 09:56); run 2's 10:08 bridges them into one. */
+  private def aggregateMidWindow(tag: String): Unit = {
+    val (first, all, batch) = restartMidWindow(tag,
+      Seq(ev(1, "2024-01-01 10:00:00"), ev(1, "2024-01-01 10:16:00"), ev(2, "2024-01-01 10:05:00")),
+      Seq(ev(1, "2024-01-01 10:08:00"))) {
+      _.keyBy(_.value).window(gap).aggregate(v => (v, 1L))((a, b) => (a._1, a._2 + b._2))
+    }
+    assert(first.isEmpty, s"run 1: $first")
+    assert(batch == Set((Timestamp.valueOf("2024-01-01 10:16:00"), (1L, 3L)),
+      (Timestamp.valueOf("2024-01-01 10:05:00"), (2L, 1L))), s"batch: $batch")
+    assert(all == batch)
+  }
+
+  /** As [[aggregateMidWindow]], plus sessions at 09:00 that close in run
+    * 1: the bridged session after the restart is key 1's second, and key
+    * 3, with no session open across the restart, still counts on. */
+  private def processStateMidWindow(tag: String): Unit = {
+    val (first, all, batch) = restartMidWindow(tag,
+      Seq(ev(1, "2024-01-01 09:00:00"), ev(1, "2024-01-01 10:00:00"), ev(1, "2024-01-01 10:16:00"),
+        ev(2, "2024-01-01 10:05:00"), ev(3, "2024-01-01 09:00:00")),
+      Seq(ev(1, "2024-01-01 10:08:00"), ev(3, "2024-01-01 10:30:00"))) {
+      _.keyBy(_.value).window(gap).processState((_: Long) => 0L) { (k, _, evs, n) =>
+        (n + 1, Seq(evs.head.withValue((k, n, evs.size.toLong))))
+      }
+    }
+    assert(first == Set((Timestamp.valueOf("2024-01-01 09:00:00"), (1L, 0L, 1L)),
+      (Timestamp.valueOf("2024-01-01 09:00:00"), (3L, 0L, 1L))), s"run 1: $first")
+    assert(batch.contains((Timestamp.valueOf("2024-01-01 10:00:00"), (1L, 1L, 3L))), s"batch: $batch")
+    assert(batch.contains((Timestamp.valueOf("2024-01-01 10:30:00"), (3L, 1L, 1L))), s"batch: $batch")
+    assert(all == batch)
+  }
+
+  /** Run 1's watermark (10:10) folds only 10:00 and 10:05; 10:10 and
+    * 10:30 stay buffered and must fold after run 2's 10:20. */
+  private def keyedMidWindow(tag: String): Unit = {
+    val (first, all, batch) = restartMidWindow(tag,
+      Seq(ev(1, "2024-01-01 10:00:00"), ev(1, "2024-01-01 10:10:00"), ev(1, "2024-01-01 10:30:00"),
+        ev(2, "2024-01-01 10:05:00")),
+      Seq(ev(1, "2024-01-01 10:20:00"))) {
+      _.keyBy(_.value).processState((_: Long) => 0L) { (k, e, n) =>
+        (n + 1, Seq(e.withValue((k, n + 1))))
+      }
+    }
+    assert(first == Set((Timestamp.valueOf("2024-01-01 10:00:00"), (1L, 1L)),
+      (Timestamp.valueOf("2024-01-01 10:05:00"), (2L, 1L))), s"run 1: $first")
+    assert(batch.contains((Timestamp.valueOf("2024-01-01 10:30:00"), (1L, 4L))), s"batch: $batch")
+    assert(all == batch)
+  }
+
+  test("windowed aggregate resumes sessions left open by a restart (default provider)") {
+    aggregateMidWindow("agg")
+  }
+
+  test("windowed aggregate resumes sessions left open by a restart (RocksDB)") {
+    withRocksDb { aggregateMidWindow("agg_rocksdb") }
+  }
+
+  test("windowed processState resumes sessions left open by a restart (default provider)") {
+    processStateMidWindow("wps")
+  }
+
+  test("windowed processState resumes sessions left open by a restart (RocksDB)") {
+    withRocksDb { processStateMidWindow("wps_rocksdb") }
+  }
+
+  test("watermarked keyed processState resumes its buffered events after a restart (default provider)") {
+    keyedMidWindow("keyed")
+  }
+
+  test("watermarked keyed processState resumes its buffered events after a restart (RocksDB)") {
+    withRocksDb { keyedMidWindow("keyed_rocksdb") }
   }
 }

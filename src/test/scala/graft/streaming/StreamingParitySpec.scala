@@ -4,9 +4,10 @@ import java.sql.Timestamp
 import java.time.Duration
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.TestSpark
-import graft.api.{Env, Event}
+import graft.api.{Env, Event, GStream}
 
 /**
  * Streaming/batch duality (SURVEY.md §7.4): the same facade pipeline over
@@ -112,8 +113,8 @@ class StreamingParitySpec extends AnyFunSuite {
 
   test("watermarked keyed processState folds across batches in event-time order") {
     // batch 2 delivers an event whose time falls BETWEEN batch 1's two
-    // events: the watermark-buffered path (StreamingSessions
-    // .keyedProcessState) must fold it in full event-time order — the
+    // events: the watermark-buffered path (StreamingSessions, sessions
+    // of 1 µs) must fold it in full event-time order — the
     // batch path's order — where a per-batch fold would sequence it last.
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event[Long]]
@@ -365,5 +366,49 @@ class StreamingParitySpec extends AnyFunSuite {
       val fired = spark.table("s_proc").as[Event[Seq[Long]]].collect().toSeq
       assert(fired.map(_.value).contains(Seq(1L, 2L, 3L)), s"got $fired")
     } finally query.stop()
+  }
+
+  /** Runs `build` over `batches`, one micro-batch each, then two closer
+    * batches at 14:00 and 15:00, and returns what closed before 14:00. */
+  private def streamed[V](name: String, batches: Seq[Seq[Event[Long]]])(
+      build: Dataset[Event[Long]] => GStream[V])(implicit enc: Encoder[Event[V]]): Seq[Event[V]] = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Event[Long]]
+    val query = build(input.toDS()).ds
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try {
+      (batches :+ Seq(ev(100, "2009-10-11 14:00:00")) :+ Seq(ev(101, "2009-10-11 15:00:00")))
+        .foreach { b => input.addData(b); query.processAllAvailable() }
+      spark.table(name).as[Event[V]].collect().toSeq
+        .filter(_.eventTime.get.before(Timestamp.valueOf("2009-10-11 14:00:00")))
+    } finally query.stop()
+  }
+
+  test("streaming windowed process orders equal event times by processing time, as batch") {
+    // A arrives first but was processed later: both paths deliver [B, A]
+    val a = Event(Timestamp.valueOf("2009-10-11 10:05:00"),
+      Some(Timestamp.valueOf("2009-10-11 10:00:00")), 1L)
+    val b = Event(Timestamp.valueOf("2009-10-11 10:01:00"),
+      Some(Timestamp.valueOf("2009-10-11 10:00:00")), 2L)
+    def ids(ds: Dataset[Event[Long]]) = Env(spark).fromDataset(ds)
+      .withWatermark("10 minutes").keyBy(_ => "k").window(Duration.ofMinutes(10))
+      .process((_, _, evs) => Seq(evs.head.withValue(evs.map(_.value))))
+    val batch = ids(spark.createDataset(Seq(a, b))).collectValues()
+    val stream = streamed[Seq[Long]]("s_ties", Seq(Seq(a), Seq(b)))(ids).map(_.value)
+    assert(batch == Seq(Seq(2L, 1L)))
+    assert(stream == batch)
+  }
+
+  test("windowed aggregate keeps the session's max processing time to the µs, batch and stream") {
+    val a = Event(Timestamp.valueOf("2009-10-11 12:00:00.0005"),
+      Some(Timestamp.valueOf("2009-10-11 12:00:01")), 1L)
+    val b = Event(Timestamp.valueOf("2009-10-11 12:00:00.0009"),
+      Some(Timestamp.valueOf("2009-10-11 12:00:02")), 2L)
+    def agg(ds: Dataset[Event[Long]]) = Env(spark).fromDataset(ds)
+      .withWatermark("0 seconds").keyBy(_ => "k").window(Duration.ofMinutes(10))
+      .aggregate(identity[Long])(_ + _)
+    val want = Event(b.processingTime, b.eventTime, 3L)
+    assert(agg(spark.createDataset(Seq(a, b))).collectEvents() == Seq(want))
+    assert(streamed[Long]("s_proc_us", Seq(Seq(a, b)))(agg) == Seq(want))
   }
 }

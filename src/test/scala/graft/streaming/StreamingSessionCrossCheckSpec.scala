@@ -10,8 +10,8 @@ import graft.api.{Env, Event}
 
 /**
  * Randomized cross-check of the incremental streaming session
- * implementation (StreamingSessions merge-sweep + timeout state machine)
- * against the batch gaps-and-islands scan: the same 400 random events,
+ * implementation (StreamingSessions: SessionScan.merge over stored and
+ * fresh sessions + timeout state machine) against the batch path: the same 400 random events,
  * delivered out of order across four micro-batches under a watermark
  * delay larger than the whole time span (so nothing is dropped late),
  * must produce the identical closed-session aggregates once a far-future
@@ -140,8 +140,8 @@ class StreamingSessionCrossCheckSpec extends AnyFunSuite {
   }
 
   test("watermarked keyed processState equals batch fold on random multi-batch input") {
-    // the watermark-buffered keyed fold (StreamingSessions
-    // .keyedProcessState): 400 random events shuffled into 4 micro-batches
+    // the watermark-buffered keyed fold (StreamingSessions, sessions of
+    // 1 µs): 400 random events shuffled into 4 micro-batches
     // must fold per key in the same (eventTime, processingTime) order the
     // batch path sorts by — per-key running counts attach to the same
     // events regardless of arrival pattern.
