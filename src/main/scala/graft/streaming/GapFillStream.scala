@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /**
@@ -28,8 +27,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * Scale shape: state per key = the running (nextBucket, cum, zeroRun)
  * counters plus pending counts for buckets the watermark has not
  * passed — bounded by the watermark delay ÷ bucketSec, NOT by history.
- * One `flatMapGroupsWithState` event-time timeout per key, re-armed at
- * each bucket boundary around the pure [[absorb]]/[[release]] core.
+ * The bound holds in every micro-batch: the pure [[absorb]]/[[release]]
+ * core runs on the [[WatermarkKernel]], which releases a key on every
+ * call, so a key with data in every batch emits its closed buckets as
+ * the watermark passes them, not only once its data stops. A row with a
+ * null event time belongs to no bucket and is dropped before the
+ * stateful stage.
  */
 object GapFillStream {
 
@@ -38,10 +41,9 @@ object GapFillStream {
   final case class GapState(next: Long, cum: Long, zeroRun: Long,
                             pending: Map[Long, Long])
 
-  /** Fold arriving bucket indexes into the state. Buckets behind `next`
-    * arrive only when the engine let a row lag the watermark past an
-    * already-emitted bucket — dropped, matching the watermark
-    * contract everywhere else in the streaming layer. */
+  /** Fold arriving bucket indexes into the state. A bucket behind `next`
+    * is already emitted and is dropped; in a stream none arrives, since
+    * Spark drops rows at or behind the watermark first. */
   def absorb(st: Option[GapState], buckets: Iterator[Long]): Option[GapState] = {
     var s = st
     buckets.foreach { b =>
@@ -75,6 +77,9 @@ object GapFillStream {
     (out.result(), if (retired) None else Some(s))
   }
 
+  /** The first watermark (ms) at which [[release]] emits: the end of bucket `next`. */
+  def nextClose(g: GapState, bucketMs: Long): Long = (g.next + 1) * bucketMs
+
   private val outSchema = StructType(Seq(
     StructField("key", StringType), StructField("bucket", LongType),
     StructField("n_events", LongType), StructField("cum_events", LongType)))
@@ -91,38 +96,17 @@ object GapFillStream {
     import org.apache.spark.sql.functions._
     val bucketMs = bucketSec * 1000L
     val idle = idleTimeoutBuckets
-    // tsCol stays a top-level attribute: the watermark tag must survive
-    // into the stateful stage's input schema (see NearDupState.apply)
-    val rows = events.select(col(keyCol).cast("string").as("key"),
+    val rows = events.filter(col(tsCol).isNotNull).select(col(keyCol).cast("string").as("key"),
       expr(s"unix_timestamp($tsCol) div $bucketSec").as("bucket"), col(tsCol))
-    val outEnc = Encoders.row(outSchema)
     implicit val strEnc = Encoders.STRING
-    val stEnc = Encoders.kryo[GapState]
-    rows.groupByKey((r: Row) => r.getString(0))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, it: Iterator[Row], gs: GroupState[GapState]) =>
-          if (gs.hasTimedOut) {
-            val (out, next) = release(gs.get, gs.getCurrentWatermarkMs(),
-              bucketMs, idle)
-            next match {
-              case Some(g) =>
-                gs.update(g)
-                gs.setTimeoutTimestamp(math.max((g.next + 1) * bucketMs,
-                  gs.getCurrentWatermarkMs() + 1))
-              case None => gs.remove()
-            }
-            out.iterator.map { case (b, n, c) => Row(key, b, n, c) }
-          } else {
-            val prev = if (gs.exists) Some(gs.get) else None
-            absorb(prev, it.map(_.getLong(1))).foreach { g =>
-              gs.update(g)
-              // re-arm on EVERY invocation (Spark clears a group's
-              // timeout whenever its function fires)
-              gs.setTimeoutTimestamp(math.max((g.next + 1) * bucketMs,
-                gs.getCurrentWatermarkMs() + 1))
-            }
-            Iterator.empty[Row]
-          }
-      }(stEnc, outEnc)
+    implicit val outEnc = Encoders.row(outSchema)
+    WatermarkKernel(rows.groupByKey((r: Row) => r.getString(0)))(
+      (_: String, st: Option[GapState], it: Iterator[Row]) =>
+        (absorb(st, it.map(_.getLong(1))), Iterator.empty[Row]),
+      (key: String, g: GapState, wm: Long) => {
+        val (out, next) = release(g, wm, bucketMs, idle)
+        (next, out.iterator.map { case (b, n, c) => Row(key, b, n, c) })
+      },
+      (_: String, g: GapState) => nextClose(g, bucketMs))
   }
 }

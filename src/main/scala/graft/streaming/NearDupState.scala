@@ -14,14 +14,6 @@ import org.apache.spark.sql.types._
  * first-arrival-wins, the scalable form of the reference's keyed-state
  * pattern (/root/reference/src/lib.rs:323-361).
  *
- * Everything here is EVENT-time driven. Processing-time timeouts/TTL
- * are deliberately avoided: a stateful operator with processing-time
- * semantics reports `shouldRunAnotherBatch=true` unconditionally, so a
- * zero-interval trigger busy-loops empty micro-batches re-executing the
- * whole plan (measured: >21k stages in 13 min on a 6-row test stream).
- * Event-time timers fire only on watermark advance — the engine stays
- * idle between arrivals, exactly like Spark's own windowed aggregates.
- *
  * Two keyed stateful stages, both shuffling on narrow string keys
  * (never on document text), downstream of an exact-dup
  * `dropDuplicatesWithinWatermark` on the full signature (which is what
@@ -33,7 +25,8 @@ import org.apache.spark.sql.types._
  *    owner; every row reports whether its document is that owner.
  *    Ownership lasts `horizonMs` of EVENT time after the owner's own
  *    event time — enforced lazily on access (exact, independent of
- *    batch boundaries) and by an event-time timer for storage eviction.
+ *    batch boundaries) and dropped from the store on the
+ *    [[WatermarkKernel]] once the watermark passes the horizon's end.
  *    Ownership persisting across batches means a near-dup of ANY
  *    in-horizon predecessor loses its shared band — including
  *    predecessors that were themselves dropped, the same transitive
@@ -46,7 +39,7 @@ import org.apache.spark.sql.types._
  *
  * State is bounded: the exact-dedup stage holds one row per in-horizon
  * signature (watermark-evicted by Spark), CLAIM one (owner, eventTime)
- * pair per distinct in-horizon band hash (timer-evicted), RESOLVE
+ * pair per distinct in-horizon band hash (watermark-evicted), RESOLVE
  * nothing. At 100 TB ingest rates state scales with the horizon's
  * distinct-band cardinality, not the corpus — the corpus lives in the
  * static `seenBands` side. Per-invocation memory is bounded by one
@@ -64,23 +57,33 @@ object NearDupState {
     StructField("winner", BooleanType, nullable = false),
     StructField("payload", payload, nullable = false)))
 
-  /** Claim decision: given the stored owner (or null) and this batch's
-    * rows sorted by (ord, sig), compute winner flags and the new owner. Ownership expires `horizonMs` after the
-    * OWNER's event time (micros), so a doc arriving past that is a new
-    * owner, not a loser — exact horizon semantics regardless of when
-    * the eviction timer actually fires. */
-  private def claim(rows: Seq[Row], own0: (String, Long), horizonMs: Long,
-                    outSchema: StructType): (Seq[Row], (String, Long)) = {
+  /** Claim decision: given the stored owner and this batch's rows, sorted
+    * by (ord, sig), compute winner flags and the new owner. Ownership
+    * expires `horizonMs` after the OWNER's event time (micros), so a doc
+    * arriving past that is a new owner, not a loser — exact horizon
+    * semantics regardless of when [[release]] drops the record. */
+  private def claim(rows: Seq[Row], own0: Option[(String, Long)], horizonMs: Long,
+                    outSchema: StructType): (Seq[Row], Option[(String, Long)]) = {
     var own = own0
     val out = rows.sortBy(r => (r.getLong(2), r.getString(1))).map { r =>
       val sig = r.getString(1)
       val ord = r.getLong(2)
-      if (own == null || ord - own._2 > horizonMs * 1000L) own = (sig, ord)
+      if (own.forall(o => ord - o._2 > horizonMs * 1000L)) own = Some((sig, ord))
       new GenericRowWithSchema(
-        Array[Any](sig, ord, own._1 == sig, r.getStruct(3)), outSchema): Row
+        Array[Any](sig, ord, own.get._1 == sig, r.getStruct(3)), outSchema): Row
     }
     (out, own)
   }
+
+  /** Drop the owner once no row still to come (event time past the
+    * watermark) falls within its horizon. */
+  private[streaming] def release(own: (String, Long), wmMs: Long,
+                                 horizonMs: Long): Option[(String, Long)] =
+    if (own._2 + horizonMs * 1000L <= wmMs * 1000L) None else Some(own)
+
+  /** The first watermark (ms) at which [[release]] drops the owner. */
+  private[streaming] def nextClose(own: (String, Long), horizonMs: Long): Long =
+    Math.floorDiv(own._2 - 1L, 1000L) + 1L + horizonMs
 
   /**
    * Wire the stages onto a pre-banded, already exact-deduped frame.
@@ -106,38 +109,22 @@ object NearDupState {
       col("__sigfull"),
       col("__ord"),
       struct(payloadCols.map(col): _*).as("__p"),
-      // the watermarked event-time column must stay a TOP-LEVEL attribute
-      // of the claim stage's input: flatMapGroupsWithState's event-time-
-      // timeout check looks for the watermark tag on the input schema,
-      // and a column packed inside the payload struct loses it
-      col(tsCol))
+      col(tsCol)) // top-level, for the watermark (see WatermarkKernel)
 
-    val horizon = horizonMs // local copy: keep `this` out of FMGWS closures
+    val horizon = horizonMs // local copy: keep `this` out of the closures
     val claimSchema = claimOutSchema(payloadSchema)
-    val claimEnc = Encoders.row(claimSchema)
     val outEnc = Encoders.row(payloadSchema)
     implicit val strEnc = Encoders.STRING
-    val ownEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    // CLAIM: first-arrival-wins per band key; the event-time timeout
-    // evicts the ownership record once the watermark passes its horizon
-    val claimed = rows.groupByKey((r: Row) => r.getString(0))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, it: Iterator[Row], gs: GroupState[(String, Long)]) =>
-          if (gs.hasTimedOut) { gs.remove(); Iterator.empty }
-          else {
-            val before = if (gs.exists) gs.get else null
-            val (out, after) = claim(it.toSeq, before, horizon, claimSchema)
-            if (!(after eq before)) gs.update(after)
-            // re-arm on EVERY invocation, not just on a claim: Spark
-            // clears a group's timeout whenever the function fires for
-            // it, so a loser row arriving for this band would silently
-            // cancel the owner's eviction and leak the state
-            if (gs.exists)
-              gs.setTimeoutTimestamp(math.max(gs.get._2 / 1000L + horizon,
-                gs.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }(ownEnc, claimEnc)
+    implicit val claimEnc = Encoders.row(claimSchema)
+    // CLAIM: first-arrival-wins per band key; the record is dropped once
+    // the watermark passes its horizon
+    val claimed = WatermarkKernel(rows.groupByKey((r: Row) => r.getString(0)))(
+      (_: String, own: Option[(String, Long)], it: Iterator[Row]) => {
+        val (out, after) = claim(it.toSeq, own, horizon, claimSchema)
+        (after, out.iterator)
+      },
+      (_: String, own: (String, Long), wm: Long) => (release(own, wm, horizon), Iterator.empty[Row]),
+      (_: String, own: (String, Long)) => nextClose(own, horizon))
     // RESOLVE holds no state — the stateful-operator form is only the
     // legal way to group a streaming doc's band rows back together
     claimed.groupByKey((r: Row) => r.getString(0))

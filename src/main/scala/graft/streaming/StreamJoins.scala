@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DayTimeIntervalType, StructField, StructType}
 
 /**
@@ -147,7 +146,8 @@ object StreamJoins {
   /** Per-key join state: the rows of each side that can still match. */
   private[streaming] final case class Buffers(left: Array[Pending], right: Array[Pending])
 
-  /** The streaming form: one shuffle on the key, one state store. */
+  /** The streaming form: one shuffle on the key, one state store, on the
+    * [[WatermarkKernel]]. */
   private def intervalJoin(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
                            idCol: String, h: Long, how: String): DataFrame = {
     val (outerLeft, outerRight) = (how != "inner", how == "full_outer")
@@ -160,56 +160,71 @@ object StreamJoins {
         lit(null).cast(bId.dataType).as("b_id"), lit(true).as("is_left"))
       .unionByName(right.select(col(keyCol).cast(key.dataType).as("k"), col(tsCol).as("ts"),
         lit(null).cast(aId.dataType).as("a_id"), col(idCol).as("b_id"), lit(false).as("is_left")))
-    val outSchema = StructType(Seq(
+    implicit val outEnc = Encoders.row(StructType(Seq(
       StructField(keyCol, key.dataType, key.nullable || outerRight),
       StructField("a_id", aId.dataType, aId.nullable || outerRight),
       StructField("a_ts", aTs.dataType, aTs.nullable || outerRight),
       StructField("b_id", bId.dataType, bId.nullable || outerLeft),
-      StructField("b_ts", bTs.dataType, bTs.nullable || outerLeft)))
-    rows.groupBy(col("k"))
-      .as[Row, Row](Encoders.row(StructType(Seq(rows.schema("k")))), Encoders.row(rows.schema))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (k: Row, it: Iterator[Row], gs: GroupState[Buffers]) =>
-          val kv = k.get(0)
-          val out = ArrayBuffer.empty[Row]
-          def lonely(isLeft: Boolean, p: Pending): Unit =
-            if (isLeft && outerLeft) out += Row(kv, p.id, p.ts, null, null)
-            else if (!isLeft && outerRight) out += Row(kv, null, null, p.id, p.ts)
-          val prev = if (gs.exists) gs.get else Buffers(Array.empty, Array.empty)
-          val (newL, newR) = (ArrayBuffer.empty[Pending], ArrayBuffer.empty[Pending])
-          it.foreach { r =>
-            val isLeft = r.getBoolean(4)
-            val ts = r.get(1)
-            val p = new Pending(if (ts == null) 0L else DateTimeUtils.anyToMicros(ts), ts,
-              r.get(if (isLeft) 2 else 3), false)
-            // a null key or time matches nothing: out at once, never buffered
-            if (kv == null || ts == null) lonely(isLeft, p)
-            else (if (isLeft) newL else newR) += p
-          }
-          def pair(a: Pending, b: Pending): Unit =
-            if (a.us < b.us && b.us <= a.us + h) {
-              a.matched = true
-              b.matched = true
-              out += Row(kv, a.id, a.ts, b.id, b.ts)
-            }
-          // new right × (stored + new) left, then new left × stored right
-          for (b <- newR; a <- prev.left.iterator ++ newL) pair(a, b)
-          for (a <- newL; b <- prev.right) pair(a, b)
-          val wm = gs.getCurrentWatermarkMs()
-          val (keepL, dropL) = (prev.left ++ newL).partition(_.us + h >= wm * 1000L)
-          val (keepR, dropR) = (prev.right ++ newR).partition(_.us > wm * 1000L)
-          dropL.foreach(p => if (!p.matched) lonely(isLeft = true, p))
-          dropR.foreach(p => if (!p.matched) lonely(isLeft = false, p))
-          if (keepL.isEmpty && keepR.isEmpty) gs.remove()
-          else {
-            gs.update(Buffers(keepL, keepR))
-            // fires once the watermark passes the earliest eviction time
-            // (re-armed on every call: Spark clears it whenever it fires)
-            gs.setTimeoutTimestamp(math.max(wm,
-              (keepL.iterator.map(p => Math.floorDiv(p.us + h, 1000L)) ++
-                keepR.iterator.map(p => Math.floorDiv(p.us - 1L, 1000L))).min))
-          }
-          out.iterator
-      }(Encoders.kryo[Buffers], Encoders.row(outSchema))
+      StructField("b_ts", bTs.dataType, bTs.nullable || outerLeft))))
+    val join = Interval(h, outerLeft, outerRight)
+    WatermarkKernel(rows.groupBy(col("k"))
+        .as[Row, Row](Encoders.row(StructType(Seq(rows.schema("k")))), Encoders.row(rows.schema)))(
+      (k: Row, st: Option[Buffers], it: Iterator[Row]) => join.absorb(k.get(0), st, it),
+      (k: Row, s: Buffers, wm: Long) => join.release(k.get(0), s, wm),
+      (_: Row, s: Buffers) => join.nextClose(s))
+  }
+
+  /** The interval join's kernel functions: horizon `h` µs, null-padding
+    * unmatched rows on the outer sides. */
+  private[streaming] final case class Interval(h: Long, outerLeft: Boolean, outerRight: Boolean) {
+
+    private def lonely(kv: Any, isLeft: Boolean, p: Pending): Option[Row] =
+      if (isLeft && outerLeft) Some(Row(kv, p.id, p.ts, null, null))
+      else if (!isLeft && outerRight) Some(Row(kv, null, null, p.id, p.ts))
+      else None
+
+    /** Pair the new rows with each other and with the stored buffers,
+      * then buffer them; a row with a null key or time matches nothing
+      * and is out at once. */
+    def absorb(kv: Any, st: Option[Buffers], it: Iterator[Row]): (Option[Buffers], Iterator[Row]) = {
+      val out = ArrayBuffer.empty[Row]
+      val prev = st.getOrElse(Buffers(Array.empty, Array.empty))
+      val (newL, newR) = (ArrayBuffer.empty[Pending], ArrayBuffer.empty[Pending])
+      it.foreach { r =>
+        val isLeft = r.getBoolean(4)
+        val ts = r.get(1)
+        val p = new Pending(if (ts == null) 0L else DateTimeUtils.anyToMicros(ts), ts,
+          r.get(if (isLeft) 2 else 3), false)
+        if (kv == null || ts == null) out ++= lonely(kv, isLeft, p)
+        else (if (isLeft) newL else newR) += p
+      }
+      def pair(a: Pending, b: Pending): Unit =
+        if (a.us < b.us && b.us <= a.us + h) {
+          a.matched = true
+          b.matched = true
+          out += Row(kv, a.id, a.ts, b.id, b.ts)
+        }
+      // new right × (stored + new) left, then new left × stored right
+      for (b <- newR; a <- prev.left.iterator ++ newL) pair(a, b)
+      for (a <- newL; b <- prev.right) pair(a, b)
+      (Some(Buffers(prev.left ++ newL, prev.right ++ newR)), out.iterator)
+    }
+
+    /** Evict a left row once the watermark passes a_ts + horizon, a right
+      * row once it reaches b_ts; an unmatched evicted row is null-padded
+      * on its outer side. */
+    def release(kv: Any, s: Buffers, wmMs: Long): (Option[Buffers], Iterator[Row]) = {
+      val (keepL, dropL) = s.left.partition(_.us + h >= wmMs * 1000L)
+      val (keepR, dropR) = s.right.partition(_.us > wmMs * 1000L)
+      val out = dropL.iterator.filterNot(_.matched).flatMap(lonely(kv, isLeft = true, _)) ++
+        dropR.iterator.filterNot(_.matched).flatMap(lonely(kv, isLeft = false, _))
+      (if (keepL.isEmpty && keepR.isEmpty) None else Some(Buffers(keepL, keepR)), out)
+    }
+
+    /** The first watermark (ms) at which [[release]] evicts a row. */
+    def nextClose(s: Buffers): Long =
+      (s.left.iterator.map(p => Math.floorDiv(p.us + h, 1000L)) ++
+        s.right.iterator.map(p => Math.floorDiv(p.us - 1L, 1000L))).minOption
+        .fold(Long.MaxValue)(_ + 1L)
   }
 }

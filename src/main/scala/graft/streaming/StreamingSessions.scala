@@ -1,35 +1,31 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder}
 import graft.api.{Event, SessionScan}
 import graft.api.SessionScan.Open
 
 /**
  * Streaming event-time sessions for the typed facade — the incremental
  * counterpart of the reference's window store + trigger loop
- * (EventTimeWindowMemoryStore, /root/reference/src/lib.rs:439-612),
- * re-expressed as one `flatMapGroupsWithState` with an event-time
- * timeout. Every streaming facade session operator runs on it: windowed
- * `aggregate`, `process` and `processState`, and the watermark-ordered
- * keyed fold (`KeyedGStream.processState`), which is a session of gap
- * 1 µs.
+ * (EventTimeWindowMemoryStore, its `src/lib.rs:439-612`), on the
+ * [[WatermarkKernel]]. Every streaming facade session operator runs
+ * on it: windowed `aggregate`, `process` and `processState`, and the
+ * watermark-ordered keyed fold (`KeyedGStream.processState`), which is a
+ * session of gap 1 µs.
  *
  * Where the reference keeps ALL keys' windows in one task's HashMap and
  * re-triggers every key on every event (src/lib.rs:788-828), this state
  * lives per key in Spark's checkpointed state store, hash-partitioned by
- * key, and is touched only when that key receives data or its timeout
+ * key, and is touched only when that key receives data or its timer
  * fires — the 100 TB shape. A session closes when the engine watermark
  * reaches `last + gap`, the same close-out rule as the reference's
  * `trigger` (SURVEY.md §2.3.2) and Spark's own `session_window`; since
- * the engine admits no row older than the watermark, nothing can still
+ * the engine admits no row at or behind the watermark, nothing can still
  * arrive that would merge into a closed session.
  *
- * State is Kryo-encoded (opaque binary in the store — the store never
- * needs columnar access to it). `combine` must be associative and
- * commutative (the reference requires a monoid-ish `Add` the same way,
- * src/lib.rs:836-839): stored and fresh sessions fold in start order,
- * which may differ from strict event order.
+ * `combine` must be associative and commutative (the reference requires
+ * a monoid-ish `Add` the same way, src/lib.rs:836-839): stored and fresh
+ * sessions fold in start order, which may differ from strict event order.
  */
 object StreamingSessions {
 
@@ -46,27 +42,30 @@ object StreamingSessions {
   def apply[K, T, P, S, U](ds: Dataset[Event[T]], sel: Event[T] => K, gapMicros: Long,
       payload: Event[T] => P, combine: (P, P) => P, init: K => Option[S],
       emit: (K, Open[P], Option[S]) => (Option[S], IterableOnce[Event[U]]))(
-      implicit kEnc: Encoder[K], eu: Encoder[Event[U]]): Dataset[Event[U]] = {
-    implicit val stateEnc: Encoder[KeyState[S, P]] = Encoders.kryo[KeyState[S, P]]
-    ds.groupByKey(sel).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (k: K, events: Iterator[Event[T]], gs: GroupState[KeyState[S, P]]) =>
-        val prev = if (gs.exists) gs.get else KeyState[S, P](init(k), Nil)
+      implicit kEnc: Encoder[K], eu: Encoder[Event[U]]): Dataset[Event[U]] =
+    WatermarkKernel(ds.groupByKey(sel))(
+      (k: K, st: Option[KeyState[S, P]], events: Iterator[Event[T]]) => {
+        val prev = st.getOrElse(KeyState[S, P](init(k), Nil))
         val fresh = events.map(e => SessionScan.open(e, payload(e))).toList
-        val wmMs = gs.getCurrentWatermarkMs()
-        val (closed, open) = SessionScan
-          .merge((prev.open ::: fresh).sortBy(_.start).iterator, gapMicros, combine).toList
-          .partition(_.last + gapMicros <= wmMs * 1000L)
-        var user = prev.user
-        val out = closed.flatMap { s => val (u, o) = emit(k, s, user); user = u; o }
-        if (open.isEmpty && user.isEmpty) gs.remove()
-        else {
-          gs.update(KeyState(user, open))
-          // fires at the first watermark (ms) with minClose <= watermark
-          if (open.nonEmpty) gs.setTimeoutTimestamp(math.max(
-            Math.floorDiv(open.map(_.last).min + gapMicros - 1L, 1000L), wmMs + 1L))
-        }
-        out.iterator
-    }
+        val open = SessionScan.merge((prev.open ::: fresh).sortBy(_.start).iterator,
+          gapMicros, combine).toList
+        (Some(prev.copy(open = open)), Iterator.empty[Event[U]])
+      },
+      release(gapMicros, emit),
+      (_: K, s: KeyState[S, P]) => nextClose(gapMicros, s))
+
+  /** Close, in start order, the sessions with `last + gap <= watermark`. */
+  private[streaming] def release[K, P, S, U](gapMicros: Long,
+      emit: (K, Open[P], Option[S]) => (Option[S], IterableOnce[Event[U]]))(
+      k: K, s: KeyState[S, P], wmMs: Long): (Option[KeyState[S, P]], Iterator[Event[U]]) = {
+    val (closed, open) = s.open.partition(_.last + gapMicros <= wmMs * 1000L)
+    var user = s.user
+    val out = closed.flatMap { c => val (u, o) = emit(k, c, user); user = u; o }
+    (if (open.isEmpty && user.isEmpty) None else Some(KeyState(user, open)), out.iterator)
   }
+
+  /** The first watermark (ms) with `last + gap <= watermark` for an open session. */
+  private[streaming] def nextClose(gapMicros: Long, s: KeyState[_, _]): Long =
+    if (s.open.isEmpty) Long.MaxValue
+    else Math.floorDiv(s.open.iterator.map(_.last).min + gapMicros - 1L, 1000L) + 1L
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /**
@@ -17,35 +18,25 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * also the honest cost statement: exact streaming top-k holds the full
  * value-count map per OPEN window; state is bounded by (values per
  * window) × (open windows per key horizon), evicted at close, NOT by
- * stream length. The [[GapFillStream]] conventions apply: pure
- * [[merge]]/[[closeWindow]] core, `flatMapGroupsWithState` with an
- * event-time timeout re-armed on every invocation.
+ * stream length. The pure [[merge]]/[[closeWindow]] core runs on the
+ * [[WatermarkKernel]], one body for the exact and the approximate state.
  *
- * THROUGHPUT: state is keyed by `(window_start, shard)` where
- * `shard = pmod(hash(token), shards)` — with hourly windows there are
- * only 1-2 open windows at any moment, so a window-only key would
- * funnel the ENTIRE live token stream through one or two state
- * partitions (one task absorbs the full ingest rate). Sharding the key
- * splits that hot window across `shards` tasks while staying EXACT:
- * the token→shard assignment partitions tokens disjointly, so each
- * token's full in-window count lives in exactly one shard, per-shard
- * counts are the true counts, and the global top-k is contained in the
- * union of per-shard top-k's. Each shard emits its own top-k at close
- * (k·shards candidate rows per window — tiny); [[resolveCandidates]]
- * takes the final k downstream (a trailing batch query or
- * foreachBatch). `shards = 1` (the default) reproduces the original
- * single-key behavior exactly: one candidate set per window IS the
- * final top-k, rank included — TopKStreamSpec pins it row-identical to
- * the batch tumbling + top-k composition.
+ * THROUGHPUT: state is keyed by `(window_start, shard)` with `shard =
+ * pmod(hash(token), shards)`: with hourly windows only 1-2 windows are
+ * open, and a window-only key would funnel the whole live token stream
+ * through one or two tasks. Sharding stays EXACT — tokens partition
+ * disjointly, so per-shard counts are the true counts and the global
+ * top-k is contained in the union of the per-shard top-k's, which each
+ * shard emits at close (k·shards candidate rows per window);
+ * [[resolveCandidates]] takes the final k downstream. `shards = 1` (the
+ * default) emits the final top-k itself, rank included — TopKStreamSpec
+ * pins it row-identical to the batch tumbling + top-k composition.
  *
- * Late rows: group-with-state operators do NOT pre-filter rows behind
- * the watermark, so a straggler for an already-closed-and-emitted
- * window would silently recreate state and later emit a second,
- * partial top-k for the same window. The operator guards: a row whose
- * window has no live state AND whose window end is at or below the
- * current watermark is dropped (the standard beyond-lateness-drop
- * semantics; mirrors GapFillStream's retired-key contract). A late row
- * for a STILL-OPEN window merges normally.
+ * Late rows: Spark drops rows at or behind the watermark before the
+ * stateful stage, so a straggler for a closed and emitted window cannot
+ * revive it (a window closes only once the watermark reaches its end).
+ * A row with a null event time belongs to no window and is dropped
+ * before the stateful stage.
  *
  * Output: (window_start µs, token, cnt, rank 1..k), ties broken by
  * token ascending — a total order, so emissions are deterministic.
@@ -59,19 +50,14 @@ object TopKStream {
     tokens.foldLeft(counts)((m, t) => m.updated(t, m.getOrElse(t, 0L) + 1L))
 
   /**
-   * Approximate per-window state — the documented swap for extreme
-   * per-window cardinality: a count-min sketch (d rows × w counters,
-   * integer-exact updates) plus a CANDIDATE map capped at `cap`
-   * entries. Every arriving token updates the sketch and enters the
-   * candidate map at its current CMS estimate; when the map exceeds
-   * `cap`, the smallest-estimate entries are dropped (classic
-   * sketch + heap heavy hitters). State per open window is
-   * d·w + cap regardless of token cardinality. CMS never
-   * underestimates, so a true heavy hitter's estimate always reaches
-   * the candidate bar — misses need `cap − cap/4` distinct tokens with
-   * higher estimates, impossible for a token above that rank's true
-   * frequency plus the CMS error εN. Seeds are FIXED — emissions stay
-   * deterministic for a given input multiset.
+   * Approximate per-window state for extreme per-window cardinality: a
+   * count-min sketch (d rows × w counters) plus a CANDIDATE map capped
+   * at `cap` entries, each arriving token entering it at its current
+   * CMS estimate (sketch + heap heavy hitters). State per open window is
+   * d·w + cap whatever the token cardinality. CMS never underestimates,
+   * so a miss needs `cap − cap/4` distinct tokens with higher estimates,
+   * impossible for a token above that rank's true frequency plus the
+   * CMS error εN. Seeds are FIXED, so emissions are deterministic.
    */
   final case class CmsState(grid: Vector[Long], candidates: Map[String, Long])
 
@@ -87,20 +73,15 @@ object TopKStream {
     (((h ^ (h >>> 31)) % w + w) % w).toInt
   }
 
-  def cmsEmpty(w: Int): CmsState =
-    CmsState(Vector.fill(CmsD * w)(0L), Map.empty)
+  def cmsEmpty(w: Int): CmsState = CmsState(Vector.fill(CmsD * w)(0L), Map.empty)
 
   /**
-   * Fold a batch of tokens into the sketch + capped candidate map.
-   * The grid copies to a mutable Array ONCE per invocation (not 4
-   * Vector rebuilds per token), and eviction drops to `cap − cap/4`
-   * rather than exactly `cap`: at capacity every unseen token would
-   * otherwise trigger a full O(cap log cap) sort — with the slack the
-   * sort runs once per cap/4 new tokens, amortizing to O(log cap) per
-   * token in exactly the extreme-cardinality regime this operator
-   * exists for. The kept set stays deterministic (total (-est, token)
-   * order), and an evicted token that re-arrives re-enters at its
-   * current CMS estimate, which already includes its earlier counts.
+   * Fold a batch of tokens into the sketch + capped candidate map. The
+   * grid copies to an Array once per call, and eviction drops to
+   * `cap − cap/4`, not `cap`, so the O(cap log cap) sort runs once per
+   * cap/4 new tokens instead of per token. The kept set is deterministic
+   * ((-est, token) order); an evicted token that re-arrives re-enters at
+   * its CMS estimate, which includes its earlier counts.
    */
   def mergeApprox(st: CmsState, tokens: Iterator[String], w: Int, cap: Int): CmsState = {
     val grid = st.grid.toArray
@@ -122,11 +103,6 @@ object TopKStream {
     }
     CmsState(grid.toVector, cand)
   }
-
-  /** Top-k of a closed approximate window: estimate desc, token asc. */
-  def closeWindowApprox(st: CmsState, k: Int): Seq[(String, Long, Long)] =
-    st.candidates.toSeq.sortBy { case (t, c) => (-c, t) }.take(k)
-      .zipWithIndex.map { case ((t, c), i) => (t, c, i + 1L) }
 
   /** Top-k rows of a closed window: count desc, token asc, rank 1..k. */
   def closeWindow(counts: Map[String, Long], k: Int): Seq[(String, Long, Long)] =
@@ -156,20 +132,6 @@ object TopKStream {
       .withColumn("rank", col("rank").cast("long"))
   }
 
-  /** (window_start µs, shard, token, event-time) input projection. */
-  private def project(events: DataFrame, tsCol: String, tokenCol: String,
-                      windowSec: Long, shards: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    events.select(
-      (expr(s"unix_timestamp($tsCol) div $windowSec") * lit(windowSec * 1000000L))
-        .as("window_start"),
-      pmod(hash(col(tokenCol).cast("string")), lit(shards)).cast("int").as("shard"),
-      col(tokenCol).cast("string").as("token"), col(tsCol))
-  }
-
-  private def keyEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt)
-  private def keyOf(r: Row): (Long, Int) = (r.getLong(0), r.getInt(1))
-
   /**
    * Approximate variant of [[apply]] — same output schema and close
    * semantics, `cnt` is the CMS estimate (never an underestimate).
@@ -181,33 +143,9 @@ object TopKStream {
    */
   def approx(events: DataFrame, tsCol: String, tokenCol: String,
              windowSec: Long, k: Int, w: Int = 1024, cap: Int = 256,
-             shards: Int = 1): DataFrame = {
-    val windowMs = windowSec * 1000L
-    val (kk, ww, cc) = (k, w, cap)
-    val rows = project(events, tsCol, tokenCol, windowSec, shards)
-    val outEnc = Encoders.row(outSchema)
-    implicit val ke = keyEnc
-    val stEnc = Encoders.kryo[CmsState]
-    rows.groupByKey(keyOf _)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Long, Int), it: Iterator[Row], gs: GroupState[CmsState]) =>
-          if (gs.hasTimedOut) {
-            val st = gs.get
-            gs.remove()
-            closeWindowApprox(st, kk).iterator.map { case (t, c, r) => Row(key._1, t, c, r) }
-          } else if (!gs.exists &&
-              key._1 / 1000L + windowMs <= gs.getCurrentWatermarkMs()) {
-            Iterator.empty[Row] // late-row guard: closed window, no revival
-          } else {
-            val merged = mergeApprox(if (gs.exists) gs.get else cmsEmpty(ww),
-              it.map(_.getString(2)), ww, cc)
-            gs.update(merged)
-            gs.setTimeoutTimestamp(math.max(key._1 / 1000L + windowMs,
-              gs.getCurrentWatermarkMs() + 1))
-            Iterator.empty[Row]
-          }
-      }(stEnc, outEnc)
-  }
+             shards: Int = 1): DataFrame =
+    topK[CmsState](events, tsCol, tokenCol, windowSec, k, shards, cmsEmpty(w),
+      mergeApprox(_, _, w, cap), _.candidates)
 
   /**
    * Wire the stream: `events` must declare a watermark on `tsCol`.
@@ -217,33 +155,40 @@ object TopKStream {
    * [[resolveCandidates]] for the final k.
    */
   def apply(events: DataFrame, tsCol: String, tokenCol: String,
-            windowSec: Long, k: Int, shards: Int = 1): DataFrame = {
+            windowSec: Long, k: Int, shards: Int = 1): DataFrame =
+    topK[Map[String, Long]](events, tsCol, tokenCol, windowSec, k, shards, Map.empty,
+      merge, identity)
+
+  /** The one body: per (window_start, shard) key, `add` folds the tokens
+    * into the state from `empty`, and the window's top-k of `counts` is
+    * emitted when the watermark reaches its end. */
+  private def topK[S: ClassTag](events: DataFrame, tsCol: String, tokenCol: String,
+      windowSec: Long, k: Int, shards: Int, empty: => S, add: (S, Iterator[String]) => S,
+      counts: S => Map[String, Long]): DataFrame = {
+    import org.apache.spark.sql.functions._
     val windowMs = windowSec * 1000L
-    val kk = k
-    val rows = project(events, tsCol, tokenCol, windowSec, shards)
-    val outEnc = Encoders.row(outSchema)
-    implicit val ke = keyEnc
-    val stEnc = Encoders.kryo[Map[String, Long]]
-    rows.groupByKey(keyOf _)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Long, Int), it: Iterator[Row], gs: GroupState[Map[String, Long]]) =>
-          if (gs.hasTimedOut) {
-            val counts = gs.get
-            gs.remove()
-            closeWindow(counts, kk).iterator.map { case (t, c, r) => Row(key._1, t, c, r) }
-          } else if (!gs.exists &&
-              key._1 / 1000L + windowMs <= gs.getCurrentWatermarkMs()) {
-            Iterator.empty[Row] // late-row guard: closed window, no revival
-          } else {
-            val merged = merge(if (gs.exists) gs.get else Map.empty,
-              it.map(_.getString(2)))
-            gs.update(merged)
-            // re-arm on EVERY invocation (Spark clears a group's timeout
-            // whenever its function fires)
-            gs.setTimeoutTimestamp(math.max(key._1 / 1000L + windowMs,
-              gs.getCurrentWatermarkMs() + 1))
-            Iterator.empty[Row]
-          }
-      }(stEnc, outEnc)
+    val rows = events.filter(col(tsCol).isNotNull).select(
+      (expr(s"unix_timestamp($tsCol) div $windowSec") * lit(windowSec * 1000000L))
+        .as("window_start"),
+      pmod(hash(col(tokenCol).cast("string")), lit(shards)).cast("int").as("shard"),
+      col(tokenCol).cast("string").as("token"), col(tsCol))
+    implicit val keyEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt)
+    implicit val outEnc = Encoders.row(outSchema)
+    WatermarkKernel(rows.groupByKey((r: Row) => (r.getLong(0), r.getInt(1))))(
+      (_: (Long, Int), st: Option[S], it: Iterator[Row]) =>
+        (Some(add(st.getOrElse(empty), it.map(_.getString(2)))), Iterator.empty[Row]),
+      (key: (Long, Int), s: S, wm: Long) => release(key._1, s, wm, windowMs, k, counts),
+      (key: (Long, Int), _: S) => nextClose(key._1, windowMs))
   }
+
+  /** Emit the window's top-k and drop its state once the watermark
+    * reaches the window's end. */
+  private[streaming] def release[S](windowStart: Long, s: S, wmMs: Long, windowMs: Long,
+      k: Int, counts: S => Map[String, Long]): (Option[S], Iterator[Row]) =
+    if (wmMs < nextClose(windowStart, windowMs)) (Some(s), Iterator.empty)
+    else (None, closeWindow(counts(s), k).iterator.map { case (t, c, r) => Row(windowStart, t, c, r) })
+
+  /** The window's end (ms), where [[release]] closes it. */
+  private[streaming] def nextClose(windowStart: Long, windowMs: Long): Long =
+    windowStart / 1000L + windowMs
 }

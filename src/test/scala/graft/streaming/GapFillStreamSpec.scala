@@ -105,6 +105,39 @@ class GapFillStreamSpec extends AnyFunSuite {
     TestSpark.withRocksDb { restartScenario("rocksdb") }
   }
 
+  test("a key with data in every micro-batch is released batch by batch") {
+    // one file per micro-batch, key a has an event at hour 10 + b in file
+    // b. Batch b runs at the watermark of batch b - 1's event (0 s delay),
+    // so from batch 2 on it closes exactly a's bucket 10 + b - 2 — even
+    // though a receives data in that same batch
+    val root = java.nio.file.Files.createTempDirectory("graft_gapfill_backlog")
+      .toFile.getAbsolutePath
+    val src = new java.io.File(s"$root/src")
+    src.mkdirs()
+    (0 until 10).foreach { b =>
+      Seq(("a", t(10 + b))).toDF("k", "ts").coalesce(1).write.parquet(s"$root/tmp$b")
+      val part = new java.io.File(s"$root/tmp$b").listFiles().filter(_.getName.endsWith(".parquet")).head
+      val dst = new java.io.File(src, f"b$b%02d.parquet")
+      assert(part.renameTo(dst))
+      dst.setLastModified(1700000000000L + b * 1000L) // the source reads oldest first
+    }
+    val emitted = scala.collection.mutable.Map.empty[Long, Seq[Long]]
+    val sink: (org.apache.spark.sql.DataFrame, Long) => Unit = (df, id) =>
+      emitted.synchronized { emitted(id) = df.filter(col("key") === "a").select("bucket").as[Long].collect().toSeq }
+    val stream = spark.readStream.schema("k STRING, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", "1").parquet(src.getPath)
+      .withWatermark("ts", "0 seconds")
+    val q = GapFillStream(stream, "k", "ts", 3600L, idleTimeoutBuckets = 0L).writeStream
+      .option("checkpointLocation", s"$root/ckpt").foreachBatch(sink)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 10)
+    (0 until 10).foreach { b =>
+      assert(emitted(b.toLong) == (if (b < 2) Nil else Seq(10L + b - 2)), s"batch $b: $emitted")
+    }
+    assert(emitted.values.flatten.toSeq.sorted == (10L to 18L), s"$emitted")
+  }
+
   test("a retired key revived by new data starts a fresh series") {
     // retire at idleMax=2, then absorb a later bucket: next/cum restart
     val s1 = GapFillStream.absorb(None, Iterator(5L)).get

@@ -58,6 +58,30 @@ class StreamingParitySpec extends AnyFunSuite {
     } finally query.stop()
   }
 
+  test("a session closing just past the watermark fires at the next watermark") {
+    // a's first session closes at 12:10:00.000. Batch 2 runs at the
+    // watermark 12:09:59.999 (b's event), one millisecond before that
+    // close, and its own event 12:10:00.000 opens a second session and
+    // moves the watermark onto the close: the session is due there
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Event[Long]]
+    val sessions = Env(spark).fromDataset(input.toDS())
+      .withWatermark("0 seconds")
+      .keyBy(e => if (e.value < 100) "a" else "b")
+      .window(Duration.ofMinutes(10))
+      .aggregate(identity[Long])(_ + _)
+    val query = sessions.ds
+      .writeStream.format("memory").queryName("s_clamp").outputMode("append").start()
+    try {
+      input.addData(ev(1, "2009-10-11 12:00:00"), ev(100, "2009-10-11 12:09:59.999"))
+      query.processAllAvailable()
+      input.addData(ev(2, "2009-10-11 12:10:00"))
+      query.processAllAvailable()
+      val fired = spark.table("s_clamp").as[Event[Long]].collect().toSeq
+      assert(fired.map(_.value) == Seq(1L), s"got $fired")
+    } finally query.stop()
+  }
+
   test("streaming sessions merge across micro-batches (bridging event)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event[Long]]
