@@ -213,6 +213,7 @@ final class KeyedGStream[K, T](
   private[api] def processStatePerBatch[S, U](init: K => S)(
       f: (K, Event[T], S) => (S, Seq[Event[U]]))(
       implicit es: Encoder[S], eu: Encoder[Event[U]]): GStream[U] = {
+    graft.streaming.CheckpointFiles.install(ds)
     val out =
       if (ds.isStreaming)
         ds.groupByKey(sel).flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {

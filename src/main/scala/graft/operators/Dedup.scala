@@ -525,6 +525,7 @@ object Dedup {
     * watermark; on a batch frame this degenerates to dropDuplicates. */
   def exactKeptStream(docs: DataFrame, textCol: String): DataFrame = {
     val hashed = docs.withColumn("__h", md5(col(textCol)))
+    graft.streaming.CheckpointFiles.install(docs)
     val out = if (docs.isStreaming) hashed.dropDuplicatesWithinWatermark("__h")
               else hashed.dropDuplicates("__h")
     out.drop("__h")
@@ -576,6 +577,7 @@ object Dedup {
   def nearDupKeptStream(docs: DataFrame, textCol: String, seenBands: DataFrame,
                         k: Int = 8, bands: Int = 4, shingleN: Int = 3): DataFrame = {
     val withFull = bandedAgainstSeen(docs, textCol, seenBands, k, bands, shingleN)
+    graft.streaming.CheckpointFiles.install(docs)
     val kept =
       if (docs.isStreaming) withFull.dropDuplicatesWithinWatermark("__sigfull")
       else withFull.dropDuplicates("__sigfull")
@@ -634,8 +636,13 @@ object Dedup {
    * (not horizon-bounded) claim state. Chaining stateful operators requires
    * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled=false`
    * on the session (fail-fast checked here, same contract as
-   * `processStateGlobal`) — safe for this shape because no stage
-   * event-time-filters its input.
+   * `processStateGlobal`). Safe for this shape: the claim stage runs on
+   * the event-time `WatermarkKernel` and so drops rows at or behind the
+   * watermark, but every row reaching it has already passed the same
+   * batch watermark in the `dropDuplicatesWithinWatermark` stage upstream
+   * (which counts a late row in its `numRowsDroppedByWatermark`), so the
+   * chain drops nothing that the first stage kept; the resolve stage
+   * filters nothing.
    */
   def nearDupKeptStreamStateful(docs: DataFrame, textCol: String, tsCol: String,
                                 seenBands: DataFrame, horizonMs: Long = 3600L * 1000,
@@ -651,8 +658,9 @@ object Dedup {
         s"nearDupKeptStreamStateful chains three stateful operators, which Spark's " +
         s"correctness check rejects wholesale; set $checkKey=false BEFORE composing. " +
         "CAUTION: the setting is session-wide — scope it to the session running this " +
-        "composition. Safe for this shape: no stateful stage event-time-filters " +
-        "its input (see NearDupState Scaladoc).")
+        "composition. Safe for this shape: every row reaching the event-time claim " +
+        "stage has already passed the same batch watermark upstream, so the chain " +
+        "drops nothing the first stage kept (see the Scaladoc).")
     // a row with no event time cannot participate in event-time ordering
     // or horizon arithmetic — drop it up front (same fate Spark's own
     // watermarked aggregations give null-event-time rows) instead of

@@ -55,7 +55,8 @@ object DistinctStream {
   /** Streaming form: `events` must already carry `withWatermark` on
     * `tsCol`. Emissions appear when the watermark closes the window. */
   def stream(events: DataFrame, tsCol: String, idCol: String,
-             windowSec: Long): DataFrame =
+             windowSec: Long): DataFrame = {
+    CheckpointFiles.install(events)
     events.select(
         window(col(tsCol), s"$windowSec seconds").as("window"),
         col(idCol).cast("string").as("__id"))
@@ -64,6 +65,7 @@ object DistinctStream {
       .agg(count(lit(1)).as("n_distinct"))
       .select((unix_timestamp(col("window.start")) * 1000000L).as("window_start"),
         col("n_distinct"))
+  }
 
   /** The extreme-cardinality swap the scaladoc above promises, as a
     * real code path: ONE stateful windowed aggregation whose state per
@@ -79,7 +81,8 @@ object DistinctStream {
     * against the exact twin; StateBoundSpec pins its state at one row
     * per open window. */
   def approxStream(events: DataFrame, tsCol: String, idCol: String,
-                   windowSec: Long, rsd: Double = 0.01): DataFrame =
+                   windowSec: Long, rsd: Double = 0.01): DataFrame = {
+    CheckpointFiles.install(events)
     events.select(
         window(col(tsCol), s"$windowSec seconds").as("window"),
         col(idCol).cast("string").as("__id"))
@@ -87,4 +90,5 @@ object DistinctStream {
       .agg(approx_count_distinct(col("__id"), rsd).as("n_distinct_approx"))
       .select((unix_timestamp(col("window.start")) * 1000000L).as("window_start"),
         col("n_distinct_approx"))
+  }
 }

@@ -38,15 +38,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * Timers are event-time only: a processing-time timeout makes Spark run
  * another batch unconditionally, so a zero-interval trigger busy-loops
  * empty micro-batches (measured: >21k stages in 13 min on a 6-row test
- * stream). State is Kryo-encoded, opaque to the store.
+ * stream). State is Kryo-encoded, opaque to the store. A streaming
+ * result installs [[CheckpointFiles]] on its session.
  */
 private[graft] object WatermarkKernel {
 
   def apply[K, R, S: ClassTag, O: Encoder](grouped: KeyValueGroupedDataset[K, R])(
       absorb: (K, Option[S], Iterator[R]) => (Option[S], Iterator[O]),
       release: (K, S, Long) => (Option[S], Iterator[O]),
-      nextClose: (K, S) => Long): Dataset[O] =
-    grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+      nextClose: (K, S) => Long): Dataset[O] = {
+    val out = grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
       (k: K, rows: Iterator[R], gs: GroupState[S]) =>
         val wm = gs.getCurrentWatermarkMs()
         val (absorbed, fresh) =
@@ -61,4 +62,7 @@ private[graft] object WatermarkKernel {
         }
         fresh ++ closed
     }(Encoders.kryo[S], implicitly[Encoder[O]])
+    CheckpointFiles.install(out)
+    out
+  }
 }

@@ -4,9 +4,10 @@ import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.Trigger
 import graft.TestSpark
-import graft.TestSpark.{withChainCheckOff, withRocksDb}
+import graft.TestSpark.{withChainCheckOff, withConf, withRocksDb}
 import graft.api.{Env, Event, GStream}
 
 /**
@@ -138,8 +139,10 @@ class StateRecoverySpec extends AnyFunSuite {
     * same checkpoint, adds `run2` and a closer at 12:00 whose watermark
     * releases everything before it. Returns the output after run 1, the
     * output after run 2 and the batch result over all events, the
-    * closer's own output left out. */
-  private def restartMidWindow[V](tag: String, run1: Seq[Event[Long]], run2: Seq[Event[Long]])(
+    * closer's own output left out. `managers`, when given, names the
+    * checkpoint file manager class of run 1 and of run 2. */
+  private def restartMidWindow[V](tag: String, run1: Seq[Event[Long]], run2: Seq[Event[Long]],
+      managers: Option[(String, String)] = None)(
       build: GStream[Long] => GStream[V])(
       implicit enc: Encoder[Event[V]]): (Set[(Timestamp, V)], Set[(Timestamp, V)], Set[(Timestamp, V)]) = {
     val root = java.nio.file.Files.createTempDirectory(s"graft_midwindow_$tag")
@@ -150,7 +153,8 @@ class StateRecoverySpec extends AnyFunSuite {
       build(Env(spark).fromDataset(ds).withWatermark("20 minutes"))
     def rows(evs: Seq[Event[V]]) =
       evs.filter(_.eventTime.get.before(closer)).map(e => (e.eventTime.get, e.value)).toSet
-    def runOnce(events: Seq[Event[Long]]) = {
+    def runOnce(events: Seq[Event[Long]], manager: Option[String]) = withConf(
+        manager.map(CheckpointFiles.Key -> _).toSeq: _*) {
       spark.createDataset(events).write.mode("append").parquet(src)
       val schema = implicitly[Encoder[Event[Long]]].schema
       val q = pipeline(spark.readStream.schema(schema).parquet(src).as[Event[Long]])
@@ -161,7 +165,7 @@ class StateRecoverySpec extends AnyFunSuite {
       rows(spark.read.schema(enc.schema).parquet(out).as[Event[V]].collect().toSeq)
     }
     val all = run1 ++ run2 :+ Event.at(99L, closer)
-    (runOnce(run1), runOnce(run2 :+ Event.at(99L, closer)),
+    (runOnce(run1, managers.map(_._1)), runOnce(run2 :+ Event.at(99L, closer), managers.map(_._2)),
       rows(pipeline(spark.createDataset(all)).collectEvents()))
   }
 
@@ -169,10 +173,10 @@ class StateRecoverySpec extends AnyFunSuite {
 
   /** Key 1's two sessions, 16 minutes apart, stay open through run 1
     * (watermark 09:56); run 2's 10:08 bridges them into one. */
-  private def aggregateMidWindow(tag: String): Unit = {
+  private def aggregateMidWindow(tag: String, managers: Option[(String, String)] = None): Unit = {
     val (first, all, batch) = restartMidWindow(tag,
       Seq(ev(1, "2024-01-01 10:00:00"), ev(1, "2024-01-01 10:16:00"), ev(2, "2024-01-01 10:05:00")),
-      Seq(ev(1, "2024-01-01 10:08:00"))) {
+      Seq(ev(1, "2024-01-01 10:08:00")), managers) {
       _.keyBy(_.value).window(gap).aggregate(v => (v, 1L))((a, b) => (a._1, a._2 + b._2))
     }
     assert(first.isEmpty, s"run 1: $first")
@@ -223,6 +227,28 @@ class StateRecoverySpec extends AnyFunSuite {
 
   test("windowed aggregate resumes sessions left open by a restart (RocksDB)") {
     withRocksDb { aggregateMidWindow("agg_rocksdb") }
+  }
+
+  /** The checkpoint's files are the same under either manager, so a
+    * checkpoint moves between Spark's default (`FileContext`) manager and
+    * graft's in both directions, mid-window. */
+  private val sparkDefault = classOf[FileContextBasedCheckpointFileManager].getName
+  private val graftManager = classOf[CheckpointFiles].getName
+
+  test("sessions checkpointed under Spark's default manager resume under graft's (default provider)") {
+    aggregateMidWindow("fc_to_fs", Some((sparkDefault, graftManager)))
+  }
+
+  test("sessions checkpointed under graft's manager resume under Spark's default (default provider)") {
+    aggregateMidWindow("fs_to_fc", Some((graftManager, sparkDefault)))
+  }
+
+  test("sessions checkpointed under Spark's default manager resume under graft's (RocksDB)") {
+    withRocksDb { aggregateMidWindow("fc_to_fs_rocksdb", Some((sparkDefault, graftManager))) }
+  }
+
+  test("sessions checkpointed under graft's manager resume under Spark's default (RocksDB)") {
+    withRocksDb { aggregateMidWindow("fs_to_fc_rocksdb", Some((graftManager, sparkDefault))) }
   }
 
   test("windowed processState resumes sessions left open by a restart (default provider)") {

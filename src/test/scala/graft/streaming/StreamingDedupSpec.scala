@@ -160,6 +160,50 @@ class StreamingDedupSpec extends AnyFunSuite {
     } finally if (q != null) q.stop()
   }
 
+  /** The chain's late-row argument: a doc behind the watermark is dropped
+    * once, by the first stateful stage, and the event-time claim stage
+    * after it drops nothing that stage kept, so the admitted rows are
+    * those of the same run without the late doc. */
+  test("nearDupKeptStreamStateful drops a late doc once and admits what the run without it admits") {
+    implicit val sqlCtx = spark.sqlContext
+    val seen = Seq((0, "none")).toDF("band_idx", "band_hash")
+    val late = (Timestamp.valueOf("2024-01-01 10:05:00"), 99L,
+      "a late arriving document about checkpoint renames on local disks")
+    val batches = Seq(
+      Seq((Timestamp.valueOf("2024-01-01 10:00:00"), 1L,
+          "winnowing fingerprints select the minimum hash inside each sliding window position"),
+        (Timestamp.valueOf("2024-01-01 10:02:00"), 10L,
+          "spark structured streaming keeps per key state in a rocksdb backed store")),
+      Seq((Timestamp.valueOf("2024-01-01 10:40:00"), 12L,
+        "another new document mentioning broadcast joins and shuffle partitions today")),
+      // watermark 10:30 here: 10:05 is behind it
+      Seq((Timestamp.valueOf("2024-01-01 10:45:00"), 13L,
+        "a third fresh document on parquet column pruning and predicate pushdown")),
+      Seq((Timestamp.valueOf("2024-01-01 11:30:00"), 14L,
+        "completely separate closing document advancing the watermark once more")))
+    def run(name: String, withLate: Boolean): (Set[(Timestamp, Long, String)], Long) = {
+      val input = MemoryStream[(Timestamp, Long, String)]
+      var q: org.apache.spark.sql.streaming.StreamingQuery = null
+      try TestSpark.withChainCheckOff {
+        val stream = input.toDS().toDF("ts", "doc_id", "text").withWatermark("ts", "10 minutes")
+        q = Dedup.nearDupKeptStreamStateful(stream, "text", "ts", seen)
+          .writeStream.format("memory").queryName(name).outputMode("append").start()
+        batches.zipWithIndex.foreach { case (b, i) =>
+          input.addData(if (withLate && i == 2) b :+ late else b)
+          q.processAllAvailable()
+        }
+        val kept = spark.table(name).as[(Timestamp, Long, String)].collect().toSet
+        (kept, q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum)
+      } finally if (q != null) q.stop()
+    }
+    val (plain, plainDropped) = run("s_late_plain", withLate = false)
+    val (withLate, lateDropped) = run("s_late_with", withLate = true)
+    assert(plain.map(_._2) == Set(1L, 10L, 12L, 13L, 14L), s"plain: $plain")
+    assert(plainDropped == 0L)
+    assert(lateDropped == 1L, s"late rows dropped across all stages: $lateDropped")
+    assert(withLate == plain, s"with the late doc: $withLate")
+  }
+
   test("nearDupKeptStreamStateful fails fast when the chain check is still enabled") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, String)]
