@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Add, CaseWhen, Cast, Concat, Contains, Divide, EqualTo, Expression, ExpressionInfo, Length, Literal, Lower, Multiply, Or, RegExpCount, RegExpExtract, RegExpReplace, RLike, Sqrt, StartsWith, StringReplace, StringTrim, Subtract}
+import org.apache.spark.sql.catalyst.expressions.{Add, CaseWhen, Cast, Concat, Contains, EqualTo, Expression, ExpressionInfo, Length, Literal, Lower, Multiply, Or, RegExpCount, RegExpExtract, RegExpReplace, RLike, Sqrt, StartsWith, StringReplace, StringTrim, Subtract, TryDivide}
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.functions.{DotProductExpr, NfcNormalizeExpr, RollingHashExpr, ScriptProfileExpr, ShinglesExpr, TextFunctions}
 
@@ -74,7 +74,7 @@ object GraftFunctions {
     (args: Seq[Expression]) => {
       require(args.size == 2, "cosine_sim(a, b) takes exactly two array arguments")
       val (a, b) = (args.head, args(1))
-      new Divide(DotProductExpr(a, b),
+      new TryDivide(DotProductExpr(a, b),
         new Multiply(Sqrt(DotProductExpr(a, a)), Sqrt(DotProductExpr(b, b))))
     })
 

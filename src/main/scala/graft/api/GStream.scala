@@ -106,23 +106,23 @@ object GStream {
       case _ => false
     }
 
-  /** Fail-fast guard for the `processStateGlobal` compositions: they
-    * chain two stateful streaming operators, which Spark's correctness
-    * check rejects wholesale at `start()` with a generic message. Throw
+  /** Fail-fast guard for the compositions that chain stateful streaming
+    * operators (`processStateGlobal`, `Dedup.nearDupKeptStreamStateful`),
+    * named by `caller` in the message: Spark's correctness check rejects
+    * such a chain wholesale at `start()` with a generic message. Throw
     * at COMPOSITION time instead, with the graft-specific explanation —
     * and spell out the blast radius of the required relaxation (the
     * setting is session-wide: it also silences the check for every other
     * streaming query on the session, including genuinely unsafe chains). */
-  private[api] def requireCheckCorrectnessDisabled(ds: Dataset[_]): Unit = {
+  private[graft] def requireCheckCorrectnessDisabled(ds: Dataset[_], caller: String): Unit = {
     val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
     if (ds.isStreaming && ds.sparkSession.conf.get(key, "true") != "false")
       throw new IllegalStateException(
-        s"streaming processStateGlobal chains two stateful operators, which Spark's " +
+        s"streaming $caller chains stateful operators, which Spark's " +
         s"correctness check rejects wholesale; set $key=false BEFORE composing to run it. " +
         "CAUTION: the setting is session-wide — it also disables the check for every " +
         "other streaming query on this session, so scope it to the session running " +
-        "this composition. Safe for processStateGlobal itself because the global " +
-        "stage never event-time-filters its input (see Scaladoc).")
+        s"this composition. Why the chain is safe for $caller: see its Scaladoc.")
   }
 }
 
@@ -268,7 +268,7 @@ final class KeyedGStream[K, T](
       globalFold: (Event[M], GS) => (GS, Seq[Event[U]]))(
       implicit es: Encoder[S], em: Encoder[Event[M]], egs: Encoder[GS],
       eu: Encoder[Event[U]], ei: Encoder[Int]): GStream[U] = {
-    GStream.requireCheckCorrectnessDisabled(ds)
+    GStream.requireCheckCorrectnessDisabled(ds, "processStateGlobal")
     processState(init)(keyFold)
       .keyBy((_: Event[M]) => 0)
       .processStatePerBatch((_: Int) => globalInit)((_, e, g) => globalFold(e, g))

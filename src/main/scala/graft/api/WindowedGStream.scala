@@ -192,7 +192,7 @@ final class WindowedGStream[K, T](
       globalFold: (Event[M], GS) => (GS, Seq[Event[U]]))(
       implicit em: Encoder[Event[M]], etag: Encoder[Event[(Long, M)]], egs: Encoder[GS],
       eu: Encoder[Event[U]], ei: Encoder[Int]): GStream[U] = {
-    GStream.requireCheckCorrectnessDisabled(ds)
+    GStream.requireCheckCorrectnessDisabled(ds, "processStateGlobal")
     val tagged = processState(init) { (k, bounds, evs, s) =>
       val (s2, out) = keyFold(k, bounds, evs, s)
       (s2, out.map { m =>

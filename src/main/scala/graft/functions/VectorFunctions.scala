@@ -24,9 +24,14 @@ object VectorFunctions {
   /** L2 norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity in [-1, 1]. */
-  def cosineSim(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
+  /** Cosine similarity in [-1, 1] given the L2 norms `na` and `nb`, which
+    * the vector operators hoist below their pair joins. Null when either
+    * norm is zero, where ANSI division would throw. */
+  def cosineWithNorms(a: Column, na: Column, b: Column, nb: Column): Column =
+    try_divide(dot(a, b), na * nb)
+
+  /** Cosine similarity in [-1, 1]; null when either vector is zero. */
+  def cosineSim(a: Column, b: Column): Column = cosineWithNorms(a, l2Norm(a), b, l2Norm(b))
 
   /** Euclidean (L2) distance. */
   def l2Distance(a: Column, b: Column): Column = {
@@ -36,5 +41,5 @@ object VectorFunctions {
 
   /** Unit-normalize a vector (null-safe: zero vector → nulls). */
   def normalize(a: Column): Column =
-    transform(a, x => x / l2Norm(a))
+    transform(a, x => try_divide(x, l2Norm(a)))
 }

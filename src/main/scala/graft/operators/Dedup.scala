@@ -651,16 +651,7 @@ object Dedup {
       "nearDupKeptStreamStateful is the continuous-ingestion path; on a batch " +
       "corpus use the dedup cascade (dedupCorpusKept), which also resolves " +
       "in-corpus near-dups")
-    val spark = docs.sparkSession
-    val checkKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    if (spark.conf.get(checkKey, "true") != "false")
-      throw new IllegalStateException(
-        s"nearDupKeptStreamStateful chains three stateful operators, which Spark's " +
-        s"correctness check rejects wholesale; set $checkKey=false BEFORE composing. " +
-        "CAUTION: the setting is session-wide — scope it to the session running this " +
-        "composition. Safe for this shape: every row reaching the event-time claim " +
-        "stage has already passed the same batch watermark upstream, so the chain " +
-        "drops nothing the first stage kept (see the Scaladoc).")
+    graft.api.GStream.requireCheckCorrectnessDisabled(docs, "nearDupKeptStreamStateful")
     // a row with no event time cannot participate in event-time ordering
     // or horizon arithmetic — drop it up front (same fate Spark's own
     // watermarked aggregations give null-event-time rows) instead of
@@ -994,48 +985,33 @@ object Dedup {
     // the unbounded join out of memory exactly this way. Production
     // order remains exact-dedup-before-ANN; the cap is the guard rail
     // for corpora that skip it (recall cost documented at the caller).
-    if (maxBucketSize == Int.MaxValue) {
-      // Unbounded buckets: keep the streaming self-join — a single
-      // degenerate bucket can exceed one task's memory as an array.
-      val b0 = buckets.persist()
-      try {
-        val a = b0.select(col("tbl"), col("bkt"), col(idCol).as("a_id"))
-        val b = b0.select(col("tbl"), col("bkt"), col(idCol).as("b_id"))
-        a.join(b, Seq("tbl", "bkt"))
-          .filter(col("a_id") < col("b_id"))
-          .select("a_id", "b_id").distinct()
-          .localCheckpoint()
-      } finally b0.unpersist()
-    } else {
-      val b0 = buckets.persist()
-      try {
-        val w = Window.partitionBy("tbl", "bkt")
-        val capped = b0.withColumn("__bsz", count(lit(1)).over(w))
+    // Pairs come from a streaming self-join, never a per-bucket array: a
+    // single unbounded bucket can exceed one task's memory as an array.
+    val b0 = buckets.persist()
+    try {
+      val capped =
+        if (maxBucketSize == Int.MaxValue) b0
+        else b0.withColumn("__bsz", count(lit(1)).over(Window.partitionBy("tbl", "bkt")))
           .filter(col("__bsz") <= maxBucketSize).drop("__bsz")
-        val a = capped.select(col("tbl"), col("bkt"), col(idCol).as("a_id"))
-        val b = capped.select(col("tbl"), col("bkt"), col(idCol).as("b_id"))
-        a.join(b, Seq("tbl", "bkt"))
-          .filter(col("a_id") < col("b_id"))
-          .select("a_id", "b_id").distinct()
-          .localCheckpoint()
-      } finally b0.unpersist()
-    }
+      val a = capped.select(col("tbl"), col("bkt"), col(idCol).as("a_id"))
+      val b = capped.select(col("tbl"), col("bkt"), col(idCol).as("b_id"))
+      a.join(b, Seq("tbl", "bkt"))
+        .filter(col("a_id") < col("b_id"))
+        .select("a_id", "b_id").distinct()
+        .localCheckpoint()
+    } finally b0.unpersist()
   }
 
   /** Embedding near-dup pairs with cosine > threshold over the
     * random-hyperplane LSH candidates: the verify stage pulls each
     * candidate's vector via two id-keyed joins (pairs are tiny — that is
-    * LSH's point), computes one dot per pair with hoisted norms. */
+    * LSH's point), computes one dot per pair with hoisted norms
+    * (`Similarity.scorePairs`). */
   def embeddingNearDupsRhp(embs: DataFrame, vecCol: String, idCol: String, dim: Int,
                            threshold: Double, nPlanes: Int = 8, nTables: Int = 4,
                            maxBucketSize: Int = DefaultRhpMaxBucket): DataFrame = {
     val pairs = rhpCandidatePairs(embs, vecCol, idCol, dim, nPlanes, nTables, maxBucketSize)
-    val a = embs.select(col(idCol).as("a_id"), col(vecCol).as("__va"), l2Norm(col(vecCol)).as("__na"))
-    val b = embs.select(col(idCol).as("b_id"), col(vecCol).as("__vb"), l2Norm(col(vecCol)).as("__nb"))
-    pairs.join(a, Seq("a_id")).join(b, Seq("b_id"))
-      .withColumn("sim", dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
-      .filter(col("sim") > threshold)
-      .select(col("a_id"), col("b_id"), col("sim"))
+    Similarity.scorePairs(pairs, embs, vecCol, idCol).filter(col("sim") > threshold)
   }
 
   /** Cross-document repeated word n-grams — the discovery half of
@@ -1078,13 +1054,13 @@ object Dedup {
     * is unchanged, so results stay bit-identical to the naive form. */
   def embeddingNearDups(embs: DataFrame, vecCol: String, idCol: String,
                         blockCol: String, threshold: Double): DataFrame = {
-    val a = embs.select(col(blockCol).as("blk"), col(idCol).as("a_id"),
-      col(vecCol).as("__va"), l2Norm(col(vecCol)).as("__na"))
-    val b = embs.select(col(blockCol).as("blk"), col(idCol).as("b_id"),
-      col(vecCol).as("__vb"), l2Norm(col(vecCol)).as("__nb"))
+    val a = embs.select(Seq(col(blockCol).as("blk"), col(idCol).as("a_id")) ++
+      Similarity.normCols(vecCol, "a"): _*)
+    val b = embs.select(Seq(col(blockCol).as("blk"), col(idCol).as("b_id")) ++
+      Similarity.normCols(vecCol, "b"): _*)
     a.join(b, Seq("blk"))
       .filter(col("a_id") < col("b_id"))
-      .withColumn("sim", dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
+      .withColumn("sim", Similarity.cosineOf("a", "b"))
       .filter(col("sim") > threshold)
       .select(col("a_id"), col("b_id"), col("sim"))
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -53,16 +53,16 @@ object Graph {
     // the loop, so restoring the conf afterwards leaves caller-side
     // optimization untouched (the final plan is a flat union of
     // checkpoint scans — nothing to infer).
-    val spark = edges.sparkSession
-    val key = "spark.sql.constraintPropagation.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try reachLoop(edges, seeds, srcCol, dstCol, nodeCol, maxHops)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    withoutConstraintPropagation(edges.sparkSession) {
+      reachLoop(edges, seeds, srcCol, dstCol, nodeCol, maxHops)
     }
   }
+
+  /** Run an iterative operator's driver loop with constraint propagation
+    * off (see [[reachMinHops]] for why), restoring the session's value
+    * afterwards. */
+  private[operators] def withoutConstraintPropagation[A](spark: SparkSession)(body: => A): A =
+    graft.SessionConf.withValue(spark, "spark.sql.constraintPropagation.enabled", "false")(body)
 
   /**
    * Fixed-iteration PageRank over an edge list — the link-based
@@ -101,14 +101,8 @@ object Graph {
                redistributeDangling: Boolean = false): DataFrame = {
     require(iters >= 1 && dampingPpb >= 0L && dampingPpb <= 1000000000L,
       s"need iters >= 1 and dampingPpb in [0, 1e9], got $iters / $dampingPpb")
-    val spark = edges.sparkSession
-    val key = "spark.sql.constraintPropagation.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try pageRankLoop(edges, srcCol, dstCol, iters, dampingPpb, redistributeDangling)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    withoutConstraintPropagation(edges.sparkSession) {
+      pageRankLoop(edges, srcCol, dstCol, iters, dampingPpb, redistributeDangling)
     }
   }
 

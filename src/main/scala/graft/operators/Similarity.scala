@@ -19,26 +19,75 @@ import graft.functions.VectorFunctions._
  *   trade recall for cost by probing more cells upstream.
  *
  * All cosine evaluations precompute each side's L2 norm in the projection
- * BELOW the pair join, so the per-pair work is one dot product — the norm
- * is per-row, not per-pair. The arithmetic (`dot / (sqrt · sqrt)`) is
- * unchanged, keeping results bit-identical to the naive form and to the
- * DuckDB oracle's fold.
+ * BELOW the pair join ([[normCols]]), so the per-pair work is one dot
+ * product — the norm is per-row, not per-pair. The arithmetic (`dot /
+ * (sqrt · sqrt)`, [[VectorFunctions.cosineWithNorms]]) is unchanged,
+ * keeping results bit-identical to the naive form and to the DuckDB
+ * oracle's fold. A zero vector has a null cosine with everything, so it
+ * is never ranked, thresholded in, or assigned a cell.
  */
 object Similarity {
+
+  /** The vector as `__<side>v` and its L2 norm as `__<side>n`: the
+    * per-row norm projection below every pair join here. */
+  private[operators] def normCols(vecCol: String, side: String): Seq[Column] =
+    Seq(col(vecCol).as(s"__${side}v"), l2Norm(col(vecCol)).as(s"__${side}n"))
+
+  /** Cosine of the two [[normCols]] sides `a` and `b`. */
+  private[operators] def cosineOf(a: String, b: String): Column =
+    cosineWithNorms(col(s"__${a}v"), col(s"__${a}n"), col(s"__${b}v"), col(s"__${b}n"))
+
+  /** Row number within each `key` group in `order`. */
+  private def numbered(key: String, order: Column*): Column =
+    row_number().over(Window.partitionBy(col(key)).orderBy(order: _*))
+
+  /** The `k` best rows of each `key` group by (`sim` desc, `tie` asc),
+    * ranked from 1 in `rankCol`. A null `sim` is never ranked. */
+  private def topKPerKey(scored: DataFrame, key: String, tie: String, k: Int,
+                         rankCol: String = "rank"): DataFrame =
+    scored.withColumn(rankCol, numbered(key, col("sim").desc, col(tie)).cast("long"))
+      .filter(col(rankCol) <= k && col("sim").isNotNull)
+
+  /** Each query's exact cosine top `k` among its candidate rows, which
+    * carry the `q` and `c` [[normCols]] sides. */
+  private def queryTopK(candidates: DataFrame, k: Int): DataFrame =
+    topKPerKey(candidates.withColumn("sim", cosineOf("q", "c")), "query_id", "neighbor_id", k)
+
+  /** Cosine of every (a_id, b_id) pair of `pairs`: each side's vector
+    * and norm attach by an id-keyed join BELOW the cosine, one dot per
+    * pair. Output: a_id, b_id, sim. */
+  private[operators] def scorePairs(pairs: DataFrame, embs: DataFrame,
+                                    vecCol: String, idCol: String): DataFrame = {
+    val a = embs.select(col(idCol).as("a_id") +: normCols(vecCol, "a"): _*)
+    val b = embs.select(col(idCol).as("b_id") +: normCols(vecCol, "b"): _*)
+    pairs.join(a, Seq("a_id")).join(b, Seq("b_id"))
+      .select(col("a_id"), col("b_id"), cosineOf("a", "b").as("sim"))
+  }
+
+  /** Each scored undirected edge ranked from both endpoints: the top `k`
+    * neighbors per `src` by (sim desc, nbr asc). Symmetrized by EXPLODING
+    * each edge into its two directions — NOT by unioning `scored` with
+    * its own swap: a self-union duplicates the whole join+dot subtree in
+    * the physical plan (both branches re-run the two vector joins and
+    * every dot product — seen in the l35 plan as two identical
+    * BroadcastHashJoin chains under one Union). The explode evaluates the
+    * joins and the cosine ONCE per undirected pair; rows are identical.
+    * Output: src, nbr, sim, rnk. */
+  private def symmetricTopK(scored: DataFrame, k: Int): DataFrame = {
+    val sym = scored.select(explode(array(
+        struct(col("a_id").as("src"), col("b_id").as("nbr"), col("sim")),
+        struct(col("b_id").as("src"), col("a_id").as("nbr"), col("sim")))).as("__e"))
+      .select(col("__e.src").as("src"), col("__e.nbr").as("nbr"), col("__e.sim").as("sim"))
+    topKPerKey(sym, "src", "nbr", k, "rnk")
+  }
 
   /** Exact cosine top-k of `corpus` for each row of `queries`.
     * Output: query_id, neighbor_id, sim, rank (self-match excluded). */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
                      vecCol: String, idCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-      l2Norm(col(vecCol)).as("__qn"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-      l2Norm(col(vecCol)).as("__cn"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    val q = queries.select(col(idCol).as("query_id") +: normCols(vecCol, "q"): _*)
+    val c = corpus.select(col(idCol).as("neighbor_id") +: normCols(vecCol, "c"): _*)
+    queryTopK(c.join(broadcast(q), col("query_id") =!= col("neighbor_id")), k)
       .select("query_id", "neighbor_id", "sim", "rank")
   }
 
@@ -148,19 +197,13 @@ object Similarity {
     val assigned = assignCells(corpus, centroids, vecCol, idCol, centroidIdCol)
     val qVecs = corpus.join(queries.select(col(idCol)), Seq(idCol), "left_semi")
     val q = probeCells(qVecs, centroids, vecCol, idCol, centroidIdCol, nprobe)
-      .select(col("cell"), col(idCol).as("query_id"), col(vecCol).as("__qv"),
-        l2Norm(col(vecCol)).as("__qn"))
-    val c = assigned.select(col("cell"), col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-      l2Norm(col(vecCol)).as("__cn"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
+      .select(Seq(col("cell"), col(idCol).as("query_id")) ++ normCols(vecCol, "q"): _*)
+    val c = assigned.select(Seq(col("cell"), col(idCol).as("neighbor_id")) ++
+      normCols(vecCol, "c"): _*)
     // queries << corpus by contract: broadcast the probe rows so the
     // corpus side is scanned in place (never sorted or re-shuffled for
     // the cell join) — same shape as bruteForceTopK
-    broadcast(q).join(c, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    queryTopK(broadcast(q).join(c, Seq("cell")).filter(col("query_id") =!= col("neighbor_id")), k)
       .select("query_id", "neighbor_id", "sim", "rank")
   }
 
@@ -186,38 +229,37 @@ object Similarity {
     def quantized(v: Column): Column =
       transform(v, x => floor(x * lit(127.0) / col("__m") + lit(0.5)).cast("double"))
     val q = queries.crossJoin(broadcast(scale))
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-        l2Norm(col(vecCol)).as("__qn"), quantized(col(vecCol)).as("__qq"))
+      .select((col(idCol).as("query_id") +: normCols(vecCol, "q")) :+
+        quantized(col(vecCol)).as("__qq"): _*)
     val c = corpus.crossJoin(broadcast(scale))
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-        l2Norm(col(vecCol)).as("__cn"), quantized(col(vecCol)).as("__cq"))
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("neighbor_id"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+      .select((col(idCol).as("neighbor_id") +: normCols(vecCol, "c")) :+
+        quantized(col(vecCol)).as("__cq"): _*)
+    val candidates = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("approx", dot(col("__qq"), col("__cq")).cast("long"))
-      .withColumn("__ar", row_number().over(wApprox))
+      .withColumn("__ar", numbered("query_id", col("approx").desc, col("neighbor_id")))
       .filter(col("__ar") <= rerank)
-      .withColumn("sim", dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-      .withColumn("rank", row_number().over(wExact).cast("long"))
-      .filter(col("rank") <= k)
+    queryTopK(candidates, k)
       .select("query_id", "neighbor_id", "approx", "sim", "rank")
   }
 
   // ------------------------------------------------- product quantization
 
+  /** Array column `arr` split into its `m` subvectors of `dim`/`m`
+    * components, exploded as `e`: one (subspace `s`, subvector `sv`)
+    * struct per row. */
+  private def subvectorRows(arr: String, m: Int, dim: Int): Column = {
+    val dsub = dim / m
+    require(m > 0 && dsub * m == dim, s"m=$m must divide dim=$dim")
+    explode(expr(s"transform(sequence(0, ${m - 1}), " +
+      s"s -> struct(s AS s, slice($arr, s * $dsub + 1, $dsub) AS sv))")).as("e")
+  }
+
   /** Per-row subvector explosion shared by the PQ paths: (idCol as
     * `__id`, subspace `s`, subvector `sv` of `dim`/`m` components). */
   private def pqSubvectors(df: DataFrame, vecCol: String, idCol: String,
-                           m: Int, dim: Int): DataFrame = {
-    val dsub = dim / m
-    require(m > 0 && dsub * m == dim, s"m=$m must divide dim=$dim")
-    df.select(col(idCol).as("__id"), explode(expr(
-        s"transform(sequence(0, ${m - 1}), " +
-          s"s -> struct(s AS s, slice($vecCol, s * $dsub + 1, $dsub) AS sv))")).as("e"))
+                           m: Int, dim: Int): DataFrame =
+    df.select(col(idCol).as("__id"), subvectorRows(vecCol, m, dim))
       .select(col("__id"), col("e.s").as("s"), col("e.sv").as("sv"))
-  }
 
   /** Squared L2 distance between two equal-length double arrays, as a
     * left-to-right fold (engine-portable like [[VectorFunctions.dot]]). */
@@ -328,28 +370,7 @@ object Similarity {
       .join(broadcast(books.select(col("s"), col("j"), col("sv").as("__cv"))), Seq("s"))
       .select(col("__id").as("query_id"), col("s"), col("j"),
         sqDist(col("sv"), col("__cv")).as("__dt"))
-    val exploded = codes.select(col(idCol).as("neighbor_id"),
-      posexplode(col("codes")).as(Seq("s", "j")))
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-      l2Norm(col(vecCol)).as("__qn"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv2"),
-      l2Norm(col(vecCol)).as("__cn"))
-    exploded.join(broadcast(dt), Seq("s", "j"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("__dt")).as("adist"))
-      .withColumn("__ar", row_number().over(wApprox))
-      .filter(col("__ar") <= rerank)
-      .join(broadcast(qv), Seq("query_id"))
-      .join(cv.hint("shuffle_hash"), Seq("neighbor_id"))
-      .withColumn("sim", dot(col("__qv"), col("__cv2")) / (col("__qn") * col("__cn")))
-      .withColumn("rank", row_number().over(wExact).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "adist", "sim", "rank")
+    adcRerank(codes, dt, Nil, queries, corpus, vecCol, idCol, k, rerank)
   }
 
   // ------------------------------------------------- IVFADC (IVF × PQ)
@@ -385,13 +406,9 @@ object Similarity {
     * (the [[ivfadcTopK]] cell semi-join becomes partition pruning). */
   def ivfadcEncode(corpus: DataFrame, centroids: DataFrame, books: DataFrame,
                    vecCol: String, idCol: String, centroidIdCol: String,
-                   m: Int, dim: Int): DataFrame = {
-    val dsub = dim / m
-    require(m > 0 && dsub * m == dim, s"m=$m must divide dim=$dim")
+                   m: Int, dim: Int): DataFrame =
     cellResiduals(corpus, centroids, vecCol, idCol, centroidIdCol)
-      .select(col(idCol).as("__id"), col("cell"), explode(expr(
-        s"transform(sequence(0, ${m - 1}), " +
-          s"s -> struct(s AS s, slice(__resid, s * $dsub + 1, $dsub) AS sv))")).as("e"))
+      .select(col(idCol).as("__id"), col("cell"), subvectorRows("__resid", m, dim))
       .select(col("__id"), col("cell"), col("e.s").as("s"), col("e.sv").as("sv"))
       .join(broadcast(books.select(col("s"), col("j").as("__j"), col("sv").as("__cv"))),
         Seq("s"))
@@ -402,7 +419,6 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("s"), col("mn.__j").as("j")))),
         x => x.getField("j")).as("codes"))
       .withColumnRenamed("__id", idCol)
-  }
 
   /**
    * IVFADC top-k — the FAISS-layout composition of the coarse IVF
@@ -435,7 +451,7 @@ object Similarity {
     // is a STATIC partition filter the parquet scan skips files by
     val pruned = codes
       .join(broadcast(dt.select(col("cell")).distinct()), Seq("cell"), "left_semi")
-    ivfadcAdcRerank(pruned, dt, queries, corpus, vecCol, idCol, k, rerank)
+    adcRerank(pruned, dt, Seq("cell"), queries, corpus, vecCol, idCol, k, rerank)
   }
 
   /** Persist the IVFADC inverted index PARTITIONED BY CELL — the
@@ -468,7 +484,7 @@ object Similarity {
     val cells = dt.select(col("cell")).distinct().collect().map(_.get(0))
     val pruned = corpus.sparkSession.read.parquet(indexPath)
       .filter(col("cell").isin(cells: _*))
-    ivfadcAdcRerank(pruned, dt, queries, corpus, vecCol, idCol, k, rerank)
+    adcRerank(pruned, dt, Seq("cell"), queries, corpus, vecCol, idCol, k, rerank)
   }
 
   /** Query side of IVFADC: nprobe cells per query, the query's
@@ -478,52 +494,41 @@ object Similarity {
   private def ivfadcQueryTables(queries: DataFrame, centroids: DataFrame,
                                 books: DataFrame, vecCol: String, idCol: String,
                                 centroidIdCol: String, m: Int, dim: Int,
-                                nprobe: Int): DataFrame = {
-    val dsub = dim / m
-    require(m > 0 && dsub * m == dim, s"m=$m must divide dim=$dim")
+                                nprobe: Int): DataFrame =
     probeCells(queries, centroids, vecCol, idCol, centroidIdCol, nprobe)
       .join(broadcast(centroids.select(col(centroidIdCol).as("cell"),
         col(vecCol).as("__ctr"))), Seq("cell"))
       .select(col(idCol).as("query_id"), col("cell"),
         zip_with(col(vecCol), col("__ctr"), (x, y) => x - y).as("__qr"))
-      .select(col("query_id"), col("cell"), explode(expr(
-        s"transform(sequence(0, ${m - 1}), " +
-          s"s -> struct(s AS s, slice(__qr, s * $dsub + 1, $dsub) AS sv))")).as("e"))
+      .select(col("query_id"), col("cell"), subvectorRows("__qr", m, dim))
       .select(col("query_id"), col("cell"), col("e.s").as("s"), col("e.sv").as("sv"))
       .join(broadcast(books.select(col("s"), col("j"), col("sv").as("__cv"))), Seq("s"))
       .select(col("query_id"), col("cell"), col("s"), col("j"),
         sqDist(col("sv"), col("__cv")).as("__dt"))
-  }
 
-  /** Scan side of IVFADC over an already-pruned codes frame: the
-    * (cell, s, j) lookup join scores rows by table sums, the `rerank`
-    * closest candidates re-rank with the exact float cosine. */
-  private def ivfadcAdcRerank(prunedCodes: DataFrame, dt: DataFrame,
-                              queries: DataFrame, corpus: DataFrame,
-                              vecCol: String, idCol: String,
-                              k: Int, rerank: Int): DataFrame = {
-    val exploded = prunedCodes
-      .select(col(idCol).as("neighbor_id"), col("cell"),
-        posexplode(col("codes")).as(Seq("s", "j")))
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-      l2Norm(col(vecCol)).as("__qn"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv2"),
-      l2Norm(col(vecCol)).as("__cn"))
-    exploded.join(broadcast(dt), Seq("cell", "s", "j"))
+  /** The ADC scan and exact re-rank shared by [[pqTopK]] and IVFADC:
+    * the codes explode to (`cellKeys`, s, j) rows, the lookup join
+    * against the broadcast table `dt` scores them by table sums, and the
+    * `rerank` closest candidates per query re-rank with the exact float
+    * cosine. `cellKeys` is empty for PQ and `cell` for IVFADC, whose
+    * `codes` frame is already pruned to the probed cells. */
+  private def adcRerank(codes: DataFrame, dt: DataFrame, cellKeys: Seq[String],
+                        queries: DataFrame, corpus: DataFrame,
+                        vecCol: String, idCol: String,
+                        k: Int, rerank: Int): DataFrame = {
+    val exploded = codes.select((col(idCol).as("neighbor_id") +: cellKeys.map(col)) :+
+      posexplode(col("codes")).as(Seq("s", "j")): _*)
+    val qv = queries.select(col(idCol).as("query_id") +: normCols(vecCol, "q"): _*)
+    val cv = corpus.select(col(idCol).as("neighbor_id") +: normCols(vecCol, "c"): _*)
+    val candidates = exploded.join(broadcast(dt), cellKeys ++ Seq("s", "j"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("__dt")).as("adist"))
-      .withColumn("__ar", row_number().over(wApprox))
+      .withColumn("__ar", numbered("query_id", col("adist"), col("neighbor_id")))
       .filter(col("__ar") <= rerank)
       .join(broadcast(qv), Seq("query_id"))
       .join(cv.hint("shuffle_hash"), Seq("neighbor_id"))
-      .withColumn("sim", dot(col("__qv"), col("__cv2")) / (col("__qn") * col("__cn")))
-      .withColumn("rank", row_number().over(wExact).cast("long"))
-      .filter(col("rank") <= k)
+    queryTopK(candidates, k)
       .select("query_id", "neighbor_id", "adist", "sim", "rank")
   }
 
@@ -549,28 +554,7 @@ object Similarity {
     // half the vector joins and dot products of the symmetrize-first
     // form, bit-identical sim (element products commute, fold order is
     // the same), so each edge still ranks from both endpoints.
-    val a = embs.select(col(idCol).as("a_id"), col(vecCol).as("__va"),
-      l2Norm(col(vecCol)).as("__na"))
-    val b = embs.select(col(idCol).as("b_id"), col(vecCol).as("__vb"),
-      l2Norm(col(vecCol)).as("__nb"))
-    val scored = pairs.join(a, Seq("a_id")).join(b, Seq("b_id"))
-      .withColumn("sim", dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
-      .select(col("a_id"), col("b_id"), col("sim"))
-    // Symmetrize by EXPLODING each scored edge into its two directions —
-    // NOT by unioning `scored` with its own swap: a self-union duplicates
-    // the whole join+dot subtree in the physical plan (both branches
-    // re-run the two vector joins and every dot product — verified in the
-    // l35 before-plan: two identical BroadcastHashJoin chains under one
-    // Union). The explode evaluates the joins and the cosine ONCE per
-    // undirected pair; rows are identical.
-    val sym = scored.select(explode(array(
-        struct(col("a_id").as("src"), col("b_id").as("nbr"), col("sim")),
-        struct(col("b_id").as("src"), col("a_id").as("nbr"), col("sim")))).as("__e"))
-      .select(col("__e.src").as("src"), col("__e.nbr").as("nbr"), col("__e.sim").as("sim"))
-    val w = Window.partitionBy(col("src")).orderBy(col("sim").desc, col("nbr"))
-    sym
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    symmetricTopK(scorePairs(pairs, embs, vecCol, idCol), k)
       .select("src", "nbr", "sim", "rnk")
   }
 
@@ -608,15 +592,8 @@ object Similarity {
                 graph0: DataFrame, rounds: Int,
                 maxDegree: Int = Int.MaxValue): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    val spark = embs.sparkSession
-    val key = "spark.sql.constraintPropagation.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try nnDescentLoop(embs, vecCol, idCol, k, graph0, rounds, maxDegree,
-      hashSample = false)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    Graph.withoutConstraintPropagation(embs.sparkSession) {
+      nnDescentLoop(embs, vecCol, idCol, k, graph0, rounds, maxDegree, hashSample = false)
     }
   }
 
@@ -638,25 +615,14 @@ object Similarity {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     require(sampleK >= 1 && sampleK < Int.MaxValue,
       s"sampled variant needs a finite sampleK >= 1, got $sampleK")
-    val spark = embs.sparkSession
-    val key = "spark.sql.constraintPropagation.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try nnDescentLoop(embs, vecCol, idCol, k, graph0, rounds, sampleK,
-      hashSample = true)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    Graph.withoutConstraintPropagation(embs.sparkSession) {
+      nnDescentLoop(embs, vecCol, idCol, k, graph0, rounds, sampleK, hashSample = true)
     }
   }
 
   private def nnDescentLoop(embs: DataFrame, vecCol: String, idCol: String,
                             k: Int, graph0: DataFrame, rounds: Int,
                             maxDegree: Int, hashSample: Boolean): DataFrame = {
-    val a = embs.select(col(idCol).as("a_id"), col(vecCol).as("__va"),
-      l2Norm(col(vecCol)).as("__na"))
-    val b = embs.select(col(idCol).as("b_id"), col(vecCol).as("__vb"),
-      l2Norm(col(vecCol)).as("__nb"))
     var g = graph0.select(col("src"), col("nbr"), col("sim"), col("rnk"))
       .localCheckpoint()
     for (_ <- 1 to rounds) {
@@ -708,20 +674,7 @@ object Similarity {
         .unionByName(g.select(least(col("src"), col("nbr")).as("a_id"),
           greatest(col("src"), col("nbr")).as("b_id")))
         .distinct()
-      val scored = pairs.join(a, Seq("a_id")).join(b, Seq("b_id"))
-        .withColumn("sim", dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
-        .select(col("a_id"), col("b_id"), col("sim"))
-      // explode-symmetrize: one evaluation of the joins + cosine per
-      // undirected pair (see knnGraphRhp — the self-union form re-ran
-      // the whole scoring subtree for the swapped direction)
-      val sym = scored.select(explode(array(
-          struct(col("a_id").as("src"), col("b_id").as("nbr"), col("sim")),
-          struct(col("b_id").as("src"), col("a_id").as("nbr"), col("sim")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.nbr").as("nbr"), col("__e.sim").as("sim"))
-      val w = Window.partitionBy(col("src")).orderBy(col("sim").desc, col("nbr"))
-      g = sym.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= k)
-        .localCheckpoint()
+      g = symmetricTopK(scorePairs(pairs, embs, vecCol, idCol), k).localCheckpoint()
     }
     g
   }
@@ -760,35 +713,16 @@ object Similarity {
     * are duplicated once per probed cell. */
   def probeCells(vectors: DataFrame, centroids: DataFrame, vecCol: String,
                  idCol: String, centroidIdCol: String, nprobe: Int): DataFrame = {
-    val cents = centroids.select(col(centroidIdCol).as("cell"), col(vecCol).as("__centv"),
-      l2Norm(col(vecCol)).as("__centn"))
-    val w = Window.partitionBy(col(idCol)).orderBy(col("__csim").desc, col("cell"))
+    val cents = centroids.select(col(centroidIdCol).as("cell") +: normCols(vecCol, "cent"): _*)
     vectors.withColumn("__vn", l2Norm(col(vecCol)))
       .join(broadcast(cents))
-      .withColumn("__csim", dot(col(vecCol), col("__centv")) / (col("__vn") * col("__centn")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= nprobe)
+      .withColumn("__csim",
+        cosineWithNorms(col(vecCol), col("__vn"), col("__centv"), col("__centn")))
+      .withColumn("__rn", numbered(idCol, col("__csim").desc, col("cell")))
+      .filter(col("__rn") <= nprobe && col("__csim").isNotNull)
       .drop("__csim", "__rn", "__centv", "__centn", "__vn")
   }
 
-  /**
-   * Per-group mean vector (class centroid) over an embedding column —
-   * the bulk companion to [[trainCentroids]]' k-row driver loop: compute
-   * the centroid of EVERY group (label, cluster, source, …) in one
-   * distributed pass, no driver collect. The prototype step behind
-   * SemDedup-style cluster pruning, nearest-class-mean classification,
-   * and per-source embedding drift monitoring.
-   *
-   * Plan shape: posexplode to (key, pos, x) — the one shuffle carries
-   * dim× the rows but partial-aggregates map-side to #keys × dim per
-   * partition — then per-(key, pos) sums reassemble into an ordered
-   * array via array_sort(collect_list(struct(pos, mean))); the collect
-   * is dim-bounded per group. Means are double-precision sums of the
-   * (exactly widened) float inputs in shuffle order — fine for a
-   * centroid; the l58 declared query instead emits the exact integer
-   * sufficient statistic (Σ floor(x·10⁶), n) per (label, pos) so the
-   * oracle has no float-fold-order boundary at all.
-   */
   /**
    * Per-group embedding drift: each group's L2 distance from the CORPUS
    * centroid — "which source/class has shifted away from the rest", the
@@ -824,6 +758,24 @@ object Similarity {
         round(sqrt(sum(col("__t")).cast("double")) / 1000000, 6).as("drift"))
   }
 
+  /**
+   * Per-group mean vector (class centroid) over an embedding column —
+   * the bulk companion to [[trainCentroids]]' k-row driver loop: compute
+   * the centroid of EVERY group (label, cluster, source, …) in one
+   * distributed pass, no driver collect. The prototype step behind
+   * SemDedup-style cluster pruning, nearest-class-mean classification,
+   * and per-source embedding drift monitoring.
+   *
+   * Plan shape: posexplode to (key, pos, x) — the one shuffle carries
+   * dim× the rows but partial-aggregates map-side to #keys × dim per
+   * partition — then per-(key, pos) sums reassemble into an ordered
+   * array via array_sort(collect_list(struct(pos, mean))); the collect
+   * is dim-bounded per group. Means are double-precision sums of the
+   * (exactly widened) float inputs in shuffle order — fine for a
+   * centroid; the l58 declared query instead emits the exact integer
+   * sufficient statistic (Σ floor(x·10⁶), n) per (label, pos) so the
+   * oracle has no float-fold-order boundary at all.
+   */
   def groupCentroids(df: DataFrame, keyCol: String, vecCol: String): DataFrame =
     df.select(col(keyCol), posexplode(col(vecCol)).as(Seq("__p", "__x")))
       .groupBy(col(keyCol), col("__p"))

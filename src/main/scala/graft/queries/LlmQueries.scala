@@ -3402,8 +3402,9 @@ object LlmQueries {
         // fan out BEFORE the image leg (the l136 pattern): the corpus
         // scan is one compact parquet split, and the BMP/PNG construct +
         // ImageIO decode otherwise runs the whole corpus on ONE core
-        // (profiled: 4 tasks, taskTime ≈ wall). At real scale the scan
-        // provides the partitions and this round-robin is a cheap no-op.
+        // (profiled: 4 tasks, taskTime ≈ wall). The round-robin always
+        // shuffles its input (here only doc ids); it pays because the
+        // scan at these scale factors is one split.
         val files = Tables.documents(s, d).select(col("doc_id")).as[Long]
           .repartition(s.sparkContext.defaultParallelism)
           .mapPartitions(_.map(graft.operators.ImageFixtures.syntheticImage))
@@ -4048,9 +4049,10 @@ object LlmQueries {
         // fan out BEFORE the codec leg: the corpus scan is one compact
         // parquet split, but this leg is CPU-bound (the R6 KDF is a
         // deliberately-slow password hash, ~ms/doc) — without the
-        // repartition the whole corpus decrypts on ONE core. At real
-        // scale the scan provides the partitions and this round-robin
-        // is a cheap no-op; measured 19.4 s → 2.4 s at sf0.1.
+        // repartition the whole corpus decrypts on ONE core. The
+        // round-robin always shuffles its input; it pays because the
+        // scan at these scale factors is one split: measured 19.4 s →
+        // 2.4 s at sf0.1.
         val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
           .repartition(s.sparkContext.defaultParallelism)
           .as[(Long, String)]
@@ -4695,8 +4697,8 @@ object LlmQueries {
         // scan is one compact parquet split, and the block parse +
         // classifier checkpoint otherwise materializes on ONE core
         // (profiled: 11 stages × ~1 task, 2.4 s of single-thread CPU).
-        // At real scale the scan provides the partitions and this
-        // round-robin is a cheap no-op.
+        // The round-robin always shuffles its input; it pays because
+        // the scan at these scale factors is one split.
         graft.operators.Scoring.blockLanguageSpans(
             Tables.documents(s, d).select(id, html.as("page"))
               .repartition(s.sparkContext.defaultParallelism),

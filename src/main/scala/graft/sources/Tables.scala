@@ -54,16 +54,8 @@ object Tables {
     * created (schema inference time), not per action — executing the
     * returned frame after the restore works (covered by the smoke run
     * and every events-backed spec). */
-  private def withNanosAsLong[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  private def withNanosAsLong[A](spark: SparkSession)(body: => A): A =
+    graft.SessionConf.withValue(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")(body)
 
   /** Normalize the `ts` column to TimestampType (µs) regardless of which
     * on-disk layout produced it: BIGINT nanoseconds (nanosAsLong read of

@@ -24,6 +24,8 @@ class SqlFunctionSpec extends AnyFunSuite {
       .as[(Double, Double)].head()
     assert(math.abs(sim - 1.0) < 1e-12)
     assert(n == 5.0)
+    // a zero vector has no cosine (null, not an ANSI divide-by-zero)
+    assert(spark.sql("SELECT cosine_sim(array(0.0D, 0.0D), array(1.0D, 0.0D))").head().isNullAt(0))
   }
 
   test("token counters are callable from SQL") {

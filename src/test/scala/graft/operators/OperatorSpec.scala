@@ -818,22 +818,78 @@ class OperatorSpec extends AnyFunSuite {
     assert(out == (("w0 w1 w2 w3 w4 w5 w6", 4L)))
   }
 
-  test("Similarity.int8TopK matches bruteForceTopK exactly when rerank covers the corpus") {
-    val embs = graft.sources.Tables.embeddings(spark, sf).limit(200)
-    val q = embs.filter(col("vec_id") === 0)
-    val exact = Similarity.bruteForceTopK(q, embs, "embedding", "vec_id", 10)
-      .select("neighbor_id", "rank").as[(Long, Long)].collect().toSet
-    // rerank >= corpus size → the quantized pre-pass prunes nothing and
-    // the exact re-rank must reproduce the brute-force ranking bit-for-bit
-    val full = Similarity.int8TopK(q, embs, "embedding", "vec_id", 10, 1000)
-      .select("neighbor_id", "rank").as[(Long, Long)].collect().toSet
-    assert(full == exact)
+  test("int8/PQ/IVFADC re-rank equals bruteForceTopK when rerank covers all") {
+    val embs = graft.sources.Tables.embeddings(spark, sf).limit(200).cache()
+    val dim = embs.select(size(col("embedding"))).as[Int].head()
+    val q = embs.filter(col("vec_id") < 3)
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "sim", "rank")
+        .as[(Long, Long, Double, Long)].collect().toSet
+    val exact = ranked(Similarity.bruteForceTopK(q, embs, "embedding", "vec_id", 10))
+    val books = Similarity.trainPqCodebooks(embs, "embedding", "vec_id",
+      m = 8, ksub = 16, dim = dim, iters = 2)
+    val cents = Similarity.trainCentroids(embs, "embedding", "vec_id", k = 4, iters = 2)
+    val resid = Similarity.cellResiduals(embs, cents, "embedding", "vec_id", "cell")
+      .select(col("vec_id"), col("__resid").as("embedding"))
+    val residBooks = Similarity.trainPqCodebooks(resid, "embedding", "vec_id",
+      m = 8, ksub = 16, dim = dim, iters = 2)
+    // rerank >= corpus size (and every cell probed) → the approximate
+    // pre-pass prunes nothing and the exact re-rank must reproduce the
+    // brute-force ranking bit-for-bit
+    val full = Seq(
+      "int8TopK" -> Similarity.int8TopK(q, embs, "embedding", "vec_id", 10, 1000),
+      "pqTopK" -> Similarity.pqTopK(q, embs, books, "embedding", "vec_id",
+        m = 8, dim = dim, k = 10, rerank = 1000),
+      "ivfadcTopK" -> Similarity.ivfadcTopK(q, embs, cents, residBooks, "embedding",
+        "vec_id", "cell", m = 8, dim = dim, k = 10, nprobe = 4, rerank = 1000))
+    full.foreach { case (name, out) => assert(ranked(out) == exact, name) }
     // with a tight candidate budget the approx pass should still keep
     // most of the true top-10 (quantization error is ~1/254 per component)
-    val approx = Similarity.int8TopK(q, embs, "embedding", "vec_id", 10, 30)
+    val approx = Similarity.int8TopK(q.filter(col("vec_id") === 0), embs, "embedding",
+        "vec_id", 10, 30)
       .select("neighbor_id").as[Long].collect().toSet
-    val recall = exact.map(_._1).count(approx.contains).toDouble / 10.0
+    val truth = exact.filter(_._1 == 0L).map(_._2)
+    val recall = truth.count(approx.contains).toDouble / 10.0
     assert(recall >= 0.8, s"recall@10 of the int8 pre-pass was $recall")
+    embs.unpersist()
+  }
+
+  test("a zero vector gets no cosine: never ranked, thresholded in, or given a cell") {
+    // ANSI division would throw on the zero norm; the shared cosine
+    // yields null instead, so every operator's output equals its output
+    // on the corpus without the zero vector
+    val dim = 4
+    val vecs = (1L to 12L).map(i =>
+      (i, Array.tabulate(dim)(d => ((i * 5 + d * 3) % 7 - 3).toDouble + 0.5), 1))
+    val withZero = ((0L, Array.fill(dim)(0.0), 1) +: vecs).toDF("vec_id", "embedding", "blk")
+    val without = withZero.filter(col("vec_id") =!= 0L)
+    val cents = Seq((0L, Array(1.0, 1.0, 1.0, 1.0)), (1L, Array(-1.0, 1.0, -1.0, 1.0)))
+      .toDF("cell", "embedding")
+    def queries(c: org.apache.spark.sql.DataFrame) = c.filter(col("vec_id") < 4)
+    val cases: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "bruteForceTopK" -> (c => Similarity.bruteForceTopK(queries(c), c, "embedding", "vec_id", 5)),
+      "ivfTopK" -> (c => Similarity.ivfTopK(queries(c), c, cents, "embedding", "vec_id",
+        "cell", 5, nprobe = 2)),
+      "int8TopK" -> (c => Similarity.int8TopK(queries(c), c, "embedding", "vec_id", 5, 100)),
+      "knnGraphRhp" -> (c => Similarity.knnGraphRhp(c, "embedding", "vec_id", dim, 3,
+        nPlanes = 2, nTables = 2)),
+      "embeddingNearDups" -> (c => Dedup.embeddingNearDups(c, "embedding", "vec_id", "blk", 0.3)),
+      "embeddingNearDupsRhp" -> (c => Dedup.embeddingNearDupsRhp(c, "embedding", "vec_id", dim,
+        0.3, nPlanes = 2, nTables = 2)))
+    cases.foreach { case (name, op) =>
+      val want = op(without).collect().map(_.toSeq).toSet
+      assert(want.nonEmpty, name)
+      assert(op(withZero).collect().map(_.toSeq).toSet == want, name)
+    }
+    val cells = Similarity.assignCells(withZero, cents, "embedding", "vec_id", "cell")
+      .select("vec_id").as[Long].collect().toSet
+    assert(cells == (1L to 12L).toSet)
+    val unit = withZero.filter(col("vec_id") === 0L)
+      .select(VectorFunctions.normalize(col("embedding")),
+        VectorFunctions.cosineSim(col("embedding"), col("embedding")))
+      .head()
+    assert(unit.getSeq[Any](0) == Seq(null, null, null, null))
+    assert(unit.isNullAt(1))
   }
 
   test("hand-written BMP/stored-PNG decode to their construction pixels; profiles match") {
