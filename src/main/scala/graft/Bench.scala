@@ -91,13 +91,14 @@ object Bench {
       // the dedup operators persist() intermediates; drop them so caches
       // don't accumulate across 40+ queries and GC-churn the tail
       spark.catalog.clearCache()
-      // clearCache() only drops catalog-cached plans; localCheckpoint()ed
-      // RDDs (the dedup/cluster operators' lineage truncation) keep their
-      // blocks until the ContextCleaner GCs them — across 60+ queries that
-      // is enough block-manager pressure to slow unrelated neighbors
-      // (round-3 bench: l1/l20/l21/l22 2.8-3.6x their quiet-box timings).
-      // The run's result frame is discarded here, so dropping its blocks
-      // eagerly is safe.
+      // clearCache() only drops catalog-cached plans; the frames the
+      // operators materialize through `Materialize` (local checkpoints on
+      // Bench's local master) keep their blocks until the ContextCleaner
+      // GCs them — across 60+ queries that is enough block-manager
+      // pressure to slow unrelated neighbors (round-3 bench:
+      // l1/l20/l21/l22 2.8-3.6x their quiet-box timings). The run's
+      // result frame is discarded here, so dropping its blocks eagerly
+      // is safe.
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       (ok || capped, capped, dt)
     }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /**
  * Distributed byte-pair-encoding (BPE) merge statistics — the
@@ -99,8 +100,8 @@ object Bpe {
    * Scale shape per round: one (a, b) hash agg over the vocab (map-side
    * combined), a 1-row `limit(1).collect()` argmax (driver-bounded, like
    * [[Similarity.trainCentroids]]'s k-row collects), and one narrow
-   * projection applying the merge. `localCheckpoint` truncates the
-   * per-round lineage so round n's plan does not replay rounds 1..n−1.
+   * projection applying the merge. Each round is materialized
+   * ([[graft.Materialize]]) so round n's plan does not replay rounds 1..n−1.
    * Stops early when no pair occurs twice — merging a count-1 pair
    * memorizes a single word, which no tokenizer wants.
    */
@@ -290,10 +291,9 @@ object Bpe {
   def trainMerges(docs: DataFrame, textCol: String, nMerges: Int,
                   driverVocabLimit: Long = 200000L,
                   minCount: Long = 1L): Seq[(String, String, Long)] = {
-    var vocab = wordCounts(docs, textCol, minCount)
+    var vocab = Materialize(wordCounts(docs, textCol, minCount)
       .select(expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("syms"),
-        col("c"))
-      .localCheckpoint()
+        col("c")), "Bpe.trainMerges")
     if (vocab.count() <= driverVocabLimit) {
       val spark = docs.sparkSession
       import spark.implicits._
@@ -321,8 +321,8 @@ object Bpe {
       else {
         val (a, b, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((a, b, cnt))
-        vocab = vocab.select(applyMerge(col("syms"), a, b).as("syms"), col("c"))
-          .localCheckpoint()
+        vocab = Materialize(vocab.select(applyMerge(col("syms"), a, b).as("syms"), col("c")),
+          "Bpe.trainMerges")
         round += 1
       }
     }

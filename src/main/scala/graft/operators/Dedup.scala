@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Materialize
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 
@@ -123,10 +124,8 @@ object Dedup {
     * the corpus) is persisted before the self-join: without it each join
     * side recomputes the whole shingle→signature pipeline (AQE broadcasts
     * one side, which defeats shuffle-exchange reuse). The persist is
-    * scoped to this call: the (tiny) pair set is eagerly materialized via
-    * `localCheckpoint`, the band cache dropped before returning — so
-    * library callers never accumulate cached blocks, and the returned
-    * frame is self-contained (its blocks are GC-cleaned with the frame). */
+    * scoped to this call ([[graft.Materialize.using]]): the (tiny) pair
+    * set is materialized and the band cache dropped before returning. */
   /** `maxBucketSize` guards against degenerate buckets: a band bucket of
     * b documents yields b(b−1)/2 candidate pairs, so one cluster of 10⁶
     * near-identical documents is a 10¹²-pair self-join. Buckets larger
@@ -138,8 +137,7 @@ object Dedup {
                             k: Int = 8, bands: Int = 4, shingleN: Int = 3,
                             maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val bandsDf = lshBands(minhashSignatures(docs, textCol, idCol, k, shingleN), idCol, k, bands)
-      .persist()
-    try {
+    Materialize.using("Dedup.minhashCandidatePairs", bandsDf) {
       val capped =
         if (maxBucketSize == Int.MaxValue) bandsDf
         else {
@@ -152,8 +150,7 @@ object Dedup {
       a.join(b, Seq("band_idx", "band_hash"))
         .filter(col("a_id") < col("b_id"))
         .select("a_id", "b_id").distinct()
-        .localCheckpoint()
-    } finally bandsDf.unpersist()
+    }
   }
 
   /** Exact n-gram Jaccard over candidate pairs: verify stage of the
@@ -166,7 +163,7 @@ object Dedup {
   def ngramJaccard(docs: DataFrame, textCol: String, idCol: String,
                    k: Int = 8, bands: Int = 4, shingleN: Int = 3,
                    maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    // pairs come back eagerly materialized (localCheckpoint) and tiny
+    // pairs come back materialized and tiny
     val pairs = minhashCandidatePairs(docs, textCol, idCol, k, bands, shingleN, maxBucketSize)
     // Referenced by both join sides (one shingle array per doc), but
     // semi-join-pruned to candidate ids FIRST: the materialized relation
@@ -186,21 +183,19 @@ object Dedup {
     // candidates first, so the materialized relations stay
     // O(distinct candidates), not O(corpus).
     val hashed = docs.select(col(idCol).as("id"), md5(col(textCol)).as("__h"))
-    val pairsH = pairs
+    val pairsH = Materialize(pairs
       .join(hashed.select(col("id").as("a_id"), col("__h").as("__ha"))
         .hint("shuffle_hash"), Seq("a_id"))
       .join(hashed.select(col("id").as("b_id"), col("__h").as("__hb"))
-        .hint("shuffle_hash"), Seq("b_id"))
-      .localCheckpoint()
+        .hint("shuffle_hash"), Seq("b_id")), "Dedup.ngramJaccard")
     val hashPairs = pairsH.select("__ha", "__hb").distinct()
     val candHashes = hashPairs.select(col("__ha").as("__h"))
       .union(hashPairs.select(col("__hb").as("__h"))).distinct()
-    val repSets = docs
+    val repSets = Materialize(docs
       .select(md5(col(textCol)).as("__h"), col(textCol))
       .groupBy("__h").agg(min(col(textCol)).as("__t"))
       .join(candHashes, Seq("__h"), "left_semi")
-      .select(col("__h"), wordShingles(col("__t"), shingleN).as("sh"))
-      .localCheckpoint()
+      .select(col("__h"), wordShingles(col("__t"), shingleN).as("sh")), "Dedup.ngramJaccard")
     val hashJac = hashPairs
       .join(repSets.select(col("__h").as("__ha"), col("sh").as("__sha")), Seq("__ha"))
       .join(repSets.select(col("__h").as("__hb"), col("sh").as("__shb")), Seq("__hb"))
@@ -297,25 +292,20 @@ object Dedup {
     * size; a giant component is probe-side skew that AQE skew-join
     * splits — the build side stays one row per node.)
     *
-    * `localCheckpoint` truncates lineage each round, keeping the plan
-    * O(1) deep however many iterations run; the edge table is
-    * materialized once and reused every round. The checkpoint is LAZY
-    * and the convergence count is the action that materializes it, so
-    * each round runs ONE job, not an eager-checkpoint job plus a
-    * convergence job — a count (not isEmpty) because it computes every
-    * partition, which a lazily-checkpointed RDD needs before its
-    * lineage is truncated (a short-circuiting isEmpty could checkpoint
-    * a partially-computed RDD). The driver-side loop is the convergence
+    * Each round is materialized ([[graft.Materialize]]), keeping the
+    * plan O(1) deep however many iterations run; the edge table is
+    * materialized once and reused every round. The round's
+    * materialization is lazy and the convergence count is the action
+    * that runs it, so each round runs ONE job, not a materialization job
+    * plus a convergence job. The driver-side loop is the convergence
     * test of an iterative algorithm, not a data path. */
   def connectedComponents(pairs: DataFrame, aCol: String = "a_id", bCol: String = "b_id",
                           maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val edges = Materialize(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("cluster"))
-      .localCheckpoint()
+      .distinct(), "Dedup.connectedComponents")
+    var labels = Materialize(edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("cluster")), "Dedup.connectedComponents")
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -343,17 +333,16 @@ object Dedup {
           lit(null).cast("long").as("__own"))
         .unionByName(labels.select(col("id"), col("cluster").as("__c"),
           col("cluster").as("__own")))
-      val merged = nbl.join(
+      val merged = Materialize(nbl.join(
           labels.select(col("id").as("__c"), col("cluster").as("__jc")),
           Seq("__c"), "left")
         .groupBy(col("id"))
         .agg(min(least(col("__c"), coalesce(col("__jc"), col("__c")))).as("__next"),
-          max(col("__own")).as("__own"))
-        .localCheckpoint(eager = false)
+          max(col("__own")).as("__own")), "Dedup.connectedComponents", eager = false)
       converged = merged.filter(col("__next") < col("__own")).count() == 0
-      // one checkpoint per round is enough: `merged` was materialized by
+      // one materialization per round is enough: `merged` was materialized by
       // the convergence count, and the label projection over it is
-      // narrow — a second localCheckpoint here was one extra
+      // narrow — a second materialization here was one extra
       // materialization job per round (× every CC caller) for a lineage
       // already O(1) deep
       labels = merged.select(col("id"), col("__next").as("cluster"))
@@ -401,7 +390,7 @@ object Dedup {
     val repLabels = connectedComponents(
         minhashCandidatePairs(repDocs, textCol, idCol, k, bands, shingleN, maxBucketSize))
       .select(col("id").as("__rep"), col("cluster").as("__c"))
-    // repLabels comes out of connectedComponents' localCheckpoint, which
+    // repLabels comes out of connectedComponents' materialization, which
     // strips the size stats AQE needs to pick a hash join — unhinted this
     // map-back is a SortMergeJoin (round-4/5 PlanAudit flag). It is one
     // row per representative-with-a-candidate: hint it like repDocs above.
@@ -734,9 +723,9 @@ object Dedup {
             .select(col("band_hash").as("__seenraw")),
           col("__sigfull") === concat(lit("raw:"), col("__seenraw")), "left_anti")
         .withColumn("__ord", unix_micros(col(tsCol).cast("timestamp")))
-      val kept = claimResolveBatch(withFull, bands,
-          Seq(col("__ord")), materialize = true)
-        .localCheckpoint() // consumed twice: the band append and onAdmitted
+      // consumed twice: the band append and onAdmitted
+      val kept = Materialize(claimResolveBatch(withFull, bands,
+          Seq(col("__ord")), materialize = true), "Dedup.nearDupAdmitAndAppend")
       // admit-and-append: survivors' bands (plus raw signatures for docs
       // too short to shingle) become part of the seen corpus NOW
       val newBands = (0 until bands).map(b =>
@@ -861,7 +850,7 @@ object Dedup {
     * (short docs own their raw-signature pseudo-band, so they dedup
     * exactly among themselves). Losers still claim their unshared bands —
     * the transitive cluster-collapse semantics of the streaming claim
-    * stage. `materialize` eagerly checkpoints the deduped frame when the
+    * stage. `materialize` materializes the deduped frame when the
     * caller runs inside foreachBatch (two consumers); the declared-query
     * path stays lazy and lets AQE's exchange reuse carry the diamond. */
   private def claimResolveBatch(withFull: DataFrame, bands: Int,
@@ -869,7 +858,7 @@ object Dedup {
     val exactW = Window.partitionBy(col("__sigfull")).orderBy(ordCols: _*)
     val deduped0 = withFull.withColumn("__rn", row_number().over(exactW))
       .filter(col("__rn") === 1).drop("__rn")
-    val deduped = if (materialize) deduped0.localCheckpoint() else deduped0
+    val deduped = if (materialize) Materialize(deduped0, "Dedup.nearDupAdmitAndAppend") else deduped0
     val bandKeys = (0 until bands).map(b =>
       when(col(s"__band$b").isNotNull, concat(lit(s"$b|"), col(s"__band$b"))))
     val keysArr = array_compact(array(bandKeys: _*))
@@ -963,7 +952,7 @@ object Dedup {
     * themselves — no data column needed — so the pair space is bounded by
     * bucket collisions (2^nPlanes buckets per table), the 100 TB form of
     * [[embeddingNearDups]]'s label blocking. Same scoped persist/
-    * checkpoint lifecycle as [[minhashCandidatePairs]]; buckets above
+    * materialize lifecycle as [[minhashCandidatePairs]]; buckets above
     * [[DefaultRhpMaxBucket]] drop unless the caller opts out. */
   def rhpCandidatePairs(embs: DataFrame, vecCol: String, idCol: String, dim: Int,
                         nPlanes: Int = 8, nTables: Int = 4,
@@ -987,19 +976,17 @@ object Dedup {
     // for corpora that skip it (recall cost documented at the caller).
     // Pairs come from a streaming self-join, never a per-bucket array: a
     // single unbounded bucket can exceed one task's memory as an array.
-    val b0 = buckets.persist()
-    try {
+    Materialize.using("Dedup.rhpCandidatePairs", buckets) {
       val capped =
-        if (maxBucketSize == Int.MaxValue) b0
-        else b0.withColumn("__bsz", count(lit(1)).over(Window.partitionBy("tbl", "bkt")))
+        if (maxBucketSize == Int.MaxValue) buckets
+        else buckets.withColumn("__bsz", count(lit(1)).over(Window.partitionBy("tbl", "bkt")))
           .filter(col("__bsz") <= maxBucketSize).drop("__bsz")
       val a = capped.select(col("tbl"), col("bkt"), col(idCol).as("a_id"))
       val b = capped.select(col("tbl"), col("bkt"), col(idCol).as("b_id"))
       a.join(b, Seq("tbl", "bkt"))
         .filter(col("a_id") < col("b_id"))
         .select("a_id", "b_id").distinct()
-        .localCheckpoint()
-    } finally b0.unpersist()
+    }
   }
 
   /** Embedding near-dup pairs with cosine > threshold over the
@@ -1135,7 +1122,6 @@ object Dedup {
   def simhashNearDups(docs: DataFrame, textCol: String, idCol: String,
                       maxHamming: Int = 3,
                       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming <= 3, "4-band banding is only complete for maxHamming <= 3")
     hammingPairs(simhash(docs, textCol, idCol), idCol, "simhash",
       bandBits = 8, maxHamming, maxBucketSize)
   }
@@ -1178,7 +1164,6 @@ object Dedup {
   def simhashNearDups64(docs: DataFrame, textCol: String, idCol: String,
                         maxHamming: Int = 3,
                         maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming <= 3, "4-band banding is only complete for maxHamming <= 3")
     hammingPairs(simhash64(docs, textCol, idCol), idCol, "simhash64",
       bandBits = 16, maxHamming, maxBucketSize)
   }
@@ -1191,7 +1176,6 @@ object Dedup {
   def hammingPairs64(sig: DataFrame, idCol: String, sigCol: String,
                      maxHamming: Int = 3,
                      maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming <= 3, "4-band banding is only complete for maxHamming <= 3")
     hammingPairs(sig, idCol, sigCol, bandBits = 16, maxHamming, maxBucketSize)
   }
 
@@ -1201,6 +1185,7 @@ object Dedup {
   private def hammingPairs(sig: DataFrame, idCol: String, sigCol: String,
                            bandBits: Int, maxHamming: Int,
                            maxBucketSize: Int): DataFrame = {
+    require(maxHamming <= 3, "4-band banding is only complete for maxHamming <= 3")
     val mask = lit((1L << bandBits) - 1)
     val exploded = sig.select(col(idCol), col(sigCol),
       posexplode(array((0 until 4).map(b =>
@@ -1362,15 +1347,13 @@ object Dedup {
     require(tau > 0 && tau <= 1, s"tau must be in (0,1], got $tau")
     // sh feeds four consumers (df counts, set sizes, the prefix table,
     // and the verify sets) and prefix feeds both self-join sides —
-    // persist both for the call's scope (minhashCandidatePairs'
-    // discipline), eagerly materialize the (small) result via
-    // localCheckpoint, and drop the caches before returning.
+    // persist both for the call's scope and materialize the (small)
+    // result (minhashCandidatePairs' discipline).
     val sh = docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col(idCol))
       .select(col(idCol).as("__id"),
         explode(wordShingles(col(textCol), shingleN)).as("__s"))
       .distinct()
-      .persist()
     val dfreq = sh.groupBy("__s").agg(count(lit(1)).as("__df"))
     val sz = sh.groupBy("__id").agg(count(lit(1)).as("__sz"))
     val prefix = sh.join(dfreq.hint("shuffle_hash"), Seq("__s"))
@@ -1379,7 +1362,6 @@ object Dedup {
       .join(sz, Seq("__id"))
       .filter(col("__r") <= col("__sz") - ceil(col("__sz") * lit(tau)) + 1)
       .select(col("__s"), col("__id"), col("__r"), col("__sz"))
-      .persist()
     val capped =
       if (maxBucketSize == Int.MaxValue) prefix
       else {
@@ -1413,7 +1395,7 @@ object Dedup {
       .select("a_id", "b_id").distinct()
     val sets = sh.groupBy("__id").agg(collect_set(col("__s")).as("__set"),
       count(lit(1)).as("__n"))
-    try {
+    Materialize.using("Dedup.similarityJoinExact", sh, prefix) {
       cand
         .join(sets.select(col("__id").as("a_id"), col("__set").as("__sa"),
           col("__n").as("__na")), Seq("a_id"))
@@ -1425,7 +1407,6 @@ object Dedup {
             (col("__na") + col("__nb") - col("__i")).cast("double"))
         .filter(col("jaccard") >= tau)
         .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
-        .localCheckpoint()
-    } finally { prefix.unpersist(); sh.unpersist() }
+    }
   }
 }

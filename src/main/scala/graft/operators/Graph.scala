@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /**
  * Bounded iterative graph traversal (north-star extension per
@@ -16,11 +17,11 @@ import org.apache.spark.sql.functions._
  * distance. Each round is one shuffled hash join + distinct — work
  * scales with the FRONTIER, not the reached set (anti-join keeps
  * settled nodes out of later joins), and rounds are bounded by
- * `maxHops`, so the driver loop is O(maxHops) jobs. `localCheckpoint`
- * truncates per-round lineage (round n's plan must not replay rounds
- * 1..n−1 — the [[Bpe.trainMerges]] discipline). At 100 TB the edge
- * table is the big side: it hash-partitions once per join on the
- * source key; the frontier (small by comparison) shuffles to it.
+ * `maxHops`, so the driver loop is O(maxHops) jobs. Each round is
+ * materialized ([[graft.Materialize]]), so round n's plan does not
+ * replay rounds 1..n−1 (the [[Bpe.trainMerges]] discipline). At 100 TB
+ * the edge table is the big side: it hash-partitions once per join on
+ * the source key; the frontier (small by comparison) shuffles to it.
  */
 object Graph {
 
@@ -49,10 +50,10 @@ object Graph {
     // 109 MiB by hop 8 on a 1k-edge fixture graph. The standard
     // mitigation for iterative self-referential queries (GraphFrames
     // does the same) is to disable constraint propagation for the
-    // loop; each round's plan optimizes at its eager checkpoint inside
+    // loop; each round's plan optimizes at its materialization inside
     // the loop, so restoring the conf afterwards leaves caller-side
     // optimization untouched (the final plan is a flat union of
-    // checkpoint scans — nothing to infer).
+    // materialized scans — nothing to infer).
     withoutConstraintPropagation(edges.sparkSession) {
       reachLoop(edges, seeds, srcCol, dstCol, nodeCol, maxHops)
     }
@@ -92,9 +93,9 @@ object Graph {
    * shuffle-hash join of the rank table to the PRE-JOINED
    * (edge, degree) table keyed by source + one dst-keyed sum agg +
    * one left attach to the node table — all keyed by node id, nothing
-   * row-scale broadcasts, and `localCheckpoint` truncates per-round
-   * lineage exactly like [[reachMinHops]] (same constraint-propagation
-   * guard, same concurrency note).
+   * row-scale broadcasts, and each round is materialized exactly like
+   * [[reachMinHops]]' (same constraint-propagation guard, same
+   * concurrency note).
    */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int, dampingPpb: Long = 850000000L,
@@ -110,32 +111,31 @@ object Graph {
                            iters: Int, dampingPpb: Long,
                            redistributeDangling: Boolean): DataFrame = {
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-    val nodes = e.select(col("__src").as("node"))
+    val nodes = Materialize(e.select(col("__src").as("node"))
       .union(e.select(col("__dst").as("node")))
-      .distinct().localCheckpoint()
+      .distinct(), "Graph.pageRank")
     // one driver-side scalar — the node COUNT, not node data
     val n = nodes.count()
     // empty graph: no nodes to rank — return the (empty) node frame
     // with the output schema instead of dividing by zero below
     if (n == 0L) return nodes.withColumn("rank_ppb", lit(0L))
     val base = (1000000000L - dampingPpb) / n
-    // (edge, out-degree) joined once and checkpointed: every round
+    // (edge, out-degree) joined once and materialized: every round
     // reuses it instead of re-aggregating degrees
-    val eDeg = e.join(
+    val eDeg = Materialize(e.join(
         e.groupBy(col("__src")).agg(count(lit(1)).as("__pr_deg"))
           .hint("shuffle_hash"),
-        Seq("__src"))
-      .localCheckpoint()
+        Seq("__src")), "Graph.pageRank")
     // dangling nodes (in the node set, never a source) materialize once;
     // only consulted when redistribution is on
     val dangling =
       if (!redistributeDangling) null
-      else nodes.join(
+      else Materialize(nodes.join(
           e.select(col("__src").as("node")).distinct().hint("shuffle_hash"),
-          Seq("node"), "left_anti")
-        .localCheckpoint()
+          Seq("node"), "left_anti"), "Graph.pageRank")
+    // a narrow projection of the materialized node set: round 1 reads it
+    // once, so materializing it again would only add a job
     var ranks = nodes.withColumn("rank_ppb", lit(1000000000L / n))
-      .localCheckpoint()
     for (_ <- 1 to iters) {
       // per-round dangling mass D — ONE scalar to the driver (the
       // convergence-test class of collect, not a data path); its even
@@ -152,13 +152,13 @@ object Graph {
         .select(col("__dst"), expr("rank_ppb div __pr_deg").as("__pr_c"))
         .groupBy(col("__dst"))
         .agg(sum(col("__pr_c")).as("__pr_s"))
-      ranks = nodes
+      ranks = Materialize(nodes
         .join(sums.hint("shuffle_hash"), col("node") === col("__dst"), "left")
         .withColumn("__pr_s0", coalesce(col("__pr_s"), lit(0L)))
         .select(col("node"),
           (lit(base + extra) +
-            expr(s"(${dampingPpb}L * __pr_s0) div 1000000000L")).as("rank_ppb"))
-        .localCheckpoint()
+            expr(s"(${dampingPpb}L * __pr_s0) div 1000000000L")).as("rank_ppb")),
+        "Graph.pageRank")
     }
     ranks
   }
@@ -167,28 +167,24 @@ object Graph {
                         srcCol: String, dstCol: String, nodeCol: String,
                         maxHops: Int): DataFrame = {
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-    // Only the per-round FRONTIER checkpoints (it is the small, hot
+    // Only the per-round FRONTIER is materialized (it is the small, hot
     // set); `reached` stays a plain union of the already-truncated
-    // frontiers — checkpointing the union each round would re-copy the
+    // frontiers — materializing the union each round would re-copy the
     // whole reached set O(rounds) times and balloon task binaries.
-    var frontier = seeds.select(col(nodeCol)).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
+    var frontier = Materialize(seeds.select(col(nodeCol)).distinct()
+      .withColumn("dist", lit(0L)), "Graph.reachMinHops")
     var reached = frontier
     var h = 1
-    // ONE job per round, not two: the round's checkpoint is LAZY and
-    // the emptiness test's count() is the action that materializes it
-    // (a count, not isEmpty, because it computes EVERY partition — a
-    // lazily-checkpointed RDD must be fully computed before its lineage
-    // is truncated; a short-circuiting isEmpty could checkpoint a
-    // partially-computed RDD). Same fusion as connectedComponents'.
+    // ONE job per round, not two: the round's materialization is lazy
+    // and the emptiness test's count() is the action that runs it. Same
+    // fusion as connectedComponents'.
     var frontierLive = !frontier.isEmpty
     while (h <= maxHops && frontierLive) {
-      val next = frontier.drop("dist")
+      val next = Materialize(frontier.drop("dist")
         .join(e.hint("shuffle_hash"), col(nodeCol) === col("__src"))
         .select(col("__dst").as(nodeCol)).distinct()
         .join(reached.select(nodeCol).hint("shuffle_hash"), Seq(nodeCol), "left_anti")
-        .withColumn("dist", lit(h.toLong))
-        .localCheckpoint(eager = false)
+        .withColumn("dist", lit(h.toLong)), "Graph.reachMinHops", eager = false)
       frontierLive = next.count() > 0
       reached = reached.union(next)
       frontier = next

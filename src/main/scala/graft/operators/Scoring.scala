@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.functions.TextFunctions._
 
 /**
@@ -175,13 +176,12 @@ object Scoring {
     // each re-derive the whole block-parse + 256-bucket classifier
     // subtree — the plan carried the html pipeline 3× (6 parquet scans,
     // 24 exchanges; measured 3.6 → 2.4 s warm on l87 after this). The
-    // checkpointed relation is one narrow row per KEPT block — the
+    // materialized relation is one narrow row per KEPT block — the
     // post-classifier contraction of the corpus, the same O(blocks)
-    // class as minhashCandidatePairs' checkpointed pair set.
-    val perBlock = hashedMulticlassScore(blocks, "__bt", "__bid", classes)
+    // class as minhashCandidatePairs' materialized pair set.
+    val perBlock = Materialize(hashedMulticlassScore(blocks, "__bt", "__bid", classes)
       .select(col("__bid.id").as(idCol), col("__bid.ord").as("ord"),
-        col("n_tokens"), col("pred"))
-      .localCheckpoint()
+        col("n_tokens"), col("pred")), "Scoring.blockLanguageSpans")
     def classIdx(c: Column): Column =
       classes.zipWithIndex.tail.foldLeft(when(c === classes.head._1, 0)) {
         case (acc, ((lab, _), i)) => acc.when(c === lab, i)
@@ -232,7 +232,7 @@ object Scoring {
    *
    * Scale shape (the `trainCentroids` pattern): the corpus touches
    * Spark ONCE — tokens collapse to a per-(doc, bucket) fraction table
-   * (≤ `buckets` rows per doc, `localCheckpoint`ed so no iteration
+   * (≤ `buckets` rows per doc, materialized so no iteration
    * replays the scan, partitioned by doc so the per-iteration score
    * window needs NO exchange). Each of the `iters` fixed iterations
    * then costs one windowed projection over that table plus one
@@ -250,17 +250,9 @@ object Scoring {
                           iters: Int = 30, lr: Double = 2.0): Array[Double] = {
     require(buckets > 0 && iters >= 0)
     import org.apache.spark.sql.expressions.Window
-    val bucket = (conv(substring(md5(col("__t")), 1, 4), 16, 10)
-      .cast("long") % buckets).cast("int")
     val byDoc = Window.partitionBy("__id")
-    val tb = docs
-      .select(col(idCol).as("__id"), col(labelCol).cast("double").as("__y"),
-        explode(wsTokens(col(textCol))).as("__t"))
-      .select(col("__id"), col("__y"), bucket.as("__b"))
-      .groupBy("__id", "__y", "__b").agg(count(lit(1)).as("__n"))
-      .withColumn("__f", col("__n").cast("double") / sum(col("__n")).over(byDoc))
-      .select("__id", "__y", "__b", "__f")
-      .localCheckpoint()
+    val tb = bucketFractions(docs, textCol, idCol, col(labelCol).cast("double"), buckets,
+      "Scoring.trainLogisticHashed")
     val nDocs = tb.select("__id").distinct().count()
     if (nDocs == 0) return new Array[Double](buckets)
     val w = new Array[Double](buckets)
@@ -284,7 +276,7 @@ object Scoring {
    * per-class hashed weight vectors [[hashedMulticlassScore]] consumes,
    * closing the language-ID loop end to end: label a seed corpus, train
    * here, classify everywhere. Same scale shape: the corpus collapses
-   * ONCE to the checkpointed per-(doc, bucket) fraction table
+   * ONCE to the materialized per-(doc, bucket) fraction table
    * (partitioned by doc, so the per-iteration score windows need no
    * exchange); each fixed iteration computes all k class scores in one
    * windowed projection (one WindowExec, k aggregates), the per-row
@@ -301,20 +293,9 @@ object Scoring {
                          labelCol: String, classes: Seq[String], buckets: Int,
                          iters: Int = 30, lr: Double = 2.0): Seq[(String, Array[Double])] = {
     require(buckets > 0 && iters >= 0 && classes.nonEmpty)
-    import org.apache.spark.sql.expressions.Window
     val k = classes.length
-    val bucket = (conv(substring(md5(col("__t")), 1, 4), 16, 10)
-      .cast("long") % buckets).cast("int")
-    val byDoc = Window.partitionBy("__id")
-    val tb = docs
-      .filter(col(labelCol).isin(classes: _*))
-      .select(col(idCol).as("__id"), col(labelCol).as("__y"),
-        explode(wsTokens(col(textCol))).as("__t"))
-      .select(col("__id"), col("__y"), bucket.as("__b"))
-      .groupBy("__id", "__y", "__b").agg(count(lit(1)).as("__n"))
-      .withColumn("__f", col("__n").cast("double") / sum(col("__n")).over(byDoc))
-      .select("__id", "__y", "__b", "__f")
-      .localCheckpoint()
+    val tb = bucketFractions(docs.filter(col(labelCol).isin(classes: _*)),
+      textCol, idCol, col(labelCol), buckets, "Scoring.trainSoftmaxHashed")
     val nDocs = tb.select("__id").distinct().count()
     val w = Array.fill(k)(new Array[Double](buckets))
     if (nDocs == 0) return classes.zip(w.toSeq)
@@ -327,6 +308,26 @@ object Scoring {
       }
     }
     classes.zip(w.toSeq)
+  }
+
+  /** The hashed trainers' materialized (doc, label, bucket, fraction)
+    * table `(__id, __y, __b, __f)`: `__f` = the doc's token share in md5
+    * bucket `__b` (the [[hashedLinearScore]] feature), `__y` = `label`.
+    * Partitioned by doc, so the per-iteration score windows need no
+    * exchange. */
+  private def bucketFractions(docs: DataFrame, textCol: String, idCol: String,
+                              label: Column, buckets: Int, op: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val bucket = (conv(substring(md5(col("__t")), 1, 4), 16, 10)
+      .cast("long") % buckets).cast("int")
+    val byDoc = Window.partitionBy("__id")
+    Materialize(docs
+      .select(col(idCol).as("__id"), label.as("__y"),
+        explode(wsTokens(col(textCol))).as("__t"))
+      .select(col("__id"), col("__y"), bucket.as("__b"))
+      .groupBy("__id", "__y", "__b").agg(count(lit(1)).as("__n"))
+      .withColumn("__f", col("__n").cast("double") / sum(col("__n")).over(byDoc))
+      .select("__id", "__y", "__b", "__f"), op)
   }
 
   /** One softmax-GD iteration's per-bucket gradient frame over the

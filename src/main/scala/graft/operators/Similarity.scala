@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Materialize
 import graft.functions.VectorFunctions._
 
 /**
@@ -106,7 +107,7 @@ object Similarity {
    * partial-aggregating groupBy on (cell, pos) + re-assembly — the plan
    * width is constant in the embedding dimension, so dim-1024+ vectors
    * never hit Janino generated-code limits (the per-dimension-column form
-   * did). Each round is eagerly materialized (`localCheckpoint`, k rows)
+   * did). Each round is materialized ([[graft.Materialize]], k rows)
    * so lineage doesn't grow across rounds and no cache outlives the call.
    *
    * Robustness (both deterministic, so the fixed-iteration oracle stays
@@ -135,9 +136,8 @@ object Similarity {
   def trainCentroids(corpus: DataFrame, vecCol: String, idCol: String,
                      k: Int, iters: Int): DataFrame = {
     val spark = corpus.sparkSession
-    var cents = corpus.orderBy(col(idCol)).limit(k)
-      .select(col(idCol).as("cell"), col(vecCol))
-      .localCheckpoint()
+    var cents = Materialize(corpus.orderBy(col(idCol)).limit(k)
+      .select(col(idCol).as("cell"), col(vecCol)), "Similarity.trainCentroids")
     var it = 0
     var converged = false
     while (it < iters && !converged) {
@@ -145,14 +145,13 @@ object Similarity {
       // element-wise mean per cell: one narrow (cell, pos, v) explosion,
       // sum+count partial-agg map-side, re-assemble in pos order (the
       // struct sort key is __pos, collect_list order is irrelevant)
-      var next = assigned
+      var next = Materialize(assigned
         .select(col("cell"), posexplode(col(vecCol)).as(Seq("__pos", "__v")))
         .groupBy(col("cell"), col("__pos"))
         .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__n"))
         .groupBy(col("cell"))
         .agg(transform(array_sort(collect_list(struct(col("__pos"), (col("__s") / col("__n")).as("__m")))),
-          x => x.getField("__m")).as(vecCol))
-        .localCheckpoint()
+          x => x.getField("__m")).as(vecCol)), "Similarity.trainCentroids")
       val empty = cents.select(col("cell")).exceptAll(next.select(col("cell")))
         .orderBy(col("cell")).collect()
       if (empty.nonEmpty) {
@@ -173,9 +172,9 @@ object Similarity {
             .limit(empty.length - fresh.length).select(col(vecCol)).collect()
         val rows = empty.zip(reseeds).map { case (c, v) =>
           org.apache.spark.sql.Row(c.get(0), v.get(0)) }
-        next = next.unionByName(spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toSeq, 1), next.schema))
-          .localCheckpoint()
+        next = Materialize(next.unionByName(spark.createDataFrame(
+          spark.sparkContext.parallelize(rows.toSeq, 1), next.schema)),
+          "Similarity.trainCentroids")
       }
       // exact-equality convergence on the two k-row frames (null-safe so
       // a missing cell — impossible after reseeding — would count as moved)
@@ -286,7 +285,8 @@ object Similarity {
   def trainPqCodebooks(corpus: DataFrame, vecCol: String, idCol: String,
                        m: Int, ksub: Int, dim: Int, iters: Int): DataFrame = {
     val spark = corpus.sparkSession
-    val subs = pqSubvectors(corpus, vecCol, idCol, m, dim).localCheckpoint()
+    val subs = Materialize(pqSubvectors(corpus, vecCol, idCol, m, dim),
+      "Similarity.trainPqCodebooks")
     // seed codes j = 0..ksub-1 from the ksub lowest-id vectors (a
     // ksub-row driver collect, the trainCentroids class)
     val seedRows = corpus.orderBy(col(idCol)).limit(ksub)
@@ -300,9 +300,8 @@ object Similarity {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("__sid", idType),
         org.apache.spark.sql.types.StructField("j", org.apache.spark.sql.types.IntegerType))))
-    var books = subs.join(broadcast(seedDf), col("__id") === col("__sid"))
-      .select(col("s"), col("j"), col("sv"))
-      .localCheckpoint()
+    var books = Materialize(subs.join(broadcast(seedDf), col("__id") === col("__sid"))
+      .select(col("s"), col("j"), col("sv")), "Similarity.trainPqCodebooks")
     for (_ <- 1 to iters) {
       val assigned = subs
         .join(broadcast(books.select(col("s"), col("j").as("__j"), col("sv").as("__cv"))),
@@ -322,7 +321,7 @@ object Similarity {
       // codes that won nothing keep their old centroid (deterministic,
       // codebook never shrinks)
       val dead = books.join(next.select("s", "j"), Seq("s", "j"), "left_anti")
-      books = next.unionByName(dead).localCheckpoint()
+      books = Materialize(next.unionByName(dead), "Similarity.trainPqCodebooks")
     }
     books
   }
@@ -584,7 +583,7 @@ object Similarity {
    * construction but REVERSE degree is unbounded on hub-heavy graphs,
    * exactly the join that explodes at 100 TB without the cap), two
    * id-keyed vector joins below the ranking window, one window.
-   * `localCheckpoint` truncates lineage per round under the same
+   * Each round is materialized ([[graft.Materialize]]) under the same
    * constraint-propagation guard as every iterative operator here.
    * Output: (src, nbr, sim, rnk), the [[knnGraphRhp]] schema.
    */
@@ -623,11 +622,11 @@ object Similarity {
   private def nnDescentLoop(embs: DataFrame, vecCol: String, idCol: String,
                             k: Int, graph0: DataFrame, rounds: Int,
                             maxDegree: Int, hashSample: Boolean): DataFrame = {
-    var g = graph0.select(col("src"), col("nbr"), col("sim"), col("rnk"))
-      .localCheckpoint()
+    var g = Materialize(graph0.select(col("src"), col("nbr"), col("sim"), col("rnk")),
+      "Similarity.nnDescent")
     for (_ <- 1 to rounds) {
       // Undirected closed neighborhood via an EXPLODE of each edge's two
-      // directions (g is a localCheckpoint, but the self-union form still
+      // directions (g is materialized, but the self-union form still
       // doubled the scan + distinct input; the explode emits both
       // directions from one pass), then ONE hash-partitioned
       // collect_set per pivot. The per-pivot member array is what the
@@ -674,7 +673,8 @@ object Similarity {
         .unionByName(g.select(least(col("src"), col("nbr")).as("a_id"),
           greatest(col("src"), col("nbr")).as("b_id")))
         .distinct()
-      g = symmetricTopK(scorePairs(pairs, embs, vecCol, idCol), k).localCheckpoint()
+      g = Materialize(symmetricTopK(scorePairs(pairs, embs, vecCol, idCol), k),
+        "Similarity.nnDescent")
     }
     g
   }
@@ -689,7 +689,7 @@ object Similarity {
     * it survives the dedup. Every stage is an audited operator: the
     * bucket-bounded graph, the O(diameter) label propagation, and one
     * hinted map-back join (the component labels come out of a
-    * localCheckpoint, which strips the stats AQE needs — same reason
+    * materialized frame, which strips the stats AQE needs — same reason
     * Dedup.duplicateClusters hints its map-back). */
   def semanticDedup(embs: DataFrame, vecCol: String, idCol: String, dim: Int,
                     threshold: Double, k: Int = 3, nPlanes: Int = 4,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /**
  * Fixed (tumbling) and sliding event-time windows — extensions beyond the
@@ -230,19 +231,19 @@ object Windows {
                          valueCol: String, bucketSec: Long,
                          bucketsPerChunk: Long = 24L): DataFrame = {
     val mStruct = struct(col("bucket").as("b"), col("__v").as("v"))
-    val measured = events
+    // measured feeds FOUR consumers (spine, the spine join, chunkAgg,
+    // spineChunks) — unmaterialized each replays the events scan + the
+    // (key, bucket) agg (8 parquet scans in the r23 before-plan; guide
+    // §3.3). The frame is one slim row per measured (key, bucket) —
+    // orders of magnitude below event rows.
+    val measured = Materialize(events
       .select(col(keyCol), expr(s"unix_timestamp($tsCol) div $bucketSec").as("bucket"),
         expr(s"CAST(floor($valueCol * 1000000) AS BIGINT)").as("__m"))
       .groupBy(col(keyCol), col("bucket"))
       .agg(sum(col("__m")).as("__s"), count(lit(1)).as("__n"))
       .select(col(keyCol), col("bucket"),
-        (col("__s").cast("double") / col("__n") / lit(1000000.0)).as("__v"))
-      // measured feeds FOUR consumers (spine, the spine join, chunkAgg,
-      // spineChunks) — without the checkpoint each replays the events
-      // scan + the (key, bucket) agg (8 parquet scans in the r23
-      // before-plan; guide §3.3). The frame is one slim row per
-      // measured (key, bucket) — orders of magnitude below event rows.
-      .localCheckpoint()
+        (col("__s").cast("double") / col("__n") / lit(1000000.0)).as("__v")),
+      "Windows.gapFillInterpolate")
     val spine = measured.groupBy(col(keyCol))
       .agg(min(col("bucket")).as("__lo"), max(col("bucket")).as("__hi"))
       .select(col(keyCol), explode(sequence(col("__lo"), col("__hi"))).as("bucket"))
@@ -306,13 +307,13 @@ object Windows {
 
   def gapFillCumulative(events: DataFrame, keyCol: String, tsCol: String,
                         bucketSec: Long, bucketsPerChunk: Long = 24L): DataFrame = {
-    val counts = events
+    // counts feeds the spine AND the spine join (and `filled` feeds
+    // runningSumChunked twice) — materialize the slim per-(key, bucket)
+    // agg so no consumer replays the events scan (guide §3.3)
+    val counts = Materialize(events
       .select(col(keyCol), expr(s"unix_timestamp($tsCol) div $bucketSec").as("bucket"))
-      .groupBy(col(keyCol), col("bucket")).agg(count(lit(1)).as("n_events"))
-      // counts feeds the spine AND the spine join (and `filled` feeds
-      // runningSumChunked twice) — checkpoint the slim per-(key,
-      // bucket) agg so no consumer replays the events scan (guide §3.3)
-      .localCheckpoint()
+      .groupBy(col(keyCol), col("bucket")).agg(count(lit(1)).as("n_events")),
+      "Windows.gapFillCumulative")
     val spine = counts.groupBy(col(keyCol))
       .agg(min(col("bucket")).as("__lo"), max(col("bucket")).as("__hi"))
       .select(col(keyCol), explode(sequence(col("__lo"), col("__hi"))).as("bucket"))

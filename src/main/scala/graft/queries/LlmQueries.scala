@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.sources.Tables
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Multimodal, Similarity, VideoFixtures}
@@ -4387,16 +4388,16 @@ object LlmQueries {
         }
         // materialize the extracted corpus ONCE: dedupCorpus references
         // its input from several sides (exact window, shingle bands,
-        // join-backs), and without the checkpoint every reference
-        // re-runs all eleven construct→extract codec legs — measured
-        // 2.5× wall back on the 7-way shape. This is the standard
-        // persist-the-
-        // extracted-corpus-before-dedup step of a real pipeline.
-        val docs = htmlDocs.unionAll(pdfDocs).unionAll(docxDocs).unionAll(epubDocs)
+        // join-backs), and unmaterialized every reference re-runs all
+        // eleven construct→extract codec legs — measured 2.5× wall back
+        // on the 7-way shape (SCALE.md, round-16 probes). This is the
+        // standard persist-the-extracted-corpus-before-dedup step of a
+        // real pipeline.
+        val docs = Materialize(htmlDocs.unionAll(pdfDocs).unionAll(docxDocs).unionAll(epubDocs)
           .unionAll(xlsxDocs).unionAll(pptxDocs).unionAll(odtDocs)
           .unionAll(docDocs).unionAll(xlsDocs).unionAll(pptDocs).unionAll(rtfDocs)
-          .select(col("mid").as("doc_id"), normalizeText(col("text")).as("text"))
-          .localCheckpoint()
+          .select(col("mid").as("doc_id"), normalizeText(col("text")).as("text")),
+          "l130_mixed_cascade")
         Dedup.dedupCorpus(docs, "text", "doc_id", 0.8)
           .select(col("doc_id"),
             length(col("text")).cast("long").as("n_chars"),

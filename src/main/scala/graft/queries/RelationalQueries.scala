@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Materialize
 import graft.sources.Tables
 import graft.operators.{AsOfJoin, Bucketing}
 
@@ -460,16 +461,15 @@ object RelationalQueries {
       (s, d) => {
         // spend feeds FIVE consumers (the ranked rows, both sides of
         // runningSumScalable's triangular offsets self-join, and the
-        // per-segment counts): without the checkpoint the plan replays
-        // the orders agg + customer join per consumer — 16 parquet
-        // scans / 32 exchanges in plans/r19/r17_..._before.txt (guide
-        // §3.3: materialize an intermediate to truncate a plan that
+        // per-segment counts): unmaterialized the plan replays the
+        // orders agg + customer join per consumer — 16 parquet scans /
+        // 32 exchanges in plans/r19/r17_..._before.txt (guide §3.3:
+        // materialize an intermediate to truncate a plan that
         // multiplies a subtree)
-        val spend = Tables.orders(s, d).groupBy(col("o_custkey"))
+        val spend = Materialize(Tables.orders(s, d).groupBy(col("o_custkey"))
           .agg(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("spend"))
           .join(Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment")),
-            col("o_custkey") === col("c_custkey"))
-          .localCheckpoint()
+            col("o_custkey") === col("c_custkey")), "r17_spend_quartiles")
         val ranked = graft.operators.Windows.runningSumScalable(
           spend, Seq("c_mktsegment"),
           floor(-col("spend") / lit(1000.0)).cast("long"),

@@ -109,7 +109,8 @@ class StreamStreamJoinSpec extends AnyFunSuite {
       query.processAllAvailable()
       val state = query.lastProgress.stateOperators(0)
       assert(state.numRowsTotal == 1, s"join state not evicted: ${state.numRowsTotal} keys")
-      assert(query.recentProgress.map(_.stateOperators(0).numRowsRemoved).sum >= 5)
+      // an idle trigger's progress carries no state operators
+      assert(query.recentProgress.map(_.stateOperators.map(_.numRowsRemoved).sum).sum >= 5)
     } finally query.stop()
   }
 
