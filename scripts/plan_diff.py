@@ -13,13 +13,25 @@ sides are normalized first:
   - expression ids (`#123`, `#123L`) become `#N`,
   - exchange plan ids (`[plan_id=2058]`) become `[plan_id=N]`,
   - lambda variable names (`lambda x_12`) lose their counter,
+  - JVM lambda classes (`Multimodal$$$Lambda$6276/0x00007f64b568a000`)
+    become `Multimodal$$$Lambda$N`,
   - object identities (`UnsafeArrayData@7a50b5f7`) become `@H`,
   - RDD ids and call sites (`MapPartitionsRDD[82] at localCheckpoint at
-    Similarity.scala:723`) lose their numbers.
+    Similarity.scala:723`) become `MapPartitionsRDD[N] at localCheckpoint
+    at <site>`: the file that materialized a frame is not part of its plan,
+  - paths under a `spark-warehouse` directory (the `Location` of the
+    bucketed tables, which lies in the checkout that ran the dump) start
+    at `<warehouse>/`.
 
-What is left differs only if the plans do. `--tree` compares just the
-operator tree (the indented block above the first node's details), which
-shows operators, joins, join strategies and exchanges in order.
+What is left differs only if the plans do, with one known exception: an
+`Expand` orders its distinct aggregates by expression id, so a query with
+two distinct counts (l60_normalized_dedup) can list them in either order
+from one run to the next; two full dumps of one commit differ there and
+nowhere else.
+
+`--tree` compares just the operator tree (the indented block above the
+first node's details), which shows operators, joins, join strategies and
+exchanges in order.
 Prints one line per query (`same` or the number of differing lines, then
 a unified diff unless `--quiet`) and exits 1 if any query differs or is
 missing on one side.
@@ -34,9 +46,12 @@ RULES = [
     (re.compile(r"#\d+L?\b"), "#N"),
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
     (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_N"),
+    (re.compile(r"\$\$Lambda(\$\d+)?/0x[0-9a-f]+"), "$$Lambda$N"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(RDD\[N\] at \w+ at )[\w$.]+\.scala:\d+"), r"\1<site>"),
     (re.compile(r"(\.scala):\d+"), r"\1:N"),
+    (re.compile(r"(file:)?/[^\s,\]]*/spark-warehouse/"), "<warehouse>/"),
 ]
 
 

@@ -1,7 +1,12 @@
 package graft.streaming
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, PathFilter}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Path, PathFilter,
+  RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileSystemBasedCheckpointFileManager}
@@ -18,9 +23,26 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
  * commit rename (`AbstractFileSystem.renameInternal` reads both ends'
  * link status). Those forks, not rows, were most of a stateful
  * micro-batch's fixed cost; the `FileSystem` manager renames without
- * them. Hadoop's `RawLocalFileSystem` still forks `chmod` for each file
- * it creates, under either manager (SCALE.md "The per-batch fixed cost
- * is checkpoint file commits").
+ * them.
+ *
+ * Modes without `chmod`: Hadoop's local file system creates every file
+ * (data and `.crc`) and every directory with an explicit mode, and
+ * without the native library it sets that mode by forking `chmod`. The
+ * `file:` delegate therefore opens its file system from a copy of the
+ * query's Hadoop conf that maps `file:` to [[ChmodFreeLocalFileSystem]]
+ * (uncached, so the session's own `file:` file system, parquet I/O and
+ * shuffle are untouched). It is Hadoop's checksummed `LocalFileSystem`,
+ * with the same `.crc` files, over a raw file system that applies the
+ * same nine mode bits with `Files.setPosixFilePermissions`, and falls
+ * back to Hadoop's own `setPermission` for a mode NIO cannot express
+ * (sticky bit) or a file store without POSIX attributes (SCALE.md "The
+ * per-batch fixed cost is checkpoint file commits"). It also fixes which
+ * rename a commit gets: with hive-exec on the class path (as in Spark's
+ * distribution), service loading binds `file:` to Hive's
+ * `ProxyLocalFileSystem`, whose rename returns false instead of replacing
+ * an existing file, and Spark's `FileSystem` manager then keeps the old
+ * file without an error when overwriting was allowed. Hadoop's
+ * `LocalFileSystem` renames with `rename(2)`, replacing the target.
  *
  * Why it is safe on `file:`: both managers write a temp file and rename
  * it over the target, and both honour `overwriteIfPossible = false` by
@@ -43,7 +65,7 @@ class CheckpointFiles(path: Path, conf: Configuration) extends CheckpointFileMan
 
   private[streaming] val delegate: CheckpointFileManager =
     if (path.getFileSystem(conf).getUri.getScheme == "file")
-      new FileSystemBasedCheckpointFileManager(path, conf)
+      new FileSystemBasedCheckpointFileManager(path, CheckpointFiles.chmodFree(conf))
     else {
       val sparkDefault = new Configuration(conf)
       sparkDefault.unset(CheckpointFiles.Key)
@@ -70,6 +92,15 @@ private[graft] object CheckpointFiles {
     * from the query's Hadoop conf, which carries the session's SQL conf. */
   val Key = "spark.sql.streaming.checkpointFileManagerClass"
 
+  /** A copy of `conf` whose `file:` scheme opens a fresh
+    * [[ChmodFreeLocalFileSystem]]. */
+  private def chmodFree(conf: Configuration): Configuration = {
+    val c = new Configuration(conf)
+    c.set("fs.file.impl", classOf[ChmodFreeLocalFileSystem].getName)
+    c.setBoolean("fs.file.impl.disable.cache", true)
+    c
+  }
+
   /** On a streaming `ds`, make [[CheckpointFiles]] its session's checkpoint
     * file manager unless the session already names one: an explicit
     * choice always wins. Called wherever graft composes a stateful
@@ -79,3 +110,28 @@ private[graft] object CheckpointFiles {
     if (ds.isStreaming && conf.getOption(Key).isEmpty) conf.set(Key, classOf[CheckpointFiles].getName)
   }
 }
+
+/** Hadoop's raw local file system, except that [[setPermission]] sets the
+  * nine `rwx` bits through java.nio instead of forking `chmod`. A mode
+  * with more bits (the sticky bit) or a file store without POSIX
+  * attributes takes Hadoop's own path. */
+private[streaming] class ChmodFreeRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val mode = permission.toShort.toInt
+    if ((mode & ~0x1ff) != 0) super.setPermission(p, permission) // a bit above 0777
+    else {
+      // `PosixFilePermission` lists owner read (0400) down to others execute (0001)
+      val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+      PosixFilePermission.values.zipWithIndex.foreach { case (perm, i) =>
+        if ((mode & (0x100 >> i)) != 0) perms.add(perm)
+      }
+      try Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
+      catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+    }
+  }
+}
+
+/** Hadoop's checksummed local file system (same data and `.crc` files)
+  * over [[ChmodFreeRawLocalFileSystem]]; [[CheckpointFiles]] opens it for
+  * `file:` checkpoint locations. */
+private[streaming] class ChmodFreeLocalFileSystem extends LocalFileSystem(new ChmodFreeRawLocalFileSystem)

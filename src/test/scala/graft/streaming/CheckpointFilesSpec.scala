@@ -1,11 +1,17 @@
 package graft.streaming
 
 import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FileSystem, LocalFileSystem, Path,
+  RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
@@ -162,5 +168,102 @@ class CheckpointFilesSpec extends AnyFunSuite {
     kernelOnStream(s)
     assert(Env.withGlobalStateSession(s)(_.conf.getOption(Key)) ==
       Some(classOf[CheckpointFiles].getName))
+  }
+
+  private val Uuid = "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}".r
+
+  /** Every file and directory under `root`: relative path (a temp file's
+    * UUID masked), mode (with the bits above `0777`) and, for a file, its
+    * bytes. */
+  private def tree(root: String): Seq[(String, Int, Seq[Byte])] = {
+    val base = Paths.get(root)
+    val walk = Files.walk(base)
+    try walk.iterator.asScala.filter(_ != base).map { p =>
+      val bytes = if (Files.isDirectory(p)) Seq.empty[Byte] else Files.readAllBytes(p).toSeq
+      (Uuid.replaceAllIn(base.relativize(p).toString, "<uuid>"), mode(p.toString), bytes)
+    }.toSeq.sortBy(_._1) finally walk.close()
+  }
+
+  /** The mode bits of `path`, the sticky bit included (NIO's POSIX view
+    * has only the nine `rwx` bits). */
+  private def mode(path: String): Int =
+    Files.getAttribute(Paths.get(path), "unix:mode").asInstanceOf[Int] & oct("7777")
+
+  private def oct(digits: String): Int = Integer.parseInt(digits, 8)
+
+  /** Commits a checkpoint-like tree through `m`: an explicit `mkdirs`, a
+    * create, an overwrite, a non-overwriting create into a missing
+    * directory, and a refused overwrite. */
+  private def commitTree(m: CheckpointFileManager, root: String): Unit = {
+    def write(rel: String, text: String, overwrite: Boolean): Unit = {
+      val out = m.createAtomic(new Path(root, rel), overwrite)
+      out.write(text.getBytes(UTF_8))
+      out.close()
+    }
+    m.mkdirs(new Path(root, "state/0/0"))
+    write("state/0/0/1.delta", "first", overwrite = true)
+    write("state/0/0/1.delta", "second, longer", overwrite = true)
+    write("offsets/0", "v1\n{}", overwrite = false)
+    intercept[Exception](write("offsets/0", "again", overwrite = false))
+  }
+
+  for (umask <- Seq(None, Some("027"))) {
+    test(s"the file: manager commits the files and modes Spark's FileSystem manager does " +
+        s"(umask ${umask.getOrElse("default")})") {
+      val extra = umask.map("fs.permissions.umask-mode" -> _).toSeq
+      val (stock, ours) = (tmp(), tmp())
+      // Hadoop's own local file system, uncached so that it reads this umask.
+      // (With hive-exec on the class path, service loading binds `file:` to
+      // Hive's ProxyLocalFileSystem, whose rename never replaces a file.)
+      val stockConf = hadoopConf(extra ++ Seq("fs.file.impl" -> classOf[LocalFileSystem].getName,
+        "fs.file.impl.disable.cache" -> "true"): _*)
+      val sm = new FileSystemBasedCheckpointFileManager(new Path(stock), stockConf)
+      val om = new CheckpointFiles(new Path(ours), hadoopConf(extra: _*))
+      try { commitTree(sm, stock); commitTree(om, ours) } finally om.close()
+      val expected = tree(stock)
+      assert(expected.map(_._1).contains("state/0/0/.1.delta.crc"))
+      assert(expected.map(_._1).contains("offsets/.0.crc"))
+      assert(expected.collect { case ("state/0/0/1.delta", _, b) => new String(b.toArray, UTF_8) } ==
+        Seq("second, longer"))
+      val (file, dir) = if (umask.isEmpty) (oct("644"), oct("755")) else (oct("640"), oct("750"))
+      assert(expected.collect { case (p, m, _) if p.endsWith("delta") => m } == Seq(file))
+      assert(expected.collect { case (p, m, _) if p == "state/0/0" => m } == Seq(dir))
+      assert(tree(ours) == expected)
+    }
+  }
+
+  test("the file: delegate writes through the chmod-free file system; the session's does not") {
+    val dir = tmp()
+    val m = new CheckpointFiles(new Path(dir), hadoopConf())
+    val fsField = classOf[FileSystemBasedCheckpointFileManager].getDeclaredField("fs")
+    fsField.setAccessible(true)
+    val fs = try fsField.get(m.delegate).asInstanceOf[FileSystem] finally m.close()
+    assert(fs.isInstanceOf[ChmodFreeLocalFileSystem])
+    assert(fs.asInstanceOf[LocalFileSystem].getRaw.isInstanceOf[ChmodFreeRawLocalFileSystem])
+    assert(!new Path(dir).getFileSystem(hadoopConf()).isInstanceOf[ChmodFreeLocalFileSystem])
+  }
+
+  test("all 512 nine-bit modes set through the chmod-free file system read back unchanged") {
+    val fs = new ChmodFreeRawLocalFileSystem
+    fs.initialize(URI.create("file:///"), new Configuration())
+    val file = new Path(tmp(), "f")
+    fs.create(file).close()
+    val dir = new Path(tmp(), "d")
+    assert(fs.mkdirs(dir))
+    for (m <- 0 until 512; p <- Seq(file, dir)) {
+      fs.setPermission(p, new FsPermission(m.toShort))
+      assert(mode(p.toUri.getPath) == m, f"$p%s: set $m%04o")
+    }
+  }
+
+  test("a sticky-bit mode takes Hadoop's own setPermission") {
+    val fs = new ChmodFreeRawLocalFileSystem
+    fs.initialize(URI.create("file:///"), new Configuration())
+    val dir = new Path(tmp(), "sticky")
+    assert(fs.mkdirs(dir))
+    fs.setPermission(dir, new FsPermission(oct("1755").toShort)) // NIO cannot set the sticky bit
+    assert(mode(dir.toUri.getPath) == oct("1755"))
+    fs.setPermission(dir, new FsPermission(oct("755").toShort)) // back through NIO
+    assert(mode(dir.toUri.getPath) == oct("755"))
   }
 }
