@@ -213,8 +213,7 @@ object Dedup {
     * partial-aggregating sums — md5 once per token, all 32 votes combined
     * map-side, whole-stage codegen throughout (an array-fold HOF variant
     * measured 2× slower: HOF lambdas are CodegenFallback). */
-  def simhash(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    // repartition rationale as in minhashSignatures
+  def simhash(docs: DataFrame, textCol: String, idCol: String): DataFrame =
     // Bit extraction: instead of 32 substring+instr string probes per
     // token, parse the 32 hex digits once as four 8-digit chunks
     // (conv base16 — 32 bits each, no sign trouble in a long) and test
@@ -222,22 +221,34 @@ object Dedup {
     // its (b%8)-th most-significant nibble, so its high bit is bit
     // 4*(7 - b%8) + 3 of the chunk — identical votes to the string form
     // (digit ∈ {8..f} ⇔ high bit set), ~2× cheaper per token.
+    simhashVotes(docs, textCol, idCol, chunks = 4, width = 32,
+      b => 4 * (7 - b % 8) + 3, "simhash")
+
+  /** The SimHash body both widths share: md5 each whitespace token, parse
+    * its first `chunks` 8-hex-digit chunks as longs, let bit b of the
+    * signature be the majority vote (±1 per token) of bit `shift(b)` of
+    * chunk b / (width / chunks), and pack the `width` majorities into one
+    * long named `out`. Distinct powers of two: + has no carries, so bit
+    * 63 (the long's sign bit) composes fine. */
+  private def simhashVotes(docs: DataFrame, textCol: String, idCol: String,
+                           chunks: Int, width: Int, shift: Int => Int,
+                           out: String): DataFrame = {
+    // repartition rationale as in minhashSignatures
     val tok = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col(idCol))
       .select(col(idCol), explode(wsTokens(col(textCol))).as("t"))
       .select(col(idCol), md5(col("t")).as("h"))
-    val chunks = tok.select(
-      col(idCol) +: (0 until 4).map(c =>
+    val parsed = tok.select(
+      col(idCol) +: (0 until chunks).map(c =>
         conv(substring(col("h"), c * 8 + 1, 8), 16, 10).cast("long").as(s"c$c")): _*)
-    val votes = (0 until 32).map { b =>
-      val shift = 4 * (7 - b % 8) + 3
-      sum(when(shiftright(col(s"c${b / 8}"), shift).bitwiseAND(lit(1L)) === 1L, 1L)
+    val votes = (0 until width).map { b =>
+      sum(when(shiftright(col(s"c${b / (width / chunks)}"), shift(b)).bitwiseAND(lit(1L)) === 1L, 1L)
         .otherwise(-1L)).as(s"v$b")
     }
-    val agg = chunks.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
-    val sig: Column = (0 until 32)
+    val agg = parsed.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
+    val sig: Column = (0 until width)
       .map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
       .reduce(_ + _)
-    agg.select(col(idCol), sig.as("simhash"))
+    agg.select(col(idCol), sig.as(out))
   }
 
   /**
@@ -1135,28 +1146,10 @@ object Dedup {
     * between bounded buckets and a quadratic verify stage. Not
     * oracle-portable (the declared query stays 32-bit); spec-certified
     * by brute force instead (OperatorSpec). Output: (idCol, simhash64). */
-  def simhash64(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    // repartition + chunked-conv rationale as in [[simhash]]; two 8-digit
-    // chunks cover the first 64 md5 bits, MSB-first within each chunk
-    val tok = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col(idCol))
-      .select(col(idCol), explode(wsTokens(col(textCol))).as("t"))
-      .select(col(idCol), md5(col("t")).as("h"))
-    val chunks = tok.select(
-      col(idCol) +: (0 until 2).map(c =>
-        conv(substring(col("h"), c * 8 + 1, 8), 16, 10).cast("long").as(s"c$c")): _*)
-    val votes = (0 until 64).map { b =>
-      val shift = 31 - b % 32
-      sum(when(shiftright(col(s"c${b / 32}"), shift).bitwiseAND(lit(1L)) === 1L, 1L)
-        .otherwise(-1L)).as(s"v$b")
-    }
-    val agg = chunks.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
-    // distinct powers of two: + has no carries, so bit 63 (the long's
-    // sign bit) composes fine
-    val sig: Column = (0 until 64)
-      .map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    agg.select(col(idCol), sig.as("simhash64"))
-  }
+  def simhash64(docs: DataFrame, textCol: String, idCol: String): DataFrame =
+    // two 8-digit chunks cover the first 64 md5 bits, MSB-first within
+    // each chunk
+    simhashVotes(docs, textCol, idCol, chunks = 2, width = 64, b => 31 - b % 32, "simhash64")
 
   /** [[simhashNearDups]] at 64-bit/16-bit-band geometry: same pigeonhole
     * completeness (Hamming ≤ 3 spans at most 3 of the 4 bands), 65k

@@ -56,6 +56,14 @@ object Multimodal {
     files.mapPartitions(_.map(decodeStub))
   }
 
+  /** The payload as an image, or null when ImageIO cannot read it.
+    * NonFatal, not just IOException: the JDK codecs throw runtime
+    * exceptions (ArrayIndexOutOfBounds, NegativeArraySize, …) on
+    * truncated/crafted payloads, and those must also be data here. */
+  private def readImage(payload: Array[Byte]): java.awt.image.BufferedImage =
+    try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+    catch { case scala.util.control.NonFatal(_) => null }
+
   /**
    * REAL image decode for the formats the JDK ships codecs for
    * (PNG/BMP/GIF/JPEG via `javax.imageio` — no native library needed):
@@ -66,12 +74,7 @@ object Multimodal {
    * a corrupt payload in a 100 TB corpus must not kill the stage.
    */
   def decodeImage(m: MediaFile): MediaMeta = {
-    // NonFatal, not just IOException: the JDK codecs throw runtime
-    // exceptions (ArrayIndexOutOfBounds, NegativeArraySize, …) on
-    // truncated/crafted payloads, and those must also be data here.
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.payload))
-      catch { case scala.util.control.NonFatal(_) => null }
+    val img = readImage(m.payload)
     if (img == null) decodeStub(m)
     else MediaMeta(m.doc_id, m.payload.length.toLong,
       width = img.getWidth.toLong, height = img.getHeight.toLong,
@@ -157,9 +160,7 @@ object Multimodal {
   def imageDHash(files: Dataset[MediaFile]): Dataset[ImageHash] = {
     import files.sparkSession.implicits._
     files.mapPartitions(_.map { m =>
-      val img =
-        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.payload))
-        catch { case scala.util.control.NonFatal(_) => null }
+      val img = readImage(m.payload)
       if (img == null) ImageHash(m.doc_id, decoded = false, 0L)
       else ImageHash(m.doc_id, decoded = true, dHash64(img))
     })
@@ -178,9 +179,7 @@ object Multimodal {
   def imageProfiles(files: Dataset[MediaFile]): Dataset[ImageProfile] = {
     import files.sparkSession.implicits._
     files.mapPartitions(_.map { m =>
-      val img =
-        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.payload))
-        catch { case scala.util.control.NonFatal(_) => null }
+      val img = readImage(m.payload)
       if (img == null) ImageProfile(m.doc_id, 0L, 0L, decoded = false, 0L)
       else ImageProfile(m.doc_id, img.getWidth.toLong, img.getHeight.toLong,
         decoded = true, dHash64(img))

@@ -238,12 +238,14 @@ object PdfCrypt {
     aesNoPad(javax.crypto.Cipher.ENCRYPT_MODE,
       hash2B(ownerPw, keySalt, u48, 6), new Array[Byte](16), fileKey)
 
-  /** V5 stream/string decryption: AES-256-CBC with the FILE key
-    * directly (no per-object key), IV ‖ ciphertext, PKCS#5. */
-  private[operators] def decryptDataV5(fileKey: Array[Byte], data: Array[Byte]): Array[Byte] =
+  /** AES-CBC over IV ‖ ciphertext (§7.6.2), PKCS#5: V5 streams and
+    * strings with the FILE key directly, V4 AESV2 with the per-object
+    * key ([[decryptData]]). A short, unaligned or badly padded input
+    * degrades to empty, never throws — the crawl decode contract. */
+  private def aesCbcDecrypt(key: Array[Byte], data: Array[Byte]): Array[Byte] =
     if (data.length < 32 || data.length % 16 != 0) Array.emptyByteArray
     else try {
-      aesCipher(javax.crypto.Cipher.DECRYPT_MODE, fileKey, data.take(16))
+      aesCipher(javax.crypto.Cipher.DECRYPT_MODE, key, data.take(16))
         .doFinal(data, 16, data.length - 16)
     } catch { case NonFatal(_) => Array.emptyByteArray }
 
@@ -269,18 +271,12 @@ object PdfCrypt {
     c
   }
 
-  /** Decrypt one object's stream/string bytes. AES data is IV ‖
-    * ciphertext (§7.6.2); corrupt padding degrades to empty, never
-    * throws — the crawl decode contract. */
+  /** Decrypt one object's stream/string bytes with its per-object key:
+    * RC4, or [[aesCbcDecrypt]]. */
   private[operators] def decryptData(key: Array[Byte], num: Long, gen: Int,
                                      data: Array[Byte], aes: Boolean): Array[Byte] = {
     val ok = objectKey(key, num, gen, aes)
-    if (!aes) rc4(ok, data)
-    else if (data.length < 32 || data.length % 16 != 0) Array.emptyByteArray
-    else try {
-      aesCipher(javax.crypto.Cipher.DECRYPT_MODE, ok, data.take(16))
-        .doFinal(data, 16, data.length - 16)
-    } catch { case NonFatal(_) => Array.emptyByteArray }
+    if (aes) aesCbcDecrypt(ok, data) else rc4(ok, data)
   }
 
   /** Encrypt (construction side): prepends the caller's IV for AES. */
@@ -379,7 +375,7 @@ object PdfCrypt {
           java.util.Arrays.copyOfRange(u, 40, 48), ue.take(32), r)
         return Some { (_: Long, _: Int, objDict: String, raw: String) =>
           if (!streamsEncryptedV5 || objDict.contains("/XRef")) raw
-          else new String(decryptDataV5(fileKey, raw.getBytes(ISO_8859_1)), ISO_8859_1)
+          else new String(aesCbcDecrypt(fileKey, raw.getBytes(ISO_8859_1)), ISO_8859_1)
         }
       }
       if (!(r == 2 || r == 3 || r == 4)) return None

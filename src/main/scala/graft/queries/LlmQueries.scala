@@ -1,10 +1,15 @@
 package graft.queries
 
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materialize
-import graft.sources.Tables
+import graft.sources.{SevenZ, Tables, Tar, Warc, WarcFile, Zip}
 import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Multimodal, Similarity, VideoFixtures}
+import graft.operators.{Cfb, Dedup, Multimodal, OfficeFixtures, OfficeZip, PdfText, Rtf,
+  Similarity, VideoFixtures}
+import graft.operators.Multimodal.MediaFile
 
 /**
  * L-series declared queries: the LLM-training-data-pipeline surface
@@ -34,6 +39,60 @@ object LlmQueries {
       val acc = s.conf.get("spark.graft.percentile.accuracy", "10000").toLong
       round(expr(s"approx_percentile($valueCol, $p, $acc)").cast("double"), digits)
     } else round(expr(s"percentile($valueCol, $p)"), digits)
+
+  // ---- codec legs: corpus rows → one constructed container each → decoder ----
+
+  /** The oracle of every verbatim round trip: the corpus text, unchanged. */
+  private val VerbatimSql = "SELECT doc_id, text FROM documents ORDER BY doc_id"
+
+  private def corpus(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(col("doc_id"), col("text"))
+
+  /** Fan a codec leg's input out over every core: one round-robin
+    * repartition to `defaultParallelism`, the policy of every single-leg
+    * decoder query (and l87's block parse, l148's archive mix).
+    *
+    * Why: the corpus scan at these scale factors is one compact parquet
+    * split, and a codec leg (construct a container per row, decode it) is
+    * CPU-bound, so without the fan-out the whole corpus runs on ONE core
+    * (profiled on l128: 4 tasks, task time ≈ wall; on l87: 11 stages × ~1
+    * task, 2.4 s of single-thread CPU). The round-robin always shuffles
+    * its input; it pays because the scan is one split. l136, whose R6 KDF
+    * is a deliberately slow password hash (~ms/doc), measured 19.4 s
+    * without it and 2.4 s with it at sf0.1.
+    *
+    * Where not: legs that are UNION branches of one job (l130's eleven
+    * containers) already run their single-split tasks concurrently across
+    * families, so the job costs max(leg), not sum(leg). Fanning out
+    * l130's mix measured 10.3 s (15.3 s with a localCheckpoint on top)
+    * against 4.5 s without (sf0.1 warm). At real scale the scan provides
+    * per-leg partitions anyway. */
+  private def fanOut(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+  /** One container per `(id, text)` row (exactly those two columns, in
+    * that order), built inside one `mapPartitions`: the codec boundary,
+    * binary never touches the driver. */
+  private def containers[C <: Product : TypeTag](rows: DataFrame)(
+      make: (Long, String) => C): Dataset[C] =
+    rows.as(Encoders.product[(Long, String)])
+      .mapPartitions(_.map { case (id, t) => make(id, t) })(Encoders.product[C])
+
+  /** A verbatim round trip: every document's text → `make` → `extract`,
+    * fanned out, against [[VerbatimSql]]. `latin1` re-reads the extracted
+    * Latin-1 units as UTF-8 (the PDF families that carry UTF-8 bytes
+    * through the byte-preserving Latin-1 wrap). */
+  private def roundTrip(make: (Long, String) => MediaFile,
+                        extract: Dataset[MediaFile] => Dataset[_],
+                        latin1: Boolean = false): QueryDef =
+    QueryDef((s, d) => {
+      val text =
+        if (latin1) decode(encode(col("text"), "ISO-8859-1"), "UTF-8").as("text")
+        else col("text")
+      extract(containers(fanOut(corpus(s, d)))(make)).toDF()
+        .select(col("doc_id"), text)
+        .orderBy("doc_id")
+    }, Some(VerbatimSql))
 
   // ---- DuckDB SQL fragments mirroring the Scala operators ----
 
@@ -2283,17 +2342,8 @@ object LlmQueries {
     // trim(collapse-ws(text)) — the oracle restates the identical
     // dialect-neutral collapse.
     "l124_epub_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.OfficeZip.syntheticEpub(id, t) })
-        graft.operators.OfficeZip.extractText(files).toDF()
-          .select(col("doc_id"), col("text"))
-          .orderBy("doc_id")
-      },
+      (s, d) => OfficeZip.extractText(containers(fanOut(corpus(s, d)))(OfficeZip.syntheticEpub))
+        .toDF().select(col("doc_id"), col("text")).orderBy("doc_id"),
       Some("SELECT doc_id, " +
         "trim(regexp_replace(text, '[ \\n\\t\\r]+', ' ', 'g')) AS text " +
         "FROM documents ORDER BY doc_id")),
@@ -3399,17 +3449,12 @@ object LlmQueries {
     // inc-ramp ⇒ dhash −1, dec/vertical ramp ⇒ 0).
     "l128_image_roundtrip" -> QueryDef(
       (s, d) => {
-        import s.implicits._
-        // fan out BEFORE the image leg (the l136 pattern): the corpus
-        // scan is one compact parquet split, and the BMP/PNG construct +
-        // ImageIO decode otherwise runs the whole corpus on ONE core
-        // (profiled: 4 tasks, taskTime ≈ wall). The round-robin always
-        // shuffles its input (here only doc ids); it pays because the
-        // scan at these scale factors is one split.
-        val files = Tables.documents(s, d).select(col("doc_id")).as[Long]
-          .repartition(s.sparkContext.defaultParallelism)
-          .mapPartitions(_.map(graft.operators.ImageFixtures.syntheticImage))
-        graft.operators.Multimodal.imageProfiles(files).toDF().orderBy("doc_id")
+        // the fan-out shuffles only doc ids: the image is built from the id
+        val files = fanOut(Tables.documents(s, d).select(col("doc_id")))
+          .as(Encoders.scalaLong)
+          .mapPartitions(_.map(graft.operators.ImageFixtures.syntheticImage))(
+            Encoders.product[MediaFile])
+        Multimodal.imageProfiles(files).toDF().orderBy("doc_id")
       },
       Some("SELECT doc_id, CAST(9 + doc_id % 8 AS BIGINT) AS width, " +
         "CAST(8 + doc_id % 5 AS BIGINT) AS height, TRUE AS decoded, " +
@@ -3644,20 +3689,7 @@ object LlmQueries {
     // 500 real documents, including operator lookalikes ("ET" inside
     // words) that a naive substring block scan would truncate on.
     // decode(encode(…)) re-reads the extracted Latin-1 units as UTF-8.
-    "l121_pdf_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.PdfText.syntheticPdf(id, t) })
-        graft.operators.PdfText.extractText(files).toDF()
-          .select(col("doc_id"),
-            decode(encode(col("text"), "ISO-8859-1"), "UTF-8").as("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l121_pdf_roundtrip" -> roundTrip(PdfText.syntheticPdf, PdfText.extractText, latin1 = true),
 
     // L122 — corpus-scale DOCX text ROUND TRIP (OfficeZip.syntheticDocx
     // ∘ extractText, the l121 twin): every document's text wraps into a
@@ -3676,20 +3708,8 @@ object LlmQueries {
     // expansion + xref-stream /Root resolution; oracle = the original
     // text verbatim. This is the layout most post-2007 real-world PDFs
     // use — the extractor family's single most common input.
-    "l125_pdf_objstm_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.PdfText.syntheticPdfObjStm(id, t) })
-        graft.operators.PdfText.extractText(files).toDF()
-          .select(col("doc_id"),
-            decode(encode(col("text"), "ISO-8859-1"), "UTF-8").as("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l125_pdf_objstm_roundtrip" -> roundTrip(PdfText.syntheticPdfObjStm,
+      PdfText.extractText, latin1 = true),
 
     // L129 — CID-FONT (/ToUnicode CMap) round trip
     // (PdfText.syntheticPdfCmap ∘ extractText): the l121 discipline
@@ -3704,21 +3724,7 @@ object LlmQueries {
     // emitted code bytes as "text") fails visibly; oracle = the
     // original text verbatim. No Latin-1 re-read here: CMap output IS
     // Unicode.
-    "l129_pdf_cmap_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        // fan out before the CPU-bound codec leg (per-unit hex encode +
-        // CMap parse per doc) — see l136's comment
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.PdfText.syntheticPdfCmap(id, t) })
-        graft.operators.PdfText.extractText(files).toDF()
-          .select(col("doc_id"), col("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l129_pdf_cmap_roundtrip" -> roundTrip(PdfText.syntheticPdfCmap, PdfText.extractText),
 
     // L133 — PDF FILTER-CHAIN round trip (PdfText.syntheticPdfFiltered
     // ∘ extractText): stream filters decode IN LISTED ORDER (ISO 32000
@@ -3729,20 +3735,8 @@ object LlmQueries {
     // (base-85 / hex armor / RLE decoders, then the inflate). Construction-side encoders are independent
     // twins (java.util.zip deflate + hand-written armor per the spec);
     // oracle = the original text verbatim.
-    "l133_pdf_filterchain_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.PdfText.syntheticPdfFiltered(id, t) })
-        graft.operators.PdfText.extractText(files).toDF()
-          .select(col("doc_id"),
-            decode(encode(col("text"), "ISO-8859-1"), "UTF-8").as("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l133_pdf_filterchain_roundtrip" -> roundTrip(PdfText.syntheticPdfFiltered,
+      PdfText.extractText, latin1 = true),
 
     // L140 — WARC REVISIT fold: Common Crawl's native dedup signal.
     // Crawlers emit `revisit` records (WARC-Profile identical-payload-
@@ -3761,14 +3755,9 @@ object LlmQueries {
     // identifier — no similarity computation anywhere.
     "l140_warc_revisit_fold" -> QueryDef(
       (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.sources.Warc.syntheticWetRevisit(id,
-              s"http://corpus.example/wet/$id", t) })
-        val recs = graft.sources.Warc.records(files, headBytes = 1 << 20).toDF()
+        val files = containers(fanOut(corpus(s, d)))((id, t) =>
+          Warc.syntheticWetRevisit(id, s"http://corpus.example/wet/$id", t))
+        val recs = Warc.records(files, headBytes = 1 << 20).toDF()
         val docs = recs.filter(col("warc_type") === "conversion")
           .select(col("file_id").as("doc_id"), col("target_uri"),
             col("body_head").as("text"))
@@ -3800,18 +3789,10 @@ object LlmQueries {
     // fails. Oracle = the original text verbatim plus both
     // construction-arithmetic member names.
     "l145_tar_ingest" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.sources.Tar.syntheticTar(id, t) })
-        graft.sources.Tar.members(files).toDF()
-          .select(col("file_id").as("doc_id"), col("member_idx"), col("name"),
-            col("text_head").as("text"))
-          .orderBy("doc_id", "member_idx")
-      },
+      (s, d) => Tar.members(containers(fanOut(corpus(s, d)))(Tar.syntheticTar)).toDF()
+        .select(col("file_id").as("doc_id"), col("member_idx"), col("name"),
+          col("text_head").as("text"))
+        .orderBy("doc_id", "member_idx"),
       Some("SELECT doc_id, CAST(0 AS BIGINT) AS member_idx, " +
         "'docs/' || CAST(doc_id AS VARCHAR) || '.txt' AS name, text FROM documents " +
         "UNION ALL SELECT doc_id, CAST(1 AS BIGINT), " +
@@ -3832,14 +3813,9 @@ object LlmQueries {
     // construction-arithmetic rows per document.
     "l147_zip_ingest" -> QueryDef(
       (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.sources.WarcFile(id,
-              graft.operators.OfficeFixtures.buildSyntheticArchiveZip(id, t)) })
-        graft.sources.Zip.members(files).toDF()
+        val files = containers(fanOut(corpus(s, d)))((id, t) =>
+          WarcFile(id, OfficeFixtures.buildSyntheticArchiveZip(id, t)))
+        Zip.members(files).toDF()
           .select(col("file_id").as("doc_id"), col("member_idx"), col("name"),
             col("size"), col("method"), col("text_head").as("text"))
           .orderBy("doc_id", "member_idx")
@@ -3872,36 +3848,20 @@ object LlmQueries {
     // dedup on the text hash — no similarity computation.
     "l148_archive_corpus_cascade" -> QueryDef(
       (s, d) => {
-        import s.implicits._
-        val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
+        val base = fanOut(corpus(s, d))
         val mix = base
           .select((col("doc_id") * 10).as("sid"), col("text"),
             (col("doc_id") % 2).as("c"))
           .unionAll(base.filter(col("doc_id") % 5 === 0)
             .select((col("doc_id") * 10 + 5).as("sid"), col("text"),
               ((col("doc_id") + 1) % 2).as("c")))
-        val tarDocs = {
-          val files = mix.filter(col("c") === 0).select(col("sid"), col("text"))
-            .as[(Long, String)]
-            .mapPartitions(_.map { case (id, t) =>
-              graft.sources.Tar.syntheticTar(id, t) })
-          graft.sources.Tar.members(files).toDF()
-            .filter(col("name") ===
-              concat(lit("docs/"), col("file_id"), lit(".txt")))
-            .select(col("file_id").as("sid"), col("text_head").as("text"))
-        }
-        val zipDocs = {
-          val files = mix.filter(col("c") === 1).select(col("sid"), col("text"))
-            .as[(Long, String)]
-            .mapPartitions(_.map { case (id, t) =>
-              graft.sources.WarcFile(id,
-                graft.operators.OfficeFixtures.buildSyntheticArchiveZip(id, t)) })
-          graft.sources.Zip.members(files).toDF()
-            .filter(col("name") ===
-              concat(lit("docs/"), col("file_id"), lit(".txt")))
-            .select(col("file_id").as("sid"), col("text_head").as("text"))
-        }
+        def leg(c: Int) = mix.filter(col("c") === c).select(col("sid"), col("text"))
+        def primary(members: DataFrame) = members
+          .filter(col("name") === concat(lit("docs/"), col("file_id"), lit(".txt")))
+          .select(col("file_id").as("sid"), col("text_head").as("text"))
+        val tarDocs = primary(Tar.members(containers(leg(0))(Tar.syntheticTar)).toDF())
+        val zipDocs = primary(Zip.members(containers(leg(1))((id, t) =>
+          WarcFile(id, OfficeFixtures.buildSyntheticArchiveZip(id, t)))).toDF())
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(md5(col("text"))).orderBy(col("sid"))
         tarDocs.unionAll(zipDocs)
@@ -3934,20 +3894,17 @@ object LlmQueries {
     "l149_packed_tar_ingest" -> QueryDef(
       (s, d) => {
         import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .as[(Long, String)]
+        val files = corpus(s, d).as[(Long, String)]
           .groupByKey(_._1 / 8)
-          .mapGroups { (gid, rows) =>
-            graft.sources.Tar.syntheticTarMulti(gid, rows.toSeq.sortBy(_._1))
-          }
-        graft.sources.Tar.members(files).toDF()
+          .mapGroups { (gid, rows) => Tar.syntheticTarMulti(gid, rows.toSeq.sortBy(_._1)) }
+        Tar.members(files).toDF()
           .filter(col("name").rlike("^docs/[0-9]+\\.txt$"))
           .select(regexp_extract(col("name"), "^docs/([0-9]+)\\.txt$", 1)
             .cast("long").as("doc_id"),
             col("text_head").as("text"))
           .orderBy("doc_id")
       },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+      Some(VerbatimSql)),
 
     // L150 — JSONL-SHARD ingest round trip (Jsonl.syntheticShard ∘
     // Jsonl.lines ∘ from_json): the distribution format most LLM
@@ -3968,7 +3925,7 @@ object LlmQueries {
     "l150_jsonl_shard_ingest" -> QueryDef(
       (s, d) => {
         import s.implicits._
-        val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
+        val base = corpus(s, d)
         val mix = base.select(col("doc_id"), col("text"),
             expr("doc_id div 16").as("shard"))
           .unionAll(base.filter(col("doc_id") % 7 === 0)
@@ -3986,7 +3943,7 @@ object LlmQueries {
           .distinct()
           .orderBy("doc_id")
       },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+      Some(VerbatimSql)),
 
     // L151 — 7z ARCHIVE ingest round trip (SevenZ.synthetic7z ∘
     // SevenZ.members): the tail of the distribution-format story after
@@ -4001,18 +3958,10 @@ object LlmQueries {
     // decode paths are load-bearing on every row. Oracle = three
     // construction-arithmetic rows per document.
     "l151_7z_ingest" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.sources.SevenZ.synthetic7z(id, t) })
-        graft.sources.SevenZ.members(files).toDF()
-          .select(col("file_id").as("doc_id"), col("member_idx"), col("name"),
-            col("size"), col("text_head").as("text"))
-          .orderBy("doc_id", "member_idx")
-      },
+      (s, d) => SevenZ.members(containers(fanOut(corpus(s, d)))(SevenZ.synthetic7z)).toDF()
+        .select(col("file_id").as("doc_id"), col("member_idx"), col("name"),
+          col("size"), col("text_head").as("text"))
+        .orderBy("doc_id", "member_idx"),
       Some("SELECT doc_id, CAST(0 AS BIGINT) AS member_idx, " +
         "'docs/' || CAST(doc_id AS VARCHAR) || '.txt' AS name, " +
         "CAST(strlen(text) AS BIGINT) AS size, text FROM documents " +
@@ -4044,27 +3993,8 @@ object LlmQueries {
     // decode garbage, or the old blank-on-encrypted contract all fail
     // visibly. (l112's `encrypted` flag is unchanged: the document IS
     // encrypted; extractability is a separate fact.)
-    "l136_pdf_encrypted_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        // fan out BEFORE the codec leg: the corpus scan is one compact
-        // parquet split, but this leg is CPU-bound (the R6 KDF is a
-        // deliberately-slow password hash, ~ms/doc) — without the
-        // repartition the whole corpus decrypts on ONE core. The
-        // round-robin always shuffles its input; it pays because the
-        // scan at these scale factors is one split: measured 19.4 s →
-        // 2.4 s at sf0.1.
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.PdfText.syntheticPdfEncrypted(id, t) })
-        graft.operators.PdfText.extractText(files).toDF()
-          .select(col("doc_id"),
-            decode(encode(col("text"), "ISO-8859-1"), "UTF-8").as("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l136_pdf_encrypted_roundtrip" -> roundTrip(PdfText.syntheticPdfEncrypted,
+      PdfText.extractText, latin1 = true),
 
     // L137 — LEGACY BINARY WORD round trip (.doc via MS-CFB;
     // Cfb.syntheticDoc ∘ Cfb.extractText): pre-2007 Word is the
@@ -4084,19 +4014,7 @@ object LlmQueries {
     // that surfaces field codes or marks fails the verbatim oracle.
     // Oracle = the original text verbatim — the extraction
     // decodes REAL Unicode (no Latin-1 re-read).
-    "l137_doc_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.Cfb.syntheticDoc(id, t) })
-        graft.operators.Cfb.extractText(files).toDF()
-          .select(col("doc_id"), col("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l137_doc_roundtrip" -> roundTrip(Cfb.syntheticDoc, Cfb.extractText),
 
     // L141 — LEGACY BINARY EXCEL round trip (.xls via MS-CFB + BIFF8;
     // Cfb.syntheticXls ∘ Cfb.extractText): the spreadsheet half of the
@@ -4110,19 +4028,7 @@ object LlmQueries {
     // joining (spec-certified: out-of-stream-order tabs, multi-cell
     // rows, and SST strings straddling CONTINUE records with a
     // mid-string mode flip). Oracle = the original text verbatim.
-    "l141_xls_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.Cfb.syntheticXls(id, t) })
-        graft.operators.Cfb.extractText(files).toDF()
-          .select(col("doc_id"), col("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l141_xls_roundtrip" -> roundTrip(Cfb.syntheticXls, Cfb.extractText),
 
     // L142 — RTF round trip (Rtf.syntheticRtf ∘ Rtf.extractText): the
     // word-processor interchange format two decades of editors and
@@ -4134,19 +4040,7 @@ object LlmQueries {
     // fallback reads back visibly wrong) and \'hh byte escapes, plus a
     // mid-body {\*\themedata} distractor. Oracle = the original text
     // verbatim.
-    "l142_rtf_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.Rtf.syntheticRtf(id, t) })
-        graft.operators.Rtf.extractText(files).toDF()
-          .select(col("doc_id"), col("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l142_rtf_roundtrip" -> roundTrip(Rtf.syntheticRtf, Rtf.extractText),
 
     // L143 — LEGACY BINARY POWERPOINT round trip (.ppt via MS-CFB +
     // the [MS-PPT] record tree; Cfb.syntheticPpt ∘ Cfb.extractText):
@@ -4156,19 +4050,7 @@ object LlmQueries {
     // inside a Document container next to an unknown-type sibling atom
     // the walk must skip; doc_id % 5 rotates the v4 sector size.
     // Oracle = the original text verbatim.
-    "l143_ppt_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.Cfb.syntheticPpt(id, t) })
-        graft.operators.Cfb.extractText(files).toDF()
-          .select(col("doc_id"), col("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l143_ppt_roundtrip" -> roundTrip(Cfb.syntheticPpt, Cfb.extractText),
 
     // L144 — LEGACY OFFICE METADATA round trip ([MS-OLEPS]
     // SummaryInformation; Cfb.syntheticDocWithMeta ∘ Cfb.extractMeta):
@@ -4181,16 +4063,8 @@ object LlmQueries {
     // the FILETIME reads back as epoch seconds. `kind` certifies the
     // container dispatch alongside the metadata.
     "l144_ole_meta" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.Cfb.syntheticDocWithMeta(id, t) })
-        graft.operators.Cfb.extractMeta(files).toDF()
-          .orderBy("doc_id")
-      },
+      (s, d) => Cfb.extractMeta(containers(fanOut(corpus(s, d)))(Cfb.syntheticDocWithMeta))
+        .toDF().orderBy("doc_id"),
       Some("SELECT doc_id, 'doc' AS kind, " +
         "'T' || chr(19990) || CAST(doc_id % 97 AS VARCHAR) AS title, " +
         "'author-' || CAST(doc_id % 7 AS VARCHAR) AS author, " +
@@ -4212,23 +4086,8 @@ object LlmQueries {
     // resolutions; doc_id % 2 toggles inline vs indirect /Encoding,
     // (doc_id/2) % 2 the Flate armor. Oracle = the original text
     // verbatim.
-    "l138_pdf_differences_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        // fan out before the CPU-bound codec leg (256-entry
-        // /Differences construct + parse per doc) — the single-split
-        // corpus scan would otherwise serialize it on one core
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.PdfText.syntheticPdfDifferences(id, t) })
-        graft.operators.PdfText.extractText(files).toDF()
-          .select(col("doc_id"),
-            decode(encode(col("text"), "ISO-8859-1"), "UTF-8").as("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l138_pdf_differences_roundtrip" -> roundTrip(PdfText.syntheticPdfDifferences,
+      PdfText.extractText, latin1 = true),
 
     // L146 — NAMED BASE ENCODING round trip (PdfText.syntheticPdfBaseEnc
     // ∘ extractText): the most common simple-font shape Word-exported
@@ -4244,17 +4103,8 @@ object LlmQueries {
     // certifying the base-fills-what-Differences-doesn't merge of
     // ISO 32000 §9.6.5 with one shared oracle.
     "l146_pdf_base_encoding" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.PdfText.syntheticPdfBaseEnc(id, t) })
-        graft.operators.PdfText.extractText(files).toDF()
-          .select(col("doc_id"), col("text"))
-          .orderBy("doc_id")
-      },
+      (s, d) => PdfText.extractText(containers(fanOut(corpus(s, d)))(PdfText.syntheticPdfBaseEnc))
+        .toDF().select(col("doc_id"), col("text")).orderBy("doc_id"),
       Some("SELECT doc_id, regexp_replace(text, " +
         "'[^\\x00-\\x7f\\xa0-\\xff€‚ƒ„…†‡ˆ‰Š‹ŒŽ‘’“”•–—˜™š›œžŸ]', '?', 'g') " +
         "|| chr(10) || '€‚ƒ„…†‡ˆ‰Š‹ŒŽ‘’“”•–—˜™š›œžŸ' AS text " +
@@ -4294,8 +4144,7 @@ object LlmQueries {
     // banded join — nothing quadratic, binary never on the driver.
     "l130_mixed_cascade" -> QueryDef(
       (s, d) => {
-        import s.implicits._
-        val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
+        val base = corpus(s, d)
         // synthetic id scheme: primaries at 20k + k%2, duplicates at
         // 20k + 10 + (k+1)%2. The +k%2 keeps the synthetic id's PARITY
         // tracking doc_id's, so every constructor's compress-on-even-id
@@ -4304,88 +4153,42 @@ object LlmQueries {
         // primary id even and routed 100% of primaries down the
         // compressed legs. Duplicates get the OPPOSITE parity, so a
         // cross-container pair also crosses the compressed/raw split.
+        // NO fanOut here: the eleven legs are union branches of one job
+        // (see fanOut for the measurements).
         val mix = base.select((col("doc_id") * 20 + col("doc_id") % 2).as("mid"),
             col("text"), (col("doc_id") % 11).as("typ"))
           .unionAll(base.filter(col("doc_id") % 5 === 0)
             .select((col("doc_id") * 20 + 10 + (col("doc_id") + 1) % 2).as("mid"),
               col("text"), ((col("doc_id") + 1) % 11).as("typ")))
-          // NO per-leg fan-out here, deliberately: unlike the
-          // single-leg round trips (l136-l147, where one mapPartitions
-          // sees the whole corpus and a repartition is the difference
-          // between 1 and 32 cores), the eleven legs below are UNION
-          // branches of one job — their single-split tasks already run
-          // concurrently across families, so max(leg), not sum(leg).
-          // Measured: repartition here 10.3 s, + localCheckpoint
-          // 15.3 s, as-is 4.5 s (sf0.1 warm). At real scale the scan
-          // provides per-leg partitions anyway.
-        val htmlDocs = {
-          val files = mix.filter(col("typ") === 0).select(col("mid"), col("text"))
-            .as[(Long, String)]
-            .mapPartitions(_.map { case (id, t) =>
-              graft.sources.Warc.syntheticResponse(id,
-                s"http://corpus.example/d/$id",
-                MixedChromePre + t + MixedChromePost) })
-          // 1 MiB body retention: the oracle runs htmlToText over the
-          // FULL document text, so any truncation of the HTTP body
-          // (chrome + text can exceed the old 8 KiB default) would
-          // silently diverge
-          graft.sources.Warc.records(files, headBytes = 1 << 20).toDF()
-            .filter(col("warc_type") === "response" && col("http_status") === 200)
-            .select(col("file_id").as("mid"),
-              htmlToText(col("body_head")).as("text"))
-        }
-        val pdfDocs = {
-          val files = mix.filter(col("typ") === 1).select(col("mid"), col("text"))
-            .as[(Long, String)]
-            .mapPartitions(_.map { case (id, t) =>
-              graft.operators.PdfText.syntheticPdf(id, t) })
-          graft.operators.PdfText.extractText(files).toDF()
-            .select(col("doc_id").as("mid"),
-              decode(encode(col("text"), "ISO-8859-1"), "UTF-8").as("text"))
-        }
-        val docxDocs = {
-          val files = mix.filter(col("typ") === 2).select(col("mid"), col("text"))
-            .as[(Long, String)]
-            .mapPartitions(_.map { case (id, t) =>
-              graft.operators.OfficeZip.syntheticDocx(id, t) })
-          graft.operators.OfficeZip.extractText(files).toDF()
-            .select(col("doc_id").as("mid"), col("text"))
-        }
-        def officeLeg(typ: Int,
-                      build: (Long, String) => graft.operators.Multimodal.MediaFile) = {
-          val files = mix.filter(col("typ") === typ).select(col("mid"), col("text"))
-            .as[(Long, String)]
-            .mapPartitions(_.map { case (id, t) => build(id, t) })
-          graft.operators.OfficeZip.extractText(files).toDF()
-            .select(col("doc_id").as("mid"), col("text"))
-        }
-        val epubDocs = officeLeg(3, graft.operators.OfficeZip.syntheticEpub)
-        val xlsxDocs = officeLeg(4, graft.operators.OfficeZip.syntheticXlsx)
-        val pptxDocs = officeLeg(5, graft.operators.OfficeZip.syntheticPptx)
-        val odtDocs = officeLeg(6, graft.operators.OfficeZip.syntheticOdt)
-        // the LEGACY legs (pre-2007 Office trio + RTF) run through
-        // their own extractors — Cfb's compound-file dispatch and the
-        // RTF control-word walk — extraction text-verbatim like the
-        // office zips, so the convergence claim below extends to them
-        def cfbLeg(typ: Int,
-                   build: (Long, String) => graft.operators.Multimodal.MediaFile) = {
-          val files = mix.filter(col("typ") === typ).select(col("mid"), col("text"))
-            .as[(Long, String)]
-            .mapPartitions(_.map { case (id, t) => build(id, t) })
-          graft.operators.Cfb.extractText(files).toDF()
-            .select(col("doc_id").as("mid"), col("text"))
-        }
-        val docDocs = cfbLeg(7, graft.operators.Cfb.syntheticDoc)
-        val xlsDocs = cfbLeg(8, graft.operators.Cfb.syntheticXls)
-        val pptDocs = cfbLeg(9, graft.operators.Cfb.syntheticPpt)
-        val rtfDocs = {
-          val files = mix.filter(col("typ") === 10).select(col("mid"), col("text"))
-            .as[(Long, String)]
-            .mapPartitions(_.map { case (id, t) =>
-              graft.operators.Rtf.syntheticRtf(id, t) })
-          graft.operators.Rtf.extractText(files).toDF()
-            .select(col("doc_id").as("mid"), col("text"))
-        }
+        def leg[C <: Product : TypeTag](typ: Int)(make: (Long, String) => C) =
+          containers(mix.filter(col("typ") === typ).select(col("mid"), col("text")))(make)
+        def mid(extracted: Dataset[_]) =
+          extracted.toDF().select(col("doc_id").as("mid"), col("text"))
+        // 1 MiB body retention: the oracle runs htmlToText over the
+        // FULL document text, so any truncation of the HTTP body
+        // (chrome + text can exceed the old 8 KiB default) would
+        // silently diverge
+        val htmlDocs = Warc.records(leg(0)((id, t) => Warc.syntheticResponse(id,
+            s"http://corpus.example/d/$id", MixedChromePre + t + MixedChromePost)),
+            headBytes = 1 << 20).toDF()
+          .filter(col("warc_type") === "response" && col("http_status") === 200)
+          .select(col("file_id").as("mid"), htmlToText(col("body_head")).as("text"))
+        val pdfDocs = PdfText.extractText(leg(1)(PdfText.syntheticPdf)).toDF()
+          .select(col("doc_id").as("mid"),
+            decode(encode(col("text"), "ISO-8859-1"), "UTF-8").as("text"))
+        // the office zips, the pre-2007 binary Office trio (Cfb's
+        // compound-file dispatch) and the RTF control-word walk all
+        // extract text verbatim, so the convergence claim covers them
+        val legs = Seq(htmlDocs, pdfDocs,
+          mid(OfficeZip.extractText(leg(2)(OfficeZip.syntheticDocx))),
+          mid(OfficeZip.extractText(leg(3)(OfficeZip.syntheticEpub))),
+          mid(OfficeZip.extractText(leg(4)(OfficeZip.syntheticXlsx))),
+          mid(OfficeZip.extractText(leg(5)(OfficeZip.syntheticPptx))),
+          mid(OfficeZip.extractText(leg(6)(OfficeZip.syntheticOdt))),
+          mid(Cfb.extractText(leg(7)(Cfb.syntheticDoc))),
+          mid(Cfb.extractText(leg(8)(Cfb.syntheticXls))),
+          mid(Cfb.extractText(leg(9)(Cfb.syntheticPpt))),
+          mid(Rtf.extractText(leg(10)(Rtf.syntheticRtf))))
         // materialize the extracted corpus ONCE: dedupCorpus references
         // its input from several sides (exact window, shingle bands,
         // join-backs), and unmaterialized every reference re-runs all
@@ -4393,9 +4196,7 @@ object LlmQueries {
         // on the 7-way shape (SCALE.md, round-16 probes). This is the
         // standard persist-the-extracted-corpus-before-dedup step of a
         // real pipeline.
-        val docs = Materialize(htmlDocs.unionAll(pdfDocs).unionAll(docxDocs).unionAll(epubDocs)
-          .unionAll(xlsxDocs).unionAll(pptxDocs).unionAll(odtDocs)
-          .unionAll(docDocs).unionAll(xlsDocs).unionAll(pptDocs).unionAll(rtfDocs)
+        val docs = Materialize(legs.reduce(_ unionAll _)
           .select(col("mid").as("doc_id"), normalizeText(col("text")).as("text")),
           "l130_mixed_cascade")
         Dedup.dedupCorpus(docs, "text", "doc_id", 0.8)
@@ -4430,37 +4231,13 @@ object LlmQueries {
     // match certifies the OPC r:id→rels→target chain, the shared-
     // string table decode, and the cell-type dispatch on 500 real
     // documents.
-    "l131_xlsx_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.OfficeZip.syntheticXlsx(id, t) })
-        graft.operators.OfficeZip.extractText(files).toDF()
-          .select(col("doc_id"), col("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l131_xlsx_roundtrip" -> roundTrip(OfficeZip.syntheticXlsx, OfficeZip.extractText),
 
     // L132 — corpus-scale PPTX text ROUND TRIP (the slide twin): one
     // slide paragraph split across two <a:t> runs, the slide resolved
     // through the presentation's <p:sldId r:id> rels chain, Deflate on
     // even ids; oracle = the original text verbatim.
-    "l132_pptx_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.OfficeZip.syntheticPptx(id, t) })
-        graft.operators.OfficeZip.extractText(files).toDF()
-          .select(col("doc_id"), col("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l132_pptx_roundtrip" -> roundTrip(OfficeZip.syntheticPptx, OfficeZip.extractText),
 
     // L135 — WET ingest round trip (Warc.syntheticWetFile ∘ records):
     // Common Crawl's *.warc.wet sidecar is the zero-extraction entry
@@ -4476,19 +4253,14 @@ object LlmQueries {
     // default and would have silently truncated (possibly mid-multibyte).
     "l135_wet_ingest" -> QueryDef(
       (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.sources.Warc.syntheticWetFile(id,
-              s"http://corpus.example/wet/$id", t) })
-        graft.sources.Warc.records(files, headBytes = 1 << 20).toDF()
+        val files = containers(fanOut(corpus(s, d)))((id, t) =>
+          Warc.syntheticWetFile(id, s"http://corpus.example/wet/$id", t))
+        Warc.records(files, headBytes = 1 << 20).toDF()
           .filter(col("warc_type") === "conversion")
           .select(col("file_id").as("doc_id"), col("body_head").as("text"))
           .orderBy("doc_id")
       },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+      Some(VerbatimSql)),
 
     // L134 — corpus-scale ODT text ROUND TRIP (the OpenDocument /
     // LibreOffice family): one <text:p> split across two <text:span>
@@ -4496,33 +4268,9 @@ object LlmQueries {
     // tags strip to NOTHING, not spaces), entity-escaped per span,
     // mimetype-member format detection, Deflate on even ids; oracle =
     // the original text verbatim.
-    "l134_odt_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.OfficeZip.syntheticOdt(id, t) })
-        graft.operators.OfficeZip.extractText(files).toDF()
-          .select(col("doc_id"), col("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l134_odt_roundtrip" -> roundTrip(OfficeZip.syntheticOdt, OfficeZip.extractText),
 
-    "l122_docx_roundtrip" -> QueryDef(
-      (s, d) => {
-        import s.implicits._
-        val files = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .repartition(s.sparkContext.defaultParallelism)
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.operators.OfficeZip.syntheticDocx(id, t) })
-        graft.operators.OfficeZip.extractText(files).toDF()
-          .select(col("doc_id"), col("text"))
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
+    "l122_docx_roundtrip" -> roundTrip(OfficeZip.syntheticDocx, OfficeZip.extractText),
 
     // L116 — NN-descent kNN-graph refinement (Similarity.nnDescent,
     // Dong et al. WWW'11): one fixed neighbors-of-neighbors round over
@@ -4694,15 +4442,9 @@ object LlmQueries {
         val classes = Seq("en", "de", "fr", "es").zipWithIndex.map { case (lang, c) =>
           lang -> Array.tabulate(256)(b => (((b + 37 * c) % 256) - 128) / 256.0)
         }
-        // fan out BEFORE the parse leg (the l136 pattern): the corpus
-        // scan is one compact parquet split, and the block parse +
-        // classifier checkpoint otherwise materializes on ONE core
-        // (profiled: 11 stages × ~1 task, 2.4 s of single-thread CPU).
-        // The round-robin always shuffles its input; it pays because
-        // the scan at these scale factors is one split.
+        // fanned out: the block parse + classifier checkpoint is CPU-bound
         graft.operators.Scoring.blockLanguageSpans(
-            Tables.documents(s, d).select(id, html.as("page"))
-              .repartition(s.sparkContext.defaultParallelism),
+            fanOut(Tables.documents(s, d).select(id, html.as("page"))),
             "page", "doc_id", classes)
           .orderBy("doc_id", "span_from")
       },

@@ -920,7 +920,8 @@ class OperatorSpec extends AnyFunSuite {
     val wideImg = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(wide))
     assert(wideImg != null && wideImg.getWidth == 4000 && wideImg.getHeight == 6)
     assert((wideImg.getRGB(3999, 5) & 0xFF) == (3999 + 5) % 251)
-    // truncations degrade to decoded=false, never throw
+    // truncations degrade to decoded=false (hash 0; the stub for
+    // extractMetaImages) in all three ImageIO operators, never throw
     val rnd = new scala.util.Random(128L)
     Seq(ImageFixtures.syntheticImage(2L), ImageFixtures.syntheticImage(3L)).foreach { f =>
       (1 until 20).foreach { _ =>
@@ -928,8 +929,14 @@ class OperatorSpec extends AnyFunSuite {
         val m = Multimodal.MediaFile(f.doc_id,
           java.util.Arrays.copyOfRange(f.payload, 0, cut))
         import spark.implicits._
-        val p = Multimodal.imageProfiles(spark.createDataset(Seq(m))).head()
+        val ds = spark.createDataset(Seq(m))
+        val p = Multimodal.imageProfiles(ds).head()
         assert(p.dhash == 0L || p.decoded) // truncated tails may still decode
+        val h = Multimodal.imageDHash(ds).head()
+        assert(h == Multimodal.ImageHash(m.doc_id, p.decoded, p.dhash), s"cut $cut")
+        val meta = Multimodal.extractMetaImages(ds).head()
+        if (p.decoded) assert(meta.width == p.width && meta.height == p.height, s"cut $cut")
+        else assert(meta == Multimodal.decodeStub(m), s"cut $cut")
       }
     }
   }

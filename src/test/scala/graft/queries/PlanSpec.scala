@@ -577,4 +577,66 @@ class PlanSpec extends AnyFunSuite {
     val finalPlan = p.split("== Initial Plan ==").head
     assert(finalPlan.split("Scan parquet").length - 1 == 1, p.take(3000))
   }
+
+  /** For each scan of the documents table in a plan's tree string, the
+    * operators on its path to the root, nearest first. */
+  private def documentScanPaths(plan: String): Seq[Seq[String]] = {
+    val lines = plan.linesIterator.toIndexedSeq
+    val node = """^([ :]*)[+:]- """.r
+    def depth(l: String) = node.findFirstMatchIn(l).fold(0)(_.group(1).length + 1)
+    lines.indices.filter(i => lines(i).contains("FileScan") && lines(i).contains("documents"))
+      .map { i =>
+        lines.take(i).reverseIterator.foldLeft((depth(lines(i)), Vector.empty[String])) {
+          case ((d, path), l) if depth(l) < d => (depth(l), path :+ l.trim)
+          case (acc, _) => acc
+        }._2
+      }
+  }
+
+  private def roundRobins(path: Seq[String]) = path.count(_.contains("RoundRobinPartitioning"))
+
+  test("codec legs: each single-leg decoder fans out once below its codec; l130's union legs never") {
+    // a lost fan-out runs the whole corpus's construct + decode on one
+    // core (l136: 19.4 s vs 2.4 s at sf0.1); a fan-out under l130's union
+    // legs measured 10.3 s against 4.5 s
+    val singleLeg = Seq("l121_pdf_roundtrip", "l122_docx_roundtrip", "l124_epub_roundtrip",
+      "l125_pdf_objstm_roundtrip", "l128_image_roundtrip", "l129_pdf_cmap_roundtrip",
+      "l131_xlsx_roundtrip", "l132_pptx_roundtrip", "l133_pdf_filterchain_roundtrip",
+      "l134_odt_roundtrip", "l135_wet_ingest", "l136_pdf_encrypted_roundtrip",
+      "l137_doc_roundtrip", "l138_pdf_differences_roundtrip", "l140_warc_revisit_fold",
+      "l141_xls_roundtrip", "l142_rtf_roundtrip", "l143_ppt_roundtrip", "l144_ole_meta",
+      "l145_tar_ingest", "l146_pdf_base_encoding", "l147_zip_ingest", "l151_7z_ingest")
+    singleLeg.foreach { q =>
+      val p = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
+      val paths = documentScanPaths(p)
+      assert(paths.nonEmpty, s"$q: no documents scan\n" + p.take(3000))
+      paths.foreach { path =>
+        assert(roundRobins(path) == 1, s"$q: ${roundRobins(path)} round-robin exchanges\n" + p.take(3000))
+        val above = path.dropWhile(!_.contains("RoundRobinPartitioning")).tail
+        assert(above.exists(_.contains("MapPartitions")), s"$q: no codec above the fan-out\n" + p.take(3000))
+      }
+    }
+    // l130 materializes its eleven legs while it is built: read the plan
+    // of that localCheckpoint (listener events arrive asynchronously)
+    val checkpointed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") checkpointed.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("l130_mixed_cascade")(spark, sf)
+      def legs = checkpointed.toArray.toSeq.map(_.toString).find(documentScanPaths(_).size >= 11)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (legs.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      val p = legs.getOrElse(fail(s"no plan of the eleven legs among ${checkpointed.size}"))
+      documentScanPaths(p).foreach { path =>
+        assert(roundRobins(path) == 0, "l130 fans out a union leg\n" + p.take(3000))
+        assert(path.exists(_.contains("MapPartitions")), "l130 leg without a codec\n" + p.take(3000))
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
