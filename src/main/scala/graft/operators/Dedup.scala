@@ -32,6 +32,8 @@ import graft.functions.VectorFunctions._
  */
 object Dedup {
 
+  private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
+
   /** Exact-duplicate profile: one row per distinct content hash with the
     * multiplicity and the kept (minimum) doc id. `dropDuplicates`-style
     * filtering is `filter(c === 1)` + join back, or use [[exactKept]]. */
@@ -359,8 +361,7 @@ object Dedup {
       labels = merged.select(col("id"), col("__next").as("cluster"))
       iter += 1
     }
-    if (sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1"))
-      System.err.println(s"[cc] converged after $iter rounds")
+    log.debug(s"connected components converged after $iter rounds")
     labels
   }
 
@@ -847,7 +848,9 @@ object Dedup {
     spark.read.parquet(bandsPath).distinct()
       .write.mode("overwrite").parquet(tmp.toString)
     val markers = new Path(table, "_committed")
-    if (fs.exists(markers)) fs.rename(markers, new Path(tmp, "_committed"))
+    if (fs.exists(markers) && !fs.rename(markers, new Path(tmp, "_committed")))
+      throw new java.io.IOException(s"compactBands could not carry $markers over " +
+        s"(table intact at $table)")
     if (!fs.rename(table, old) || !fs.rename(tmp, table))
       throw new java.io.IOException(s"compactBands swap failed for $bandsPath " +
         s"(table intact at ${if (fs.exists(table)) table else old})")

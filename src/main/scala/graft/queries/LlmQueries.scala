@@ -3746,29 +3746,28 @@ object LlmQueries {
     // own. Every document ships as a WET conversion record; every 4th
     // also plants a revisit from a mirror URL referring back to it
     // (Warc.syntheticWetRevisit). The fold: conversion records keep
-    // their payload (first-seen wins — the revisit carries none),
-    // revisits aggregate per referred identifier (the SMALL side,
-    // reduced before the join) and join back to the kept doc as its
-    // certified-duplicate count. Oracle = the same fold from the
-    // construction arithmetic. Scale shape: one narrow record walk,
-    // one map-side-combined count, one shuffle-hash join on the
-    // identifier — no similarity computation anywhere.
+    // their payload (first-seen wins — the revisit carries none), and
+    // each keeps the count of revisits, from any file, that refer to its
+    // URI as its certified-duplicate count. Oracle = the same fold from
+    // the construction arithmetic. Scale shape: one narrow record walk,
+    // one shuffle on the URI (a window counts each URI's revisits next
+    // to its conversions, so the walk runs once, not once per side of a
+    // join) — no similarity computation anywhere.
     "l140_warc_revisit_fold" -> QueryDef(
       (s, d) => {
         val files = containers(fanOut(corpus(s, d)))((id, t) =>
           Warc.syntheticWetRevisit(id, s"http://corpus.example/wet/$id", t))
-        val recs = Warc.records(files, headBytes = 1 << 20).toDF()
-        val docs = recs.filter(col("warc_type") === "conversion")
-          .select(col("file_id").as("doc_id"), col("target_uri"),
-            col("body_head").as("text"))
-        val revCounts = recs
-          .filter(col("warc_type") === "revisit" && col("refers_to") =!= "")
-          .select(regexp_replace(col("refers_to"), "^<|>$", "").as("ref_uri"))
-          .groupBy("ref_uri").agg(count(lit(1)).as("n_revisits"))
-        docs.join(revCounts.hint("shuffle_hash"),
-            docs("target_uri") === revCounts("ref_uri"), "left")
-          .select(col("doc_id"), col("text"),
-            coalesce(col("n_revisits"), lit(0L)).as("n_revisits"))
+        val isConversion = col("warc_type") === "conversion"
+        val isRevisit = col("warc_type") === "revisit" && col("refers_to") =!= ""
+        Warc.records(files, headBytes = 1 << 20).toDF()
+          .filter(isConversion || isRevisit)
+          .select(col("file_id"), col("warc_type"), col("body_head"),
+            when(isConversion, col("target_uri"))
+              .otherwise(regexp_replace(col("refers_to"), "^<|>$", "")).as("uri"))
+          .withColumn("n_revisits", count(when(col("warc_type") === "revisit", lit(1)))
+            .over(org.apache.spark.sql.expressions.Window.partitionBy("uri")))
+          .filter(isConversion)
+          .select(col("file_id").as("doc_id"), col("body_head").as("text"), col("n_revisits"))
           .orderBy("doc_id")
       },
       Some("SELECT doc_id, text, CAST(CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END " +

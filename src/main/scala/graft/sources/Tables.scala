@@ -1,7 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Canonical loaders for the driver testdata tables (TESTDATA.md).
@@ -26,9 +28,72 @@ import org.apache.spark.sql.functions._
  */
 object Tables {
 
-  /** TPC-H-ish dimension/fact tables: plain scans. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** TPC-H-ish dimension/fact tables: plain scans, read with the schema
+    * [[schemaOf]] remembers for the table's current files. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    schemaOf(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path) // missing path: Spark's own error
+    }
+  }
+
+  /** What a parquet schema inference depends on: the table's qualified
+    * path, each leaf file's (path, length, modification time), and the
+    * session settings that change how parquet types convert. */
+  private case class SchemaKey(path: String, files: Seq[(String, Long, Long)],
+                               settings: Seq[(String, String)])
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  private def isParquetSetting(key: String): Boolean =
+    key.startsWith("spark.sql.parquet.") || key.startsWith("spark.sql.legacy.parquet.")
+
+  /** Spark's documented parquet settings and the one [[events]] sets.
+    * The key holds each one's effective value, so a setting restored to
+    * its default (as [[withNanosAsLong]] does) and one never set are the
+    * same key. */
+  private lazy val parquetSettings: Seq[String] =
+    (NanosAsLong +: org.apache.spark.sql.internal.SQLConf.get.getAllDefinedConfs
+      .map(_._1).filter(isParquetSetting)).distinct
+
+  /** The most recently used inferred schemas, by [[SchemaKey]]. */
+  private val schemas = {
+    val capacity = 64
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[SchemaKey, StructType]): Boolean = size() > capacity
+      })
+  }
+
+  /** The schema Spark infers for the parquet table at `path`, inferred
+    * once per file version. Without a schema, `spark.read.parquet` reads
+    * the footers in a Spark job (`mergeSchemasInParallel`) on every call,
+    * even for one file; with it, building a frame launches no job. The
+    * key comes from a file-system listing, so a hit costs no job either.
+    * A rewritten file has a new length or modification time and is read
+    * again (SCALE.md "The build layer is schema inference"). None when
+    * `path` does not exist. */
+  private def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p)
+    if (!fs.exists(qualified)) None
+    else {
+      val leaves = fs.listFiles(qualified, true)
+      val files = Iterator.continually(leaves).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+      val settings = (parquetSettings ++ spark.conf.getAll.keys.filter(isParquetSetting(_)))
+        .distinct.sorted.map(k => k -> spark.conf.getOption(k).orNull)
+      val key = SchemaKey(qualified.toString, files, settings)
+      Option(schemas.get(key)).orElse {
+        val schema = spark.read.parquet(path).schema
+        schemas.put(key, schema)
+        Some(schema)
+      }
+    }
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")
@@ -50,12 +115,13 @@ object Tables {
     * restore the previous value — reading the NANOS-stamped events table
     * must not silently change how OTHER TIMESTAMP(NANOS) parquet is read
     * for the rest of the session. Safe to restore immediately after the
-    * frame is built: the parquet relation captures the flag when it is
-    * created (schema inference time), not per action — executing the
-    * returned frame after the restore works (covered by the smoke run
-    * and every events-backed spec). */
+    * frame is built: the flag decides the schema the relation is created
+    * with (inferred, or the memo entry keyed on the flag), not each
+    * action's read — executing the returned frame after the restore
+    * works (covered by the smoke run, every events-backed spec and
+    * TablesSpec's TIMESTAMP(NANOS) table). */
   private def withNanosAsLong[A](spark: SparkSession)(body: => A): A =
-    graft.SessionConf.withValue(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")(body)
+    graft.SessionConf.withValue(spark, NanosAsLong, "true")(body)
 
   /** Normalize the `ts` column to TimestampType (µs) regardless of which
     * on-disk layout produced it: BIGINT nanoseconds (nanosAsLong read of
