@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /**
  * Native Catalyst expression for the dot product of two `array<double>`
@@ -24,9 +24,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
  * `zip_with`'s null-padding followed by `acc + null` produced).
  */
 case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ImplicitCastInputTypes {
 
   override def dataType: DataType = DoubleType
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def prettyName: String = "dot_product"
 
   /** Can be null on length mismatch even for non-null inputs — without

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -25,9 +25,11 @@ import org.apache.spark.unsafe.types.UTF8String
  * DuckDB `nfc_normalize` code-point-for-code-point — certified by the
  * l82 oracle over constructed composed/decomposed/mixed fixtures.
  */
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
+case class NfcNormalizeExpr(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
 
   override def dataType: DataType = StringType
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "nfc_normalize"
 
   override protected def nullSafeEval(input: Any): Any =

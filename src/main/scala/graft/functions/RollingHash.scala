@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -22,9 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * graft.queries.LlmQueries l11) still matches bit-for-bit.
  */
 case class RollingHashExpr(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with ImplicitCastInputTypes {
 
   override def dataType: DataType = LongType
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "rolling_hash"
 
   override protected def nullSafeEval(input: Any): Any =

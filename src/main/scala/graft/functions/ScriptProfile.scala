@@ -1,12 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -30,9 +30,11 @@ import org.apache.spark.unsafe.types.UTF8String
  * with zero allocations beyond the 12-word result, codegen'd into the
  * enclosing stage like [[NfcNormalizeExpr]].
  */
-case class ScriptProfileExpr(child: Expression) extends UnaryExpression {
+case class ScriptProfileExpr(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "script_profile"
 
   override protected def nullSafeEval(input: Any): Any =

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
@@ -25,9 +25,13 @@ import org.apache.spark.unsafe.types.UTF8String
  * consumers are min-aggregates and set intersections).
  */
 case class ShinglesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  // n < 1 has no shingles; a large negative n would loop ~|n| times per row
+  require(n >= 1, s"word_shingles(text, n) needs n >= 1, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "word_shingles"
 
   override protected def nullSafeEval(input: Any): Any =

@@ -226,11 +226,11 @@ object TextFunctions {
     * turns a windows-1252 mis-decode into an ISO-8859-1 mis-decode,
     * which [[fixMojibake]] can reverse with the engine's ISO-8859-1
     * encoder. */
-  private[graft] val Cp1252Specials =
+  private val Cp1252Specials =
     "\u20AC\u201A\u0192\u201E\u2026\u2020\u2021\u02C6\u2030" +
       "\u0160\u2039\u0152\u017D\u2018\u2019\u201C\u201D\u2022" +
       "\u2013\u2014\u02DC\u2122\u0161\u203A\u0153\u017E\u0178"
-  private[graft] val Cp1252Controls =
+  private val Cp1252Controls =
     "\u0080\u0082\u0083\u0084\u0085\u0086\u0087\u0088\u0089" +
       "\u008A\u008B\u008C\u008E\u0091\u0092\u0093\u0094\u0095" +
       "\u0096\u0097\u0098\u0099\u009A\u009B\u009C\u009E\u009F"
@@ -241,13 +241,13 @@ object TextFunctions {
     * prose (legit "NÃO" has Ã followed by ASCII, which does not
     * match). Evaluated AFTER the cp1252-specials translate, so € ' –
     * etc. sit at their byte values. */
-  private[graft] val MojibakeSignature =
+  private val MojibakeSignature =
     "[\\u00C2-\\u00DF][\\u0080-\\u00BF]|[\\u00E0-\\u00EF][\\u0080-\\u00BF]{2}|" +
       "[\\u00F0-\\u00F4][\\u0080-\\u00BF]{3}"
 
   /** Every char maps to a single windows-1252 byte (after the specials
     * translate). */
-  private[graft] val Cp1252Mappable = "^[\\u0000-\\u00FF]*$"
+  private val Cp1252Mappable = "^[\\u0000-\\u00FF]*$"
 
   /** Repair windows-1252-of-UTF-8 double encoding — the single most
     * common crawl corruption ("Ã©" where the page meant "é"): UTF-8

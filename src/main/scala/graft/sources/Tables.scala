@@ -50,9 +50,8 @@ object Tables {
     key.startsWith("spark.sql.parquet.") || key.startsWith("spark.sql.legacy.parquet.")
 
   /** Spark's documented parquet settings and the one [[events]] sets.
-    * The key holds each one's effective value, so a setting restored to
-    * its default (as [[withNanosAsLong]] does) and one never set are the
-    * same key. */
+    * The key holds each one's effective value, so a setting explicitly
+    * set to its default and one never set are the same key. */
   private lazy val parquetSettings: Seq[String] =
     (NanosAsLong +: org.apache.spark.sql.internal.SQLConf.get.getAllDefinedConfs
       .map(_._1).filter(isParquetSetting)).distinct

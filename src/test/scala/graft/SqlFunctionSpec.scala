@@ -263,4 +263,107 @@ class SqlFunctionSpec extends AnyFunSuite {
     assert(out(5L) == "none")
     assert(out(6L) == "hangul")
   }
+
+  test("every SQL function equals its Column function row for row, over a column") {
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    import graft.functions.{NfcNormalizeExpr, RollingHashExpr, ScriptProfileExpr, TextFunctions, VectorFunctions}
+    val cp1252 = java.nio.charset.Charset.forName("windows-1252")
+    def corrupt(t: String) = new String(t.getBytes("UTF-8"), cp1252)
+    val vec = ArrayType(DoubleType)
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("text", StringType),
+      StructField("url", StringType), StructField("html", StringType),
+      StructField("a", vec), StructField("b", vec)))
+    val rows = Seq(
+      Row(0, null, null, null, null, null),
+      Row(1, "", "", "", Seq.empty[Double], Seq.empty[Double]),
+      Row(2, "a b c d a b", "http://[2001:db8::1]:8080/p?utm_a=1&x=2",
+        "<p>a &amp; b &lt;c&gt; &quot;q&quot; &#39;s&#39;</p><script>x<y;</script>",
+        Seq(0.0, 0.0), Seq(1.0, 2.0)),
+      Row(3, corrupt("café résumé"), "http://2001:db8::7/p#f",
+        "<style>p{}</style><!-- c --><b>bold</b>   text", Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
+      Row(4, corrupt(corrupt("naïve São")), "https://WWW.Sub0.Site3.com:443/p/1?utm_source=a&id=2#frag",
+        "plain", Seq(1.0, 2.0), Seq(2.0, 4.0)),
+      Row(5, "café  Hello,   WORLD!! 42", "http://[2001:db8::1]/", "<i>x</i>&amp;amp;",
+        Seq(1.0, 2.0), Seq(1.0)),
+      Row(6, "ab Ж 日本 7 😀 NÃO", "http://1.2.3.4:80/path?x=1&", "&lt;script&gt;",
+        Seq(3.0, 4.0), null))
+    // an RDD-backed view: the projections run in whole-stage codegen on
+    // the executors instead of being constant-folded or run as a local relation
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      .createOrReplaceTempView("sql_parity_v")
+    val (text, url, html, a, b) = (col("text"), col("url"), col("html"), col("a"), col("b"))
+    val cases: Seq[(String, String, Column)] = Seq(
+      ("rolling_hash", "rolling_hash(text)", RollingHashExpr(text)),
+      ("word_shingles", "word_shingles(text, 2)", TextFunctions.wordShingles(text, 2)),
+      ("dot_product", "dot_product(a, b)", VectorFunctions.dot(a, b)),
+      ("cosine_sim", "cosine_sim(a, b)", VectorFunctions.cosineSim(a, b)),
+      ("l2_norm", "l2_norm(a)", VectorFunctions.l2Norm(a)),
+      ("ws_token_count", "ws_token_count(text)", TextFunctions.wsTokenCount(text)),
+      ("bpeish_token_count", "bpeish_token_count(text)", TextFunctions.bpeishTokenCount(text)),
+      ("normalize_text", "normalize_text(text)", TextFunctions.normalizeText(text)),
+      ("url_host", "url_host(url)", TextFunctions.urlHost(url)),
+      ("registrable_domain", "registrable_domain(url)", TextFunctions.registrableDomain(url)),
+      ("normalize_url", "normalize_url(url)", TextFunctions.normalizeUrl(url)),
+      ("html_to_text", "html_to_text(html)", TextFunctions.htmlToText(html)),
+      ("nfc_normalize", "nfc_normalize(text)", NfcNormalizeExpr(text)),
+      ("fix_mojibake", "fix_mojibake(text)", TextFunctions.fixMojibake(text)),
+      ("script_profile", "script_profile(text)", ScriptProfileExpr(text)))
+    assert(cases.map(_._1).toSet == GraftFunctions.all.map(_._1.funcName).toSet)
+    val view = spark.table("sql_parity_v")
+    cases.foreach { case (name, call, column) =>
+      val viaSql = spark.sql(s"SELECT id, $call AS r FROM sql_parity_v")
+      assert(viaSql.queryExecution.executedPlan
+        .exists(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]), name)
+      val viaCol = view.select(col("id"), column.as("r"))
+      val (got, want) = (viaSql.collect().toSeq.sortBy(_.getInt(0)), viaCol.collect().toSeq.sortBy(_.getInt(0)))
+      assert(got.size == rows.size, name)
+      assert(got == want, s"$name: SQL $got vs Column $want")
+      assert(viaSql.schema == viaCol.schema, name)
+    }
+    // the cases exercise the guarded paths, not only nulls
+    val fixed = spark.sql("SELECT fix_mojibake(text) FROM sql_parity_v WHERE id IN (3, 4) ORDER BY id")
+      .collect().map(_.getString(0)).toSeq
+    assert(fixed == Seq("café résumé", "naïve São"))
+    assert(spark.sql("SELECT cosine_sim(a, b) FROM sql_parity_v WHERE id = 2").head().isNullAt(0))
+  }
+
+  test("the native expressions cast what they can and reject what they cannot") {
+    import spark.implicits._
+    // decimal and integer arrays are cast to array<double>
+    assert(spark.sql("SELECT dot_product(array(1.0, 2.0), array(3.0, 4.0))").as[Double].head() == 11.0)
+    assert(spark.sql("SELECT dot_product(array(1, 2), array(3, 4))").as[Double].head() == 11.0)
+    assert(spark.sql("SELECT l2_norm(array(3, 4))").as[Double].head() == 5.0)
+    assert(math.abs(spark.sql("SELECT cosine_sim(array(1, 2), array(2, 4))").as[Double].head() - 1.0) < 1e-12)
+    // an integer is cast to its string
+    val fp = "42".foldLeft(0L)((acc, c) => (acc * 31 + c.toLong) % 1000000007L)
+    assert(spark.sql("SELECT rolling_hash(42)").as[Long].head() == fp)
+    assert(spark.sql("SELECT nfc_normalize(42)").as[String].head() == "42")
+    assert(spark.sql("SELECT word_shingles(42, 1)").as[Seq[String]].head() == Seq("42"))
+    assert(spark.sql("SELECT script_profile(42)").as[Seq[Long]].head()(9) == 2L)
+    // nothing casts a map to a string or a struct to an array
+    Seq("rolling_hash(map(1, 2))", "nfc_normalize(map(1, 2))", "word_shingles(map(1, 2), 2)",
+      "script_profile(map(1, 2))", "dot_product(named_struct('x', 1.0D), array(1.0D))",
+      "cosine_sim(array(1.0D), map(1, 2.0D))").foreach { call =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $call").collect())
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), s"$call: ${e.getMessage}")
+    }
+  }
+
+  test("word_shingles rejects n < 1 at once, from SQL and from a Column") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val df = Seq("a b c").toDF("t")
+    Seq(0, -3, -200000000).foreach { n =>
+      val t0 = System.nanoTime()
+      val viaSql = intercept[Exception](spark.sql(s"SELECT word_shingles('a b c', $n)").collect())
+      assert(Iterator.iterate[Throwable](viaSql)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains("n >= 1")), s"n = $n: $viaSql")
+      val viaCol = intercept[IllegalArgumentException](
+        df.select(graft.functions.TextFunctions.wordShingles(col("t"), n)).collect())
+      assert(viaCol.getMessage.contains("n >= 1"))
+      assert((System.nanoTime() - t0) / 1e9 < 1.0, s"n = $n took ${(System.nanoTime() - t0) / 1e9} s")
+    }
+  }
 }

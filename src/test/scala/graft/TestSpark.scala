@@ -16,16 +16,10 @@ object TestSpark {
     .getOrCreate()
 
   /** Run `body` with the given runtime conf set on the shared session,
-    * restoring each key's previous value (or unsetting it) afterwards. */
-  def withConf[A](settings: (String, String)*)(body: => A): A = {
-    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
-    settings.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+    * restoring each key's previous explicit value (or unsetting it)
+    * afterwards. */
+  def withConf[A](settings: (String, String)*)(body: => A): A =
+    SessionConf.withValues(spark, settings: _*)(body)
 
   /** Run `body` with streaming state on the RocksDB state-store provider
     * (the provider SCALE.md recommends for large keyspaces). */
